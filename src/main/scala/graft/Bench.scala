@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.ArtifactStore.scratch
 
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line.
@@ -14,28 +14,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // testdata events.parquet uses TIMESTAMP(NANOS); see Tables.events
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // keep ObjectHashAggregate HASHING in the many-small-groups
-      // regime (graft_topk's kNN-graph/margin rankings: one k-row
-      // buffer per query): the 128-group default falls back to
-      // SORT-based aggregation, which re-sorts the candidate blow-up
-      // and erases the bounded aggregate's win (isolated probe: ~4 s
-      // hashing vs ~22 s fallback at 40M candidates / 100k groups).
-      // Buffers are k·16 bytes — a million hashed groups is tens of
-      // MB per partition. Mirrored in Verify/RunOne/ScaleSmoke and
-      // the test session; pinned by TopKAggSpec's no-fallback spec.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 20).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     // warmup: touch the scan path + codegen once. The three probes cover
     // the engine's hot expression families — relational agg (q_agg_q1),
@@ -69,15 +48,13 @@ object Bench {
           col("embedding"))))
         .groupBy("pos").agg(sum(col("col")))
         .write.format("noop").mode("overwrite").save()
-      // pre-build every built-once-per-snapshot shared artifact (the
-      // at-rest SA + probe index, graph snapshot, walk corpus, LSH
-      // index, sketch store, PQ codes). They are snapshot-time costs
-      // by the repo's convention; left lazy they fire inside their
-      // first consumer's MEASURED run — the round-10 16-query
-      // regression cluster was exactly this bleed. The queries that
-      // deliberately measure their own builds (q_suffix_array,
-      // q_random_walks, q_pq_codes) don't read these caches.
-      SparkEntry.prebuildSharedArtifacts(spark, sfDir)
+      // pre-build every shared artifact declared with ArtifactStore.
+      // They are snapshot-time costs by the repo's convention; left
+      // lazy they fire inside their first consumer's MEASURED run —
+      // the round-10 16-query regression cluster was exactly this
+      // bleed. The queries that deliberately measure their own builds
+      // (q_suffix_array, q_random_walks, q_pq_codes) don't read them.
+      ExtensionQueries.prebuildSharedArtifacts(spark, sfDir)
       // streaming-engine warmup: the first streaming query otherwise
       // pays one-time machinery init — micro-batch engine classes, the
       // HDFS AND RocksDB state-store providers, transformWithState
@@ -88,21 +65,18 @@ object Bench {
       // to the JVM, not to whichever stream query alphabetically runs
       // first, so it warms on a 512-row slice through the two state
       // backends. Timed-loop methodology is unchanged.
-      val wdir = java.nio.file.Files
-        .createTempDirectory("graft_warm_stream").toString
+      val wdir = scratch(spark, "graft_warm_stream")
       Tables.events(spark, sfDir).limit(512)
         .write.mode("overwrite").parquet(s"$wdir/slice")
       val part = new java.io.File(s"$wdir/slice").listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       java.nio.file.Files.move(part.toPath,
         java.nio.file.Paths.get(s"$wdir/events.parquet"))
-      val ck1 = java.nio.file.Files
-        .createTempDirectory("graft_warm_ck1").toString
+      val ck1 = scratch(spark, "graft_warm_ck1")
       graft.streaming.Streams.sessionizeStreamTws(spark, wdir, ck1,
           gapMinutes = 30)
         .write.format("noop").mode("overwrite").save()
-      val ck2 = java.nio.file.Files
-        .createTempDirectory("graft_warm_ck2").toString
+      val ck2 = scratch(spark, "graft_warm_ck2")
       graft.streaming.Streams.dailyEventAgg(spark, wdir, ck2,
           statePartitions = 8)
         .write.format("noop").mode("overwrite").save()

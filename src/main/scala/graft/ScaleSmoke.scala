@@ -1,7 +1,7 @@
 package graft
 
+import graft.ArtifactStore.scratch
 import graft.Staging._
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.ops.{exprs, windows}
@@ -20,26 +20,7 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val rows = if (args.nonEmpty) args(0).toLong else 50000000L
     val only = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // keep ObjectHashAggregate HASHING in the many-small-groups
-      // regime (the kNN-graph ranking: ~100k query groups per
-      // partition, k-row buffers): the default 128-group threshold
-      // falls back to SORT-based aggregation, which re-sorts the full
-      // candidate blow-up and erases the bounded aggregate's win
-      // (isolated probe: 4 s hashing vs 22 s sort-fallback vs 22 s
-      // row_number window on 40M candidates / 100k groups). Buffers
-      // are k·16 bytes, so a million hashed groups is ~tens of MB per
-      // partition — cheap insurance at this state size.
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 20).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     // opt-in reliable-checkpoint mode (Staging.stage routes on this):
     // lets the smokes measure the durable-staging cost delta a real
     // cluster pays for executor-loss recoverability
@@ -341,8 +322,7 @@ object ScaleSmoke {
       // through foreachBatch; nothing collects on the driver.
       val n = rows / 2
       val keys = math.max(1L, n / 10)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_scale_stream").toString
+      val dir = scratch(spark, "graft_scale_stream")
       spark.range(n).select(
         (col("id") % keys).as("user_id"),
         concat(lit("ev_"), (col("id") % 5).cast("string"))
@@ -351,7 +331,7 @@ object ScaleSmoke {
         .repartition(16)
         .write.mode("overwrite").parquet(s"$dir/in")
       val sess = spark.newSession()
-      sess.conf.set("spark.sql.shuffle.partitions", cpus)
+      sess.conf.set("spark.sql.shuffle.partitions", Session.cpus.toLong)
       sess.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state." +
           "RocksDBStateStoreProvider")
@@ -533,8 +513,7 @@ object ScaleSmoke {
       // size. Planted near-dups: doc 17k shares text with doc 17k+1
       import spark.implicits._
       val nd = rows / 500
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_lsh_smoke").toString
+      val tmp = scratch(spark, "graft_lsh_smoke")
       spark.range(nd).select(col("id").as("doc_id"),
         concat_ws(" ",
           (0 until 12).map(j => concat(lit(s"w${j}x"),
@@ -542,10 +521,8 @@ object ScaleSmoke {
               .cast("string"))): _*).as("text"))
         .coalesce(4).write.mode("overwrite")
         .parquet(s"$tmp/documents.parquet")
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_lsh_smoke_ck").toString
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_lsh_smoke_out").toString + "/dec"
+      val ckpt = scratch(spark, "graft_lsh_smoke_ck")
+      val out = scratch(spark, "graft_lsh_smoke_out") + "/dec"
       val dec = graft.streaming.Streams.lshDedupStream(spark,
         s"$tmp/documents.parquet", ckpt, out,
         numPerms = 8, numBands = 4, threshold = 0.8,
@@ -1529,8 +1506,7 @@ object ScaleSmoke {
     // cross-joins, so retrain cost is ~two corpus passes at any size
     timed("ivf rebuild-and-swap 200k") {
       val n = rows / 250
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_smoke_rebuild").toString
+      val store = scratch(spark, "graft_smoke_rebuild")
       val vecs = spark.range(n).select(col("id").as("vec_id"),
         array((0 until 16).map(j =>
           (pmod(col("id") * (j + 3), lit(997)) / 997d)

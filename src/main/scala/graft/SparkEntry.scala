@@ -1,5 +1,6 @@
 package graft
 
+import graft.ArtifactStore.scratch
 import graft.Staging._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -31,37 +32,6 @@ object SparkEntry {
 
   def oracleSql: Map[String, String] =
     parityOracleSql ++ ExtensionQueries.oracleSql
-
-  /** Bench-warmup hook: force every built-once-per-snapshot shared
-    * artifact (at-rest indexes, graph snapshot, sketch store, the
-    * 3-row exact-percentile cache) so no measured query pays a
-    * snapshot-time build — see
-    * [[ExtensionQueries.prebuildSharedArtifacts]]. */
-  def prebuildSharedArtifacts(s: SparkSession, d: String): Unit = {
-    ExtensionQueries.prebuildSharedArtifacts(s, d)
-    sharedExactPct(s, d)
-  }
-
-  // Exact (p50, p90) of l_extendedprice per l_returnflag, computed ONCE
-  // per (session, sf dir) and shared by q_agg_percentile (its whole
-  // output) and q_approx_percentile (its verdict's exact side) — the
-  // sharedPqCodebook precedent. The collect is 3 rows (one per return
-  // flag — bounded by group cardinality, not data volume).
-  private val exactPctCache =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, Seq[(String, Double, Double)]]()
-
-  private def sharedExactPct(s: SparkSession, d: String): DataFrame = {
-    val rows = exactPctCache.computeIfAbsent(s.hashCode + "|" + d, _ =>
-      graft.ops.quantiles.exactPercentiles(
-        t(s, d, "lineitem"), "l_returnflag", "l_extendedprice",
-        Seq("p50" -> 0.5, "p90" -> 0.9))
-        .collect()
-        .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-        .toSeq)
-    import s.implicits._
-    rows.toDF("l_returnflag", "p50", "p90")
-  }
 
   private def parityQueries
   : Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -361,7 +331,7 @@ object SparkEntry {
           .as("a50"),
         percentile_approx(col("l_extendedprice"), lit(0.9), lit(10000))
           .as("a90"))
-      val exact = sharedExactPct(s, d)
+      val exact = ExtensionQueries.sharedExactPct(s, d)
       approx.join(exact, "l_returnflag")
         .select(col("l_returnflag"),
           round(col("p50"), 4).as("p50"),
@@ -448,7 +418,7 @@ object SparkEntry {
     // sketch-based approx_percentile is the cheap 100 TB path, exercised
     // rows-only like HLL
     "q_agg_percentile" -> ((s, d) =>
-      sharedExactPct(s, d)
+      ExtensionQueries.sharedExactPct(s, d)
         .select(col("l_returnflag"),
           round(col("p50"), 4).as("p50"),
           round(col("p90"), 4).as("p90"))),
@@ -1089,8 +1059,7 @@ object SparkEntry {
     // S9 warehouse path: saveAsTable into the session catalog, read back
     // via spark.table — the BigQuery-external-table analog
     "q_s9_catalog_roundtrip" -> ((s, d) => {
-      val wh = java.nio.file.Files
-        .createTempDirectory("graft_wh_q").toString
+      val wh = scratch(s, "graft_wh_q")
       t(s, d, "nation").write.mode("overwrite")
         .option("path", s"$wh/nation_tbl").saveAsTable("graft_nation_tbl")
       s.table("graft_nation_tbl")

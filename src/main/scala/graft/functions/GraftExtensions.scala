@@ -7,9 +7,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 /** Engine extension point — the (c) rung of the ladder: custom functions
   * (and, later, rules/strategies) registered via `SparkSessionExtensions`.
   *
-  * Wire up with either
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `--conf spark.sql.extensions=graft.functions.GraftExtensions`; after
+  * Wire up with either a session builder's
+  * `withExtensions(new GraftExtensions)` or
+  * `--conf spark.sql.extensions=graft.functions.GraftExtensions` (what
+  * [[graft.Session]] sets); after
   * that `graft_dot(a, b)` resolves in SQL and via
   * `functions.call_function("graft_dot", ...)`.
   */

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ArtifactStore.scratch
 import graft.Staging._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -213,8 +214,7 @@ private[graft] object AnnQueries {
     // float-rounded argmin from scratch.
     "q_ann_rebuild" -> ((s, d) => {
       val emb = t(s, d, "embeddings")
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_ann_rebuild").toString
+      val store = scratch(s, "graft_ann_rebuild")
       Similarity.seedIvfStore(emb, "label", store)
       val (rebuilt, _, _) = Similarity.rebuildIvfStore(
         emb.select(col("vec_id"), col("embedding")), store,

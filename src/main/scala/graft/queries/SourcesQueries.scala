@@ -1,5 +1,6 @@
 package graft
 
+import graft.ArtifactStore.scratch
 import graft.Staging._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -99,8 +100,7 @@ private[graft] object SourcesQueries {
     // content-preserving (file-count/size bounds are asserted in
     // LayoutSpec; the oracle can only see rows)
     "q_s_compaction" -> ((s, d) => {
-      val tmp = java.nio.file.Files
-        .createTempDirectory("graft_compact_q").toString
+      val tmp = scratch(s, "graft_compact_q")
       t(s, d, "orders").repartition(64)
         .write.mode("overwrite").parquet(s"$tmp/frag")
       Layout.compact(s, s"$tmp/frag", s"$tmp/compacted",
@@ -142,8 +142,7 @@ private[graft] object SourcesQueries {
               r.getField("n_nationkey").cast("string"),
               r.getField("n_name"),
               col("page").cast("string")))).as("html"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_html_pages")
+      val dir = java.nio.file.Paths.get(scratch(s, "graft_html_pages"))
       pages.collect().foreach { r =>
         java.nio.file.Files.write(
           dir.resolve(s"region_${r.get(0)}.html"),

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ArtifactStore.scratch
 import graft.Staging._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -45,8 +46,7 @@ private[graft] object StreamingQueries {
 
     // ---- streaming ---------------------------------------------------------
     "q_stream_daily_agg" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt").toString
+      val ckpt = scratch(s, "graft_ckpt")
       Streams.dailyEventAgg(s, d, ckpt, statePartitions = 8)
         .select(to_date(col("day")).as("day"), col("event_type"),
           col("cnt"), col("sum_value"))
@@ -57,8 +57,7 @@ private[graft] object StreamingQueries {
     // a read-time view (ranking/probability isn't incremental-safe,
     // counts are)
     "q_stream_markov" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_mkv").toString
+      val ckpt = scratch(s, "graft_ckpt_mkv")
       Streams.markovStream(s, d, ckpt)
         .orderBy("from_type", "to_type")
     }),
@@ -68,8 +67,7 @@ private[graft] object StreamingQueries {
     // key list — same output and oracle as q_cms_topk, because the
     // micro-batched sketch merges to the batch one by construction
     "q_stream_cms" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_cms").toString
+      val ckpt = scratch(s, "graft_ckpt_cms")
       val sketch = Streams.cmsStream(s, d, ckpt, "user_id",
         depth = 4, width = 256)
       val ev = Tables.events(s, d)
@@ -87,8 +85,7 @@ private[graft] object StreamingQueries {
     // property — the oracle is the batch bucket math over the same
     // events
     "q_stream_quantile" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_qsk").toString
+      val ckpt = scratch(s, "graft_ckpt_qsk")
       val sk = Streams.quantileSketchStream(s, d, ckpt,
           (col("value").cast("decimal(18,2)") * 100).cast("long"), 5)
         .withColumn("bkt_hi", col("bkt_lo") +
@@ -105,8 +102,7 @@ private[graft] object StreamingQueries {
     // inside the windowed agg — same daily integer-cent bars as the
     // batch operator (BIGINT-only cells, harness-canonicalizable)
     "q_stream_ohlc" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_ohlc").toString
+      val ckpt = scratch(s, "graft_ckpt_ohlc")
       Streams.ohlcStream(s, d, ckpt, barSeconds = 86400L,
           statePartitions = 8,
           valueExpr = (col("value").cast("decimal(18,2)") * 100)
@@ -121,10 +117,8 @@ private[graft] object StreamingQueries {
     // the live watermark evicts closed bars from state; the final
     // table equals complete mode because each bar's last update wins
     "q_stream_ohlc_update" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_ohlc_u").toString
-      val tbl = java.nio.file.Files
-        .createTempDirectory("graft_ohlc_tbl").toString
+      val ckpt = scratch(s, "graft_ckpt_ohlc_u")
+      val tbl = scratch(s, "graft_ohlc_tbl")
       Streams.ohlcStreamUpdate(s, d, ckpt, tbl, barSeconds = 86400L,
           statePartitions = 8,
           valueExpr = (col("value").cast("decimal(18,2)") * 100)
@@ -141,10 +135,8 @@ private[graft] object StreamingQueries {
     // nanos-as-long in the old testdata generation and TIMESTAMP_NTZ in
     // the current one — branch on what the table actually carries)
     "q_stream_upsert" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_up").toString
-      val tbl = java.nio.file.Files
-        .createTempDirectory("graft_cdc_tbl").toString
+      val ckpt = scratch(s, "graft_ckpt_up")
+      val tbl = scratch(s, "graft_cdc_tbl")
       val res = Streams.upsertStreamToTable(s, d, ckpt, tbl,
         keys = Seq("user_id"), versionCol = "ts")
       val tsUs = res.schema("ts").dataType match {
@@ -156,8 +148,7 @@ private[graft] object StreamingQueries {
     }),
 
     "q_stream_dedup" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_dd").toString
+      val ckpt = scratch(s, "graft_ckpt_dd")
       Streams.dedupStream(s, d, ckpt, statePartitions = 8)
     }),
 
@@ -166,10 +157,8 @@ private[graft] object StreamingQueries {
     // decision per doc — decisions are batch-slicing-invariant, so the
     // oracle is the batch incremental pass folded to per-doc counts
     "q_stream_dedup_lsh" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_lsh").toString
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_lsh_dec").toString + "/decisions"
+      val ckpt = scratch(s, "graft_ckpt_lsh")
+      val out = scratch(s, "graft_lsh_dec") + "/decisions"
       Streams.lshDedupStream(s, d, ckpt, out,
         numPerms = 8, numBands = 4, threshold = 0.8)
     }),
@@ -180,10 +169,8 @@ private[graft] object StreamingQueries {
     // incrementalComponents — the final snapshot must equal the
     // from-scratch full-corpus CC for ANY batch slicing
     "q_stream_cc_maintain" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_ccm").toString
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_cc_store").toString
+      val ckpt = scratch(s, "graft_ckpt_ccm")
+      val store = scratch(s, "graft_cc_store")
       Streams.ccMaintainStream(s, d, ckpt, store,
         numPerms = 8, numBands = 4, threshold = 0.8,
         seedFrom = Some(ccStreamSeedDir(s, d)))
@@ -196,10 +183,8 @@ private[graft] object StreamingQueries {
     // the from-scratch gram-count dup report over corpus ∪ arrivals
     // (the full table); batch-slicing invariance is spec-pinned.
     "q_stream_sa_dup" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_sam").toString
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_sa_store").toString
+      val ckpt = scratch(s, "graft_ckpt_sam")
+      val store = scratch(s, "graft_sa_store")
       Streams.saMaintainStream(s, d, ckpt, store, minLen = 5,
           seedFrom = Some(saStreamSeedDir(s, d)))
         .orderBy("doc_id")
@@ -214,10 +199,8 @@ private[graft] object StreamingQueries {
     // assignment is slicing-invariant, so the merged view equals the
     // one-shot batch assignment the oracle recomputes.
     "q_stream_ann_assign" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_annm").toString
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_ann_store").toString
+      val ckpt = scratch(s, "graft_ckpt_annm")
+      val store = scratch(s, "graft_ann_store")
       Streams.annMaintainStream(s, d, ckpt, store,
           seedFrom = Some(annStreamSeedDir(s, d)))
         .orderBy("vec_id")
@@ -233,10 +216,8 @@ private[graft] object StreamingQueries {
     // each from scratch (full-corpus CC, full-table dup report,
     // frozen-quantizer assignment) and joins them.
     "q_stream_ingest_trio" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_trio").toString
-      val store = java.nio.file.Files
-        .createTempDirectory("graft_trio_store").toString
+      val ckpt = scratch(s, "graft_ckpt_trio")
+      val store = scratch(s, "graft_trio_store")
       Streams.ingestTrioStream(s, d, ckpt, store,
           numPerms = 8, numBands = 4, threshold = 0.8, minLen = 5,
           ccSeedFrom = Some(ccStreamSeedDir(s, d)),
@@ -250,8 +231,7 @@ private[graft] object StreamingQueries {
     // not incremental-safe, so the cut is a batch view over the
     // aggregate (the production split)
     "q_stream_topk" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_topk").toString
+      val ckpt = scratch(s, "graft_ckpt_topk")
       Streams.topKStream(s, d, ckpt, k = 5, statePartitions = 8)
         .select(to_date(col("day")).as("day"), col("event_type"),
           col("user_id"), col("cnt"))
@@ -262,12 +242,9 @@ private[graft] object StreamingQueries {
     // row-level gates are batch-slicing-invariant, so the end state
     // matches the plain batch filter the oracle runs
     "q_stream_validate" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_rv").toString
-      val good = java.nio.file.Files
-        .createTempDirectory("graft_rv_good").toString
-      val bad = java.nio.file.Files
-        .createTempDirectory("graft_rv_bad").toString
+      val ckpt = scratch(s, "graft_ckpt_rv")
+      val good = scratch(s, "graft_rv_good")
+      val bad = scratch(s, "graft_rv_bad")
       Streams.routeValidated(s, d, ckpt, good, bad,
         col("event_type").isInCollection(
           Seq("click", "view", "purchase", "signup")) &&
@@ -276,8 +253,7 @@ private[graft] object StreamingQueries {
     }),
 
     "q_stream_enrich" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_en").toString
+      val ckpt = scratch(s, "graft_ckpt_en")
       Streams.enrichStream(s, d, ckpt)
     }),
 
@@ -286,8 +262,7 @@ private[graft] object StreamingQueries {
     // (weekly tier intervals, deterministic); equi-join + range filter —
     // stateless, dimension broadcast per micro-batch
     "q_stream_scd2" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_scd2en").toString
+      val ckpt = scratch(s, "graft_ckpt_scd2en")
       val dim = s.range(150L * 5).select(
         (col("id") % 150).as("user_id"),
         (col("id") / 150).cast("int").as("k"))
@@ -311,16 +286,14 @@ private[graft] object StreamingQueries {
     // RocksDB, the post-fMGWS arbitrary-state API) — same oracle as the
     // batch q_sessionize, so the driver sees the new API path green
     "q_stream_sessionize_tws" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_tws").toString
+      val ckpt = scratch(s, "graft_ckpt_tws")
       Streams.sessionizeStreamTws(s, d, ckpt, gapMinutes = 30)
         .select("user_id", "session_start", "n_events", "sum_value")
     }),
 
     // stream-stream interval join: click→purchase attribution within 6h
     "q_stream_join" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_sj").toString
+      val ckpt = scratch(s, "graft_ckpt_sj")
       Streams.intervalJoinStreams(s, d, ckpt, "click", "purchase", 6,
         statePartitions = 8)
     }),
@@ -329,8 +302,7 @@ private[graft] object StreamingQueries {
     // or null-padded — outer state flushed by a far-future punctuation
     // sentinel (see Streams.intervalJoinStreamsOuter)
     "q_stream_join_outer" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_sjo").toString
+      val ckpt = scratch(s, "graft_ckpt_sjo")
       Streams.intervalJoinStreamsOuter(s, d, ckpt, "click", "purchase", 6,
         statePartitions = 4)
     }),
@@ -338,8 +310,7 @@ private[graft] object StreamingQueries {
     // FULL OUTER stream-stream interval join: unmatched purchases also
     // emit, null-padded on the click side
     "q_stream_join_full" -> ((s, d) => {
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft_ckpt_sjf").toString
+      val ckpt = scratch(s, "graft_ckpt_sjf")
       Streams.intervalJoinStreamsOuter(s, d, ckpt, "click", "purchase", 6,
         statePartitions = 4, joinType = "fullOuter")
     }),

@@ -1,7 +1,7 @@
 package graft.sources
 
+import graft.ArtifactStore.scratch
 import graft.Staging._
-import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -19,7 +19,7 @@ object StagedSources {
   /** S5 CSV sink → S4 CSV scan round trip, schema pinned (no inference
     * drift). Stands in for the reference's to_csv/read_csv inter-task IR. */
   def csvRoundTrip(spark: SparkSession, df: DataFrame): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_csv").toString
+    val tmp = scratch(spark, "graft_csv")
     df.write.mode("overwrite").option("header", "true").csv(tmp)
     spark.read.option("header", "true").schema(df.schema).csv(tmp)
   }
@@ -29,7 +29,7 @@ object StagedSources {
     * per (entity, season). */
   def partitionedRoundTrip(spark: SparkSession, df: DataFrame,
                            partCol: String): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_lake").toString
+    val tmp = scratch(spark, "graft_lake")
     df.write.mode("overwrite").partitionBy(partCol).parquet(tmp)
     spark.read.parquet(tmp)
   }
@@ -38,7 +38,7 @@ object StagedSources {
     * (some warehouses are ORC-native). Same staged shape as the parquet
     * path — schema travels in the file, no inference at read. */
   def orcRoundTrip(spark: SparkSession, df: DataFrame): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_orc").toString
+    val tmp = scratch(spark, "graft_orc")
     df.write.mode("overwrite").orc(tmp)
     spark.read.orc(tmp)
   }
@@ -47,7 +47,7 @@ object StagedSources {
     * interchange format for event feeds. Schema is declared at the edge
     * (inference over 100 TB of JSON is a full extra pass). */
   def jsonRoundTrip(spark: SparkSession, df: DataFrame): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_jsonl").toString
+    val tmp = scratch(spark, "graft_jsonl")
     df.write.mode("overwrite").json(tmp)
     spark.read.schema(df.schema).json(tmp)
   }
@@ -58,7 +58,7 @@ object StagedSources {
     * CSV/JSON edges — XML inference is a full extra pass AND
     * alphabetizes columns, both wrong at 100 TB. */
   def xmlRoundTrip(spark: SparkSession, df: DataFrame): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_xml").toString
+    val tmp = scratch(spark, "graft_xml")
     df.write.mode("overwrite").option("rowTag", "row").xml(tmp)
     spark.read.option("rowTag", "row")
       // the reader TRIMS element text by default — a silent data change
@@ -82,7 +82,7 @@ object StagedSources {
   : DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types.{StringType, StructType}
-    val tmp = Files.createTempDirectory("graft_quarantine").toString
+    val tmp = scratch(spark, "graft_quarantine")
     df.select(when(corrupt, concat(lit("{bad "), to_json(struct(col("*")))))
         .otherwise(to_json(struct(col("*")))).as("value"))
       .write.mode("overwrite").text(tmp)
@@ -107,7 +107,7 @@ object StagedSources {
     * the merge is a footer-level union of schemas, not a data pass. */
   def evolvedRead(spark: SparkSession, oldBatch: DataFrame,
                   newBatch: DataFrame): DataFrame = {
-    val tmp = Files.createTempDirectory("graft_evolve").toString
+    val tmp = scratch(spark, "graft_evolve")
     oldBatch.write.mode("overwrite").parquet(s"$tmp/b=0")
     newBatch.write.mode("overwrite").parquet(s"$tmp/b=1")
     spark.read.option("mergeSchema", "true").parquet(tmp)
@@ -123,7 +123,7 @@ object StagedSources {
     * instead of pruning. */
   def bucketedTable(spark: SparkSession, df: DataFrame, name: String,
                     key: String, numBuckets: Int): DataFrame = {
-    val wh = Files.createTempDirectory(s"graft_bkt_$name").toString
+    val wh = scratch(spark, s"graft_bkt_$name")
     // pre-partition ON the bucket hash: Spark's bucket id and
     // hashpartitioning use the same Murmur3, so task i holds exactly
     // bucket i — the write parallelizes across buckets with one file

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.ArtifactStore.scratch
 import graft.Staging._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -623,7 +624,7 @@ object Streams {
       s"windowHours=$windowHours must stay under the 30-day l/r " +
         "sentinel offset or the punctuation rows could join each other")
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val staged = Files.createTempDirectory("graft_sj_outer")
+    val staged = Paths.get(scratch(spark, "graft_sj_outer"))
     val evDst = staged.resolve("0_events.parquet")
     Files.copy(Paths.get(dir, "events.parquet"), evDst,
       StandardCopyOption.REPLACE_EXISTING)
@@ -643,7 +644,7 @@ object Streams {
     val now = System.currentTimeMillis()
     evDst.toFile.setLastModified(now - 600000)
     Seq(1 -> 3650L, 2 -> 7300L).foreach { case (i, days) =>
-      val sentinelStage = Files.createTempDirectory(s"graft_sj_sent$i")
+      val sentinelStage = scratch(spark, s"graft_sj_sent$i")
       val template = raw.orderBy(col("ts").desc).limit(1)
       // one row per side in the SAME file, so a single sentinel batch
       // advances both watermark operators (min policy); the 30-day l/r
@@ -653,8 +654,8 @@ object Streams {
         .unionAll(template.withColumn("ts", farTs(days + 30))
           .withColumn("event_type", lit("__sentinel_r")))
         .coalesce(1).write.mode("overwrite")
-        .parquet(sentinelStage.toString)
-      val part = new java.io.File(sentinelStage.toString).listFiles()
+        .parquet(sentinelStage)
+      val part = new java.io.File(sentinelStage).listFiles()
         .filter(_.getName.endsWith(".parquet")).head
       val sentDst = staged.resolve(s"${i}_sentinel.parquet")
       Files.move(part.toPath, sentDst)

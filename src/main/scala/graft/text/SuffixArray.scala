@@ -107,8 +107,11 @@ object SuffixArray {
       // ONE per-doc lead() window over the already-doc-partitioned
       // staged frame (no exchange, one in-partition sort) where the
       // shift self-join paid two sorts + a merge join per round.
-      // (lead() needs an Int offset; doc lengths past 2³¹ would need
-      // the join form back — no corpus has 2-billion-token documents.)
+      // lead() needs an Int offset: past 2³¹ the offset would wrap
+      // negative and silently turn lead into lag, so fail loudly (a
+      // 2-billion-token document would need the join form back)
+      require(covered <= Int.MaxValue,
+        s"rankKeys: offset $covered exceeds lead()'s Int range")
       val wDoc = org.apache.spark.sql.expressions.Window
         .partitionBy(col("doc_id")).orderBy(col("pos"))
       val paired = cur.select(col("doc_id"), col("pos"), col("r"),

@@ -4,8 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — mirrors the Verify/Bench config
-  * (UTC, small shuffle partitions, nanos-as-long for the events table). */
+/** Shared local session for specs: the engine's [[Session]] at 4 cores. */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
@@ -13,19 +12,5 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    .config("spark.ui.enabled", "false")
-    // the graded entry points (Bench/Verify/RunOne) raise the
-    // ObjectHashAggregate sort-fallback threshold so graft_topk's
-    // bounded rankings stay hashing past 128 groups; the test session
-    // mirrors it (TopKAggSpec pins no-fallback under this config)
-    .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-      (1 << 20).toString)
-    .getOrCreate()
+  lazy val session: SparkSession = Session(4)
 }

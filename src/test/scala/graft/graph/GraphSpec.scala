@@ -736,4 +736,19 @@ class GraphSpec extends SparkSpec {
     }.toMap
     assert(got === want)
   }
+
+  test("landmarkDistances releases its persisted edge list on every exit") {
+    val e0 = Seq((1L, 2L), (2L, 3L), (3L, 4L))
+    val edges = (e0 ++ e0.map(_.swap)).toDF("s", "d")
+    val cache = spark.sharedState.cacheManager
+    // empty seeds, fixpoint (nothing new after 3 hops), hop cap
+    Seq(Seq.empty[Long] -> 5, Seq(1L) -> 5, Seq(1L) -> 1).foreach {
+      case (lms, cap) =>
+        spark.catalog.clearCache()
+        val got = Graph.landmarkDistances(edges, "s", "d",
+          lms.toDF("node"), maxHops = cap)
+        assert(cache.isEmpty, s"edge list still cached (seeds $lms, cap $cap)")
+        assert(got.count() === (if (lms.isEmpty) 0 else 1 + cap.min(3)))
+    }
+  }
 }

@@ -1,34 +1,18 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (test scope): isolate the 32-core streaming cold-start
   * question from the r12 verdict — run ONE query in a fresh session,
-  * cold + warm, with the objectHashAggregate sort-fallback threshold
-  * set from an env toggle so the A/B needs no source edit.
+  * cold + warm.
   *
-  *   SPARK_GRAFT_FALLBACK={default|1m} SPARK_GRAFT_CPUS=32 \
+  *   SPARK_GRAFT_CPUS=32 \
   *     sbt "Test/runMain graft.StreamColdProbe q_stream_topk [sfDir]"
   */
 object StreamColdProbe {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val fallback = sys.env.getOrElse("SPARK_GRAFT_FALLBACK", "1m")
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    val spark = (if (fallback == "1m")
-      b.config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 20).toString)
-    else b).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(s"[probe] $name cpus=$cpus fallback=$fallback")
+    val spark = Session()
+    println(s"[probe] $name cpus=${Session.cpus}")
     val fn = SparkEntry.queries(name)
     (1 to 3).foreach { i =>
       val t0 = System.nanoTime()

@@ -1,24 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Throwaway profiler: phase-level timing of ingestTrioStream's parts. */
 object TrioProbe {
   def main(args: Array[String]): Unit = {
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
-        (1 << 20).toString)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     import graft.dedup.Dedup
     import graft.similarity.Similarity
     import graft.text.SuffixArray
@@ -33,8 +21,7 @@ object TrioProbe {
 
     (1 to 2).foreach { round =>
       println(s"[trioprobe] === round $round ===")
-      val storePath = java.nio.file.Files
-        .createTempDirectory("graft_trio_probe").toString
+      val storePath = ArtifactStore.scratch(spark, "graft_trio_probe")
       val docs = spark.read.option("pathGlobFilter", "documents.parquet")
         .parquet(d)
       val corpus = docs.filter(col("doc_id") % 17 =!= 0)
