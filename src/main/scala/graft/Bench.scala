@@ -77,8 +77,7 @@ object Bench {
           gapMinutes = 30)
         .write.format("noop").mode("overwrite").save()
       val ck2 = scratch(spark, "graft_warm_ck2")
-      graft.streaming.Streams.dailyEventAgg(spark, wdir, ck2,
-          statePartitions = 8)
+      graft.streaming.Streams.dailyEventAgg(spark, wdir, ck2)
         .write.format("noop").mode("overwrite").save()
     } catch { case e: Throwable =>
       System.err.println(s"[bench] warmup failed (continuing cold): " +

@@ -330,13 +330,8 @@ object ScaleSmoke {
         expr("timestamp_micros(1600000000000000 + id * 1000)").as("ts"))
         .repartition(16)
         .write.mode("overwrite").parquet(s"$dir/in")
-      val sess = spark.newSession()
-      sess.conf.set("spark.sql.shuffle.partitions", Session.cpus.toLong)
-      sess.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state." +
-          "RocksDBStateStoreProvider")
-      sess.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-        "changelogCheckpointing.enabled", "true")
+      val sess = graft.streaming.Streams.statefulSession(spark,
+        s"$dir/in", "*.parquet", rocksDb = true)
       val schema = sess.read.parquet(s"$dir/in").schema
       val total = new java.util.concurrent.atomic.AtomicLong(0L)
       val q = sess.readStream.schema(schema)

@@ -47,7 +47,7 @@ private[graft] object StreamingQueries {
     // ---- streaming ---------------------------------------------------------
     "q_stream_daily_agg" -> ((s, d) => {
       val ckpt = scratch(s, "graft_ckpt")
-      Streams.dailyEventAgg(s, d, ckpt, statePartitions = 8)
+      Streams.dailyEventAgg(s, d, ckpt)
         .select(to_date(col("day")).as("day"), col("event_type"),
           col("cnt"), col("sum_value"))
     }),
@@ -104,7 +104,6 @@ private[graft] object StreamingQueries {
     "q_stream_ohlc" -> ((s, d) => {
       val ckpt = scratch(s, "graft_ckpt_ohlc")
       Streams.ohlcStream(s, d, ckpt, barSeconds = 86400L,
-          statePartitions = 8,
           valueExpr = (col("value").cast("decimal(18,2)") * 100)
             .cast("long"))
         .select(col("event_type"), col("bar_start"),
@@ -120,7 +119,6 @@ private[graft] object StreamingQueries {
       val ckpt = scratch(s, "graft_ckpt_ohlc_u")
       val tbl = scratch(s, "graft_ohlc_tbl")
       Streams.ohlcStreamUpdate(s, d, ckpt, tbl, barSeconds = 86400L,
-          statePartitions = 8,
           valueExpr = (col("value").cast("decimal(18,2)") * 100)
             .cast("long"))
         .select(col("event_type"), col("bar_start"),
@@ -149,7 +147,7 @@ private[graft] object StreamingQueries {
 
     "q_stream_dedup" -> ((s, d) => {
       val ckpt = scratch(s, "graft_ckpt_dd")
-      Streams.dedupStream(s, d, ckpt, statePartitions = 8)
+      Streams.dedupStream(s, d, ckpt)
     }),
 
     // streaming LSH near-dup dedup: arriving docs (every 17th) probe
@@ -232,7 +230,7 @@ private[graft] object StreamingQueries {
     // aggregate (the production split)
     "q_stream_topk" -> ((s, d) => {
       val ckpt = scratch(s, "graft_ckpt_topk")
-      Streams.topKStream(s, d, ckpt, k = 5, statePartitions = 8)
+      Streams.topKStream(s, d, ckpt, k = 5)
         .select(to_date(col("day")).as("day"), col("event_type"),
           col("user_id"), col("cnt"))
     }),
@@ -294,8 +292,7 @@ private[graft] object StreamingQueries {
     // stream-stream interval join: click→purchase attribution within 6h
     "q_stream_join" -> ((s, d) => {
       val ckpt = scratch(s, "graft_ckpt_sj")
-      Streams.intervalJoinStreams(s, d, ckpt, "click", "purchase", 6,
-        statePartitions = 8)
+      Streams.intervalJoinStreams(s, d, ckpt, "click", "purchase", 6)
     }),
 
     // LEFT OUTER stream-stream interval join: every click emits, matched
@@ -303,8 +300,7 @@ private[graft] object StreamingQueries {
     // sentinel (see Streams.intervalJoinStreamsOuter)
     "q_stream_join_outer" -> ((s, d) => {
       val ckpt = scratch(s, "graft_ckpt_sjo")
-      Streams.intervalJoinStreamsOuter(s, d, ckpt, "click", "purchase", 6,
-        statePartitions = 4)
+      Streams.intervalJoinStreamsOuter(s, d, ckpt, "click", "purchase", 6)
     }),
 
     // FULL OUTER stream-stream interval join: unmatched purchases also
@@ -312,7 +308,7 @@ private[graft] object StreamingQueries {
     "q_stream_join_full" -> ((s, d) => {
       val ckpt = scratch(s, "graft_ckpt_sjf")
       Streams.intervalJoinStreamsOuter(s, d, ckpt, "click", "purchase", 6,
-        statePartitions = 4, joinType = "fullOuter")
+        joinType = "fullOuter")
     }),
   )
 

@@ -3,6 +3,7 @@ package graft.streaming
 import graft.ArtifactStore.scratch
 import graft.Staging._
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
@@ -39,35 +40,59 @@ object Streams {
       case _ => df
     }
 
-  /** Stateful queries keep one state store PER shuffle partition per
-    * stateful operator (a stream-stream join keeps four), and every
-    * store checkpoints delta files each micro-batch — so the per-batch
-    * floor scales with the partition count, not the data. Size state
-    * partitioning to the stream's volume instead of inheriting the
-    * batch shuffle default; it is baked into the checkpoint on first
-    * run, so it is a per-pipeline knob. 0 = inherit the session. */
-  private def statefulSession(spark: SparkSession,
-                              statePartitions: Int,
-                              rocksDb: Boolean = false): SparkSession =
-    if (statePartitions > 0 || rocksDb) {
-      val ns = spark.newSession()
-      if (statePartitions > 0)
-        ns.conf.set("spark.sql.shuffle.partitions",
-          statePartitions.toString)
-      // RocksDB state store: state lives off-heap/on-disk per partition
-      // instead of in executor JVM maps — the provider for stateful
-      // queries whose live state (e.g. a day of dedup keys at
-      // 100 TB/day) dwarfs executor heap. Changelog checkpointing keeps
-      // per-batch uploads incremental.
-      if (rocksDb) {
-        ns.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-        ns.conf.set("spark.sql.streaming.stateStore.rocksdb." +
-          "changelogCheckpointing.enabled", "true")
-      }
-      ns
-    } else spark
+  /** The session a stateful stream over the `glob` files of `dir` runs
+    * in. Each stateful operator keeps one state store per shuffle
+    * partition (a stream-stream join keeps four), and every store
+    * commits each micro-batch, so at small state the per-batch cost
+    * follows the partition count, not the data. The count is therefore
+    * the smaller of `spark`'s `spark.sql.shuffle.partitions` and the
+    * split count of a batch scan over the same files, under Spark's own
+    * split sizing: a one-file table gets one state partition, a
+    * lake-scale input (at least one split per core) the full count, and
+    * no stateful stage is wider than its input. A restart keeps its
+    * checkpoint's count: Spark restores `spark.sql.shuffle.partitions`
+    * from the offset log, so the rule only sizes a fresh checkpoint.
+    *
+    * `rocksDb` swaps in the RocksDB state store: state lives
+    * off-heap/on-disk per partition instead of in executor JVM maps,
+    * for stateful queries whose live state (e.g. a day of dedup keys at
+    * 100 TB/day) dwarfs executor heap. Changelog checkpointing keeps
+    * per-batch uploads incremental. */
+  private[graft] def statefulSession(spark: SparkSession, dir: String,
+                                     glob: String,
+                                     rocksDb: Boolean = false)
+  : SparkSession = {
+    // splits do not depend on the columns; an empty read schema skips
+    // the schema-inference job
+    val splits = spark.read
+      .schema(new org.apache.spark.sql.types.StructType())
+      .option("pathGlobFilter", glob).parquet(dir)
+      .queryExecution.sparkPlan.collectFirst {
+        case s: FileSourceScanExec => s.inputRDD.getNumPartitions
+      }.get
+    val ns = spark.newSession()
+    ns.conf.set("spark.sql.shuffle.partitions", math.min(splits,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt).toLong)
+    if (rocksDb) {
+      ns.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")
+      ns.conf.set("spark.sql.streaming.stateStore.rocksdb." +
+        "changelogCheckpointing.enabled", "true")
+    }
+    ns
+  }
+
+  /** The `glob` files of `dir` as a file stream, one file per
+    * micro-batch (the file-stream source wants a directory; the glob
+    * selects the table out of it). */
+  private def fileStream(sess: SparkSession, dir: String,
+                         glob: String): DataFrame =
+    sess.readStream
+      .schema(sess.read.option("pathGlobFilter", glob).parquet(dir).schema)
+      .option("maxFilesPerTrigger", "1")
+      .option("pathGlobFilter", glob)
+      .parquet(dir)
 
   /** Daily tumbling-window aggregate over the `events` stream: count +
     * exact value sum per (day, event_type), watermarked 1 day.
@@ -76,21 +101,9 @@ object Streams {
     * single events table; specs pass a multi-file temp dir to prove the
     * result is independent of micro-batch slicing). */
   def dailyEventAgg(spark: SparkSession, dir: String, checkpoint: String,
-                    glob: String = "events.parquet",
-                    statePartitions: Int = 0): DataFrame = {
-    val sess = statefulSession(spark, statePartitions)
-    // ts arrives as nanosecond longs (see Tables.events); convert exactly.
-    val schema = sess.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema
-    val stream = sess.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      // the file-stream source wants a directory; select just the events
-      // table out of the scale-factor dir
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
-
-    val agg = normalizeTs(stream)
+                    glob: String = "events.parquet"): DataFrame = {
+    val sess = statefulSession(spark, dir, glob)
+    val agg = normalizeTs(fileStream(sess, dir, glob))
       .withWatermark("ts", "1 day")
       .groupBy(window(col("ts"), "1 day").as("win"), col("event_type"))
       .agg(count(lit(1)).as("cnt"),
@@ -157,17 +170,9 @@ object Streams {
   def ohlcStream(spark: SparkSession, dir: String, checkpoint: String,
                  barSeconds: Long = 86400L,
                  glob: String = "events.parquet",
-                 statePartitions: Int = 0,
                  valueExpr: Column = col("value")): DataFrame = {
-    val sess = statefulSession(spark, statePartitions)
-    val schema = sess.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema
-    val stream = sess.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
-    val agg = ohlcAgg(stream, barSeconds, valueExpr)
+    val sess = statefulSession(spark, dir, glob)
+    val agg = ohlcAgg(fileStream(sess, dir, glob), barSeconds, valueExpr)
     val sinkName = "graft_ohlc_" + math.abs(checkpoint.hashCode)
     val q = agg.writeStream
       .format("memory")
@@ -198,28 +203,19 @@ object Streams {
                        checkpoint: String, tablePath: String,
                        barSeconds: Long = 86400L,
                        glob: String = "events.parquet",
-                       statePartitions: Int = 0,
                        valueExpr: Column = col("value")): DataFrame =
     ohlcStreamUpdateStats(spark, dir, checkpoint, tablePath, barSeconds,
-      glob, statePartitions, valueExpr)._1
+      glob, valueExpr)._1
 
   /** [[ohlcStreamUpdate]] plus the final state-store row count. */
   def ohlcStreamUpdateStats(spark: SparkSession, dir: String,
                             checkpoint: String, tablePath: String,
                             barSeconds: Long = 86400L,
                             glob: String = "events.parquet",
-                            statePartitions: Int = 0,
                             valueExpr: Column = col("value"))
   : (DataFrame, Long) = {
-    val sess = statefulSession(spark, statePartitions)
-    val schema = sess.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema
-    val stream = sess.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
-    val agg = ohlcAgg(stream, barSeconds, valueExpr)
+    val sess = statefulSession(spark, dir, glob)
+    val agg = ohlcAgg(fileStream(sess, dir, glob), barSeconds, valueExpr)
     val tableSchema = agg.schema
       .add("__bid", org.apache.spark.sql.types.LongType)
     val q = agg.writeStream
@@ -266,15 +262,9 @@ object Streams {
     * first is batch-slicing-dependent, the key set is not. */
   def dedupStream(spark: SparkSession, dir: String,
                   checkpoint: String,
-                  statePartitions: Int = 0,
                   rocksDb: Boolean = false): DataFrame = {
-    val sess = statefulSession(spark, statePartitions, rocksDb)
-    val schema = sess.read.parquet(s"$dir/events.parquet").schema
-    val deduped = normalizeTs(sess.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
+    val sess = statefulSession(spark, dir, "events.parquet", rocksDb)
+    val deduped = normalizeTs(fileStream(sess, dir, "events.parquet"))
       .select(col("user_id"), col("event_type"), col("ts"))
       .withWatermark("ts", "1 day")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
@@ -304,8 +294,8 @@ object Streams {
     * aggregate's result table. That is the production split: the
     * stream maintains the counts, the dashboard ranks on read. State
     * is the exact per-key count map — sharded by the state-partition
-    * hash across executors, RocksDB-backed when it outgrows heap (the
-    * [[dedupStream]] knobs); an approximate space-bounded variant is
+    * hash across executors, RocksDB-backed (`rocksDb`) when it
+    * outgrows heap; an approximate space-bounded variant is
     * the batch `HeavyHitters` sketch, this is its exact streaming
     * sibling.
     *
@@ -315,16 +305,10 @@ object Streams {
     * @return (day, event_type, user_id, cnt) — top k per (day, type)
     */
   def topKStream(spark: SparkSession, dir: String, checkpoint: String,
-                 k: Int, statePartitions: Int = 0,
-                 rocksDb: Boolean = false): DataFrame = {
+                 k: Int, rocksDb: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1: $k")
-    val sess = statefulSession(spark, statePartitions, rocksDb)
-    val schema = sess.read.parquet(s"$dir/events.parquet").schema
-    val counts = normalizeTs(sess.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
+    val sess = statefulSession(spark, dir, "events.parquet", rocksDb)
+    val counts = normalizeTs(fileStream(sess, dir, "events.parquet"))
       .groupBy(window(col("ts"), "1 day").as("win"), col("event_type"),
         col("user_id"))
       .agg(count(lit(1)).as("cnt"))
@@ -366,13 +350,8 @@ object Streams {
   def cmsStream(spark: SparkSession, dir: String, checkpoint: String,
                 keyCol: String, depth: Int, width: Int,
                 glob: String = "events.parquet"): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(dir).schema
-    val cells = normalizeTs(spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", glob)
-        .parquet(dir))
+    val sess = statefulSession(spark, dir, glob)
+    val cells = normalizeTs(fileStream(sess, dir, glob))
       .select(explode(graft.ops.sketches.cellsOf(col(keyCol), depth,
         width)).as("cell"))
       .groupBy(col("cell.seed").as("seed"),
@@ -388,7 +367,7 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.table(sinkName)
+    sess.table(sinkName)
   }
 
   /** Streaming mergeable quantile sketch: the HDR bucket counts of
@@ -403,14 +382,9 @@ object Streams {
                            checkpoint: String, valueExpr: Column,
                            s: Int, glob: String = "events.parquet")
   : DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(dir).schema
+    val sess = statefulSession(spark, dir, glob)
     val lo = graft.ops.qsketch.bucketLo(valueExpr, s)
-    val buckets = normalizeTs(spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", glob)
-        .parquet(dir))
+    val buckets = normalizeTs(fileStream(sess, dir, glob))
       .select(lo.as("bkt_lo"))
       .groupBy("bkt_lo")
       .agg(count(lit(1)).as("cnt"))
@@ -424,7 +398,7 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.table(sinkName)
+    sess.table(sinkName)
   }
 
   /** Stream-static TEMPORAL enrichment: each event picks up the
@@ -448,13 +422,7 @@ object Streams {
                            keyCol: String, fromCol: String,
                            toCol: String,
                            glob: String = "events.parquet"): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(dir).schema
-    val enriched = normalizeTs(spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", glob)
-        .parquet(dir))
+    val enriched = normalizeTs(fileStream(spark, dir, glob))
       .join(dim, Seq(keyCol))
       .filter(col("ts") >= col(fromCol) && col("ts") < col(toCol))
 
@@ -477,16 +445,10 @@ object Streams {
   def enrichStream(spark: SparkSession, dir: String, checkpoint: String,
                    glob: String = "events.parquet",
                    dimDir: String = null): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema
     val dim = spark.read
       .parquet(s"${if (dimDir == null) dir else dimDir}/nation.parquet")
       .select(col("n_nationkey"), col("n_name"))
-    val joined = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
+    val joined = fileStream(spark, dir, glob)
       .select(col("event_id"), col("event_type"),
         pmod(col("user_id"), lit(25)).as("nk"))
       .join(broadcast(dim), col("nk") === col("n_nationkey"))
@@ -519,18 +481,8 @@ object Streams {
                           checkpoint: String, leftType: String,
                           rightType: String, windowHours: Int,
                           glob: String = "events.parquet",
-                          statePartitions: Int = 0,
                           joinType: String = "inner"): DataFrame = {
-    // A stream-stream join keeps FOUR state stores per shuffle partition
-    // (two per side), each checkpointing delta files every batch — the
-    // per-batch floor is dominated by state-store count, not data. Size
-    // the state partitioning to the stream's key cardinality/volume
-    // instead of inheriting the batch shuffle default; the partition
-    // count is baked into the checkpoint on first run either way, so it
-    // is a per-pipeline knob, not a global.
-    val sess = statefulSession(spark, statePartitions)
-    val schema = sess.read.option("pathGlobFilter", glob)
-      .parquet(dir).schema
+    val sess = statefulSession(spark, dir, glob)
     // each type filter also passes its side's punctuation rows: the
     // optimizer pushes the filter BELOW the EventTimeWatermark operator
     // into the scan (verified via the checkpoint's batchWatermarkMs —
@@ -540,15 +492,11 @@ object Streams {
     // sentinel can never satisfy the 6h/`windowHours` time constraint
     // against a right one — a shared type would self-match (same row
     // read by both sides, identical ts trivially inside the window).
-    def side(tpe: String, sentinelType: String) = normalizeTs(
-      sess.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", glob)
-        .parquet(dir))
-      .withWatermark("ts", "1 day")
-      .filter(col("event_type") === tpe ||
-        col("event_type") === sentinelType)
+    def side(tpe: String, sentinelType: String) =
+      normalizeTs(fileStream(sess, dir, glob))
+        .withWatermark("ts", "1 day")
+        .filter(col("event_type") === tpe ||
+          col("event_type") === sentinelType)
     val left = side(leftType, "__sentinel_l")
       .select(col("event_id").as("left_id"), col("user_id"),
         col("ts").as("left_ts"), col("event_type").as("l_type"))
@@ -617,7 +565,6 @@ object Streams {
   def intervalJoinStreamsOuter(spark: SparkSession, dir: String,
                                checkpoint: String, leftType: String,
                                rightType: String, windowHours: Int,
-                               statePartitions: Int = 0,
                                joinType: String = "leftOuter")
   : DataFrame = {
     require(windowHours < 30 * 24,
@@ -662,8 +609,7 @@ object Streams {
       sentDst.toFile.setLastModified(now + i * 600000L)
     }
     intervalJoinStreams(spark, staged.toString, checkpoint, leftType,
-      rightType, windowHours, glob = "*.parquet",
-      statePartitions = statePartitions, joinType = joinType)
+      rightType, windowHours, glob = "*.parquet", joinType = joinType)
   }
 
   /** CDC stream → latest-wins lake table: every micro-batch is merged
@@ -1717,10 +1663,11 @@ object Streams {
     */
   def sessionizeStream(spark: SparkSession, dir: String, checkpoint: String,
                        gapMinutes: Int): DataFrame = {
-    import spark.implicits._
+    val sess = statefulSession(spark, dir, "events.parquet")
+    import sess.implicits._
     val gapSec = gapMinutes * 60L
 
-    val sessions = sessionEventStream(spark, dir)
+    val sessions = sessionEventStream(sess, dir)
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[SessionState, Session](
         OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
@@ -1741,7 +1688,7 @@ object Streams {
       .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    spark.table(sinkName)
+    sess.table(sinkName)
   }
 
   case class StepEvent(user_id: Long, ts: java.sql.Timestamp,
@@ -1768,14 +1715,9 @@ object Streams {
     */
   def markovStream(spark: SparkSession, dir: String, checkpoint: String,
                    glob: String = "events.parquet"): DataFrame = {
-    import spark.implicits._
-    val schema = spark.read.option("pathGlobFilter", glob)
-      .parquet(dir).schema
-    val steps = normalizeTs(spark.readStream
-        .schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", glob)
-        .parquet(dir))
+    val sess = statefulSession(spark, dir, glob)
+    import sess.implicits._
+    val steps = normalizeTs(fileStream(sess, dir, glob))
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"))
       .as[StepEvent]
@@ -1810,7 +1752,7 @@ object Streams {
     // reuses the groupBy's hash partitioning, so it costs no shuffle)
     val wTot = org.apache.spark.sql.expressions.Window
       .partitionBy("from_type")
-    spark.table(sinkName)
+    sess.table(sinkName)
       .groupBy("from_type", "to_type")
       .agg(count(lit(1)).as("c"))
       .withColumn("tot", sum(col("c")).over(wTot))
@@ -1842,13 +1784,12 @@ object Streams {
   def sessionizeStreamTws(spark: SparkSession, dir: String,
                           checkpoint: String, gapMinutes: Int)
   : DataFrame = {
-    // 8 state partitions, not the session's 32: each stateful partition
-    // opens its own RocksDB instance, and store init dominates this
-    // query's bench cost at small state (32→8 saves ~0.6 s of the
-    // ~2.5 s warm runtime). State-partition count is a deployment knob — a
-    // real cluster sizes it to executors × cores against expected live
-    // state; results are partition-count-independent (per-key fold)
-    val sess = statefulSession(spark, 8, rocksDb = true)
+    // state partitions follow the input's splits (see statefulSession):
+    // each one opens its own RocksDB instance, whose init dominates at
+    // small state; results are partition-count-independent (per-key
+    // fold)
+    val sess = statefulSession(spark, dir, "events.parquet",
+      rocksDb = true)
     import sess.implicits._
 
     val sessions = sessionEventStream(sess, dir)

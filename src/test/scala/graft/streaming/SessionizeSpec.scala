@@ -1,8 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.{SparkSpec, Tables}
+import graft.ArtifactStore.scratch
 
 /** flatMapGroupsWithState sessionization ≡ batch gaps-and-islands on the
   * events table. */
@@ -10,7 +9,7 @@ class SessionizeSpec extends SparkSpec {
 
   test("streamed sessionization equals batch sessionization") {
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_sess_spec").toString
+    val ckpt = scratch(spark, "graft_sess_spec")
 
     val batch = Streams.sessionizeBatch(
       Tables.events(spark, dir)
@@ -31,8 +30,8 @@ class SessionizeSpec extends SparkSpec {
     // computed HERE so the three-way claim is a direct assertion, not a
     // transitive one through another test
     val dir = "/root/testdata/sf0.001"
-    val ckptTws = Files.createTempDirectory("graft_tws_spec").toString
-    val ckptFm = Files.createTempDirectory("graft_tws_spec_fm").toString
+    val ckptTws = scratch(spark, "graft_tws_spec")
+    val ckptFm = scratch(spark, "graft_tws_spec_fm")
 
     val batch = Streams.sessionizeBatch(
       Tables.events(spark, dir)

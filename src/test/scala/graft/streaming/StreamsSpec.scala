@@ -2,9 +2,11 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
+import graft.ArtifactStore.scratch
 
 /** SURVEY.md §5 item 5: streaming result ≡ batch result on the events
   * table (Trigger.AvailableNow catchup parity). */
@@ -13,7 +15,7 @@ class StreamsSpec extends SparkSpec {
 
   test("streamed daily agg equals batch daily agg") {
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_ckpt_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_spec")
 
     val streamed = Streams.dailyEventAgg(spark, dir, ckpt)
       .select(to_date(col("day")).as("day"), col("event_type"),
@@ -31,7 +33,7 @@ class StreamsSpec extends SparkSpec {
 
   test("streamed OHLC candles equal the batch ohlcBars result") {
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_ckpt_ohlc_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_ohlc_spec")
     val streamed = Streams.ohlcStream(spark, dir, ckpt)
       .select(col("event_type"), col("bar_start"), col("open"),
         col("high"), col("low"), col("close"), col("n_ticks"),
@@ -51,7 +53,7 @@ class StreamsSpec extends SparkSpec {
   test("temporal enrich stream equals the batch at-event-time join") {
     import org.apache.spark.sql.functions._
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_ckpt_scd2_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_scd2_spec")
     val dim = spark.range(150L * 5).select(
       (col("id") % 150).as("user_id"),
       (col("id") / 150).cast("int").as("k"))
@@ -79,7 +81,7 @@ class StreamsSpec extends SparkSpec {
 
   test("streaming cms cells equal the batch sketch (shard-merge)") {
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_ckpt_cms_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_cms_spec")
     val streamed = Streams.cmsStream(spark, dir, ckpt, "user_id",
         depth = 4, width = 64)
       .as[(Int, Long, Long)].collect().toSet
@@ -93,7 +95,7 @@ class StreamsSpec extends SparkSpec {
 
   test("streamed markov transitions equal the batch operator") {
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_ckpt_mk_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_mk_spec")
     val streamed = Streams.markovStream(spark, dir, ckpt)
       .as[(String, String, Long, Long)].collect().toSet
     val batch = graft.ops.timeseries.transitionMatrix(
@@ -107,9 +109,9 @@ class StreamsSpec extends SparkSpec {
   test("markov state carries the cross-batch boundary step") {
     // one user, two time-ordered files: the a→b step exists ONLY as a
     // batch-boundary handoff through fMGWS state
-    val tmp = Files.createTempDirectory("graft_mk_slices").toString
+    val tmp = scratch(spark, "graft_mk_slices")
     def file(i: Int, rows: Seq[(Long, Long, Long, String)]): Unit = {
-      val staging = Files.createTempDirectory(s"graft_mk_st_$i").toString
+      val staging = scratch(spark, s"graft_mk_st_$i")
       rows.toDF("event_id", "epoch", "user_id", "event_type")
         .select(col("event_id"), col("epoch").cast("timestamp").as("ts"),
           col("user_id"), col("event_type"))
@@ -121,7 +123,7 @@ class StreamsSpec extends SparkSpec {
     }
     file(0, Seq((1L, 1700000000L, 7L, "a")))
     file(1, Seq((2L, 1700000100L, 7L, "b"), (3L, 1700000200L, 7L, "b")))
-    val ckpt = Files.createTempDirectory("graft_ckpt_mk_sl").toString
+    val ckpt = scratch(spark, "graft_ckpt_mk_sl")
     val got = Streams.markovStream(spark, tmp, ckpt, glob = "*.parquet")
       .as[(String, String, Long, Long)].collect().toSet
     assert(got === Set(("a", "b", 1L, 1000000L), ("b", "b", 1L, 1000000L)))
@@ -129,7 +131,7 @@ class StreamsSpec extends SparkSpec {
 
   test("streamed dedup emits exactly the batch-distinct key set") {
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_ckpt_dd_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_dd_spec")
 
     val streamed = Streams.dedupStream(spark, dir, ckpt).collect()
     val batch = Tables.events(spark, dir)
@@ -143,7 +145,7 @@ class StreamsSpec extends SparkSpec {
     // the 100 TB-state provider must be a pure swap — same keys out,
     // state format is a checkpoint property, not a semantics one
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_ckpt_rdb_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_rdb_spec")
     val streamed = Streams.dedupStream(spark, dir, ckpt, rocksDb = true)
       .collect()
     val batch = Tables.events(spark, dir)
@@ -158,13 +160,13 @@ class StreamsSpec extends SparkSpec {
     // exercised (a single file hides it). Time-ordering keeps every row
     // inside the 1-day watermark, as a season-ordered catchup would.
     val dir = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("graft_slices").toString
+    val tmp = scratch(spark, "graft_slices")
     val raw = spark.read.parquet(s"$dir/events.parquet").orderBy("ts")
     val n = raw.count()
     val chunks = raw.collect().grouped((n / 3 + 1).toInt).toSeq
     val schema = raw.schema
     chunks.zipWithIndex.foreach { case (rows, i) =>
-      val staging = Files.createTempDirectory(s"graft_stage_$i").toString
+      val staging = scratch(spark, s"graft_stage_$i")
       spark.createDataFrame(
         java.util.Arrays.asList(rows: _*), schema)
         .coalesce(1).write.mode("overwrite").parquet(staging)
@@ -175,7 +177,7 @@ class StreamsSpec extends SparkSpec {
     }
 
     // stateful path: windowed aggregation across the 3 batches
-    val ckptAgg = Files.createTempDirectory("graft_ckpt_sl_agg").toString
+    val ckptAgg = scratch(spark, "graft_ckpt_sl_agg")
     val slicedAgg = Streams.dailyEventAgg(spark, tmp, ckptAgg, "*.parquet")
       .select(to_date(col("day")).as("day"), col("event_type"),
         col("cnt"), col("sum_value")).collect()
@@ -188,7 +190,7 @@ class StreamsSpec extends SparkSpec {
     assert(slicedAgg.toSet === batchAgg.toSet)
 
     // stateless path: broadcast enrichment across the 3 batches
-    val ckptEn = Files.createTempDirectory("graft_ckpt_sl_en").toString
+    val ckptEn = scratch(spark, "graft_ckpt_sl_en")
     val slicedEn = Streams.enrichStream(spark, tmp, ckptEn,
       "*.parquet", dimDir = dir).collect()
     assert(slicedEn.length === n)
@@ -200,14 +202,14 @@ class StreamsSpec extends SparkSpec {
     // vs the index, so the union of per-batch decisions must equal the
     // single batch incrementalNearDups run folded to keep/drop rows
     val dir = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("graft_lsh_slices").toString
+    val tmp = scratch(spark, "graft_lsh_slices")
     val raw = spark.read.parquet(s"$dir/documents.parquet")
       .orderBy("doc_id")
     val n = raw.count()
     val chunks = raw.collect().grouped((n / 3 + 1).toInt).toSeq
     val schema = raw.schema
     chunks.zipWithIndex.foreach { case (rows, i) =>
-      val staging = Files.createTempDirectory(s"graft_lsh_st_$i").toString
+      val staging = scratch(spark, s"graft_lsh_st_$i")
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .coalesce(1).write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()
@@ -215,8 +217,8 @@ class StreamsSpec extends SparkSpec {
       Files.move(part.toPath,
         java.nio.file.Paths.get(s"$tmp/docs_$i.parquet"))
     }
-    val ckpt = Files.createTempDirectory("graft_ckpt_lsh_sl").toString
-    val out = Files.createTempDirectory("graft_lsh_out").toString + "/dec"
+    val ckpt = scratch(spark, "graft_ckpt_lsh_sl")
+    val out = scratch(spark, "graft_lsh_out") + "/dec"
     val sliced = Streams.lshDedupStream(spark, tmp, ckpt, out,
       numPerms = 8, numBands = 4, threshold = 0.8, glob = "*.parquet")
       .collect()
@@ -245,14 +247,14 @@ class StreamsSpec extends SparkSpec {
     // WHOLE corpus regardless of slicing — the property lshDedupStream
     // explicitly does not have
     val dir = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("graft_ccm_slices").toString
+    val tmp = scratch(spark, "graft_ccm_slices")
     val raw = spark.read.parquet(s"$dir/documents.parquet")
       .orderBy("doc_id")
     val n = raw.count()
     val chunks = raw.collect().grouped((n / 3 + 1).toInt).toSeq
     val schema = raw.schema
     chunks.zipWithIndex.foreach { case (rows, i) =>
-      val staging = Files.createTempDirectory(s"graft_ccm_st_$i").toString
+      val staging = scratch(spark, s"graft_ccm_st_$i")
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .coalesce(1).write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()
@@ -260,22 +262,22 @@ class StreamsSpec extends SparkSpec {
       Files.move(part.toPath,
         java.nio.file.Paths.get(s"$tmp/docs_$i.parquet"))
     }
-    val ckpt = Files.createTempDirectory("graft_ckpt_ccm_sl").toString
-    val store = Files.createTempDirectory("graft_ccm_store").toString
+    val ckpt = scratch(spark, "graft_ckpt_ccm_sl")
+    val store = scratch(spark, "graft_ccm_store")
     val sliced = Streams.ccMaintainStream(spark, tmp, ckpt, store,
         numPerms = 8, numBands = 4, threshold = 0.8, glob = "*.parquet")
       .as[(Long, Long, Boolean)].collect().toSet
 
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val scratch = graft.dedup.Dedup.connectedComponents(
+    val fromScratch = graft.dedup.Dedup.connectedComponents(
         graft.dedup.Dedup.minhashLshPairs(docs, "doc_id", "text",
           numPerms = 8, numBands = 4, threshold = 0.8),
         "doc_a", "doc_b")
       .as[(Long, Long, Boolean)].collect().toSet
-    assert(sliced === scratch)
+    assert(sliced === fromScratch)
     // the property only bites if some cluster actually straddles the
     // corpus/arrival split
-    assert(scratch.exists { case (id, comp, _) =>
+    assert(fromScratch.exists { case (id, comp, _) =>
       (id % 17 == 0) != (comp % 17 == 0) },
       "fixture must contain a cluster straddling the split")
   }
@@ -288,14 +290,14 @@ class StreamsSpec extends SparkSpec {
     // assignment log must survive forced compaction (maxStoreFiles = 2
     // over 3 batches fires it)
     val dir = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("graft_annm_slices").toString
+    val tmp = scratch(spark, "graft_annm_slices")
     val raw = spark.read.parquet(s"$dir/embeddings.parquet")
       .orderBy("vec_id")
     val n = raw.count()
     val chunks = raw.collect().grouped((n / 3 + 1).toInt).toSeq
     val schema = raw.schema
     chunks.zipWithIndex.foreach { case (rows, i) =>
-      val staging = Files.createTempDirectory(s"graft_annm_st_$i").toString
+      val staging = scratch(spark, s"graft_annm_st_$i")
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .coalesce(1).write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()
@@ -303,8 +305,8 @@ class StreamsSpec extends SparkSpec {
       Files.move(part.toPath,
         java.nio.file.Paths.get(s"$tmp/emb_$i.parquet"))
     }
-    val ckpt = Files.createTempDirectory("graft_ckpt_annm_sl").toString
-    val store = Files.createTempDirectory("graft_annm_store").toString
+    val ckpt = scratch(spark, "graft_ckpt_annm_sl")
+    val store = scratch(spark, "graft_annm_store")
     val sliced = graft.streaming.Streams.annMaintainStream(spark, tmp,
         ckpt, store, glob = "*.parquet", maxStoreFiles = 2)
       .as[(Long, Int)].collect().toSet
@@ -333,11 +335,10 @@ class StreamsSpec extends SparkSpec {
     // corruption. The restore path must fail loudly before any
     // stream state is created.
     val dir = "/root/testdata/sf0.001"
-    val store = Files.createTempDirectory("graft_annm_populated")
-      .toString
+    val store = scratch(spark, "graft_annm_populated")
     Files.createDirectories(
       java.nio.file.Paths.get(s"$store/assignment"))
-    val ckpt = Files.createTempDirectory("graft_ckpt_annm_pop").toString
+    val ckpt = scratch(spark, "graft_ckpt_annm_pop")
     val e = intercept[IllegalArgumentException] {
       graft.streaming.Streams.annMaintainStream(spark, dir, ckpt,
         store, seedFrom = Some("/nonexistent/snapshot"))
@@ -358,8 +359,8 @@ class StreamsSpec extends SparkSpec {
     import graft.{ExtensionQueries => EQ}
     def run(seeded: Boolean): (Set[(Long, Long, Long, Long, Int)],
         Set[(Long, Long)]) = {
-      val ckpt = Files.createTempDirectory("graft_ckpt_trio_sd").toString
-      val store = Files.createTempDirectory("graft_trio_sd").toString
+      val ckpt = scratch(spark, "graft_ckpt_trio_sd")
+      val store = scratch(spark, "graft_trio_sd")
       val out = graft.streaming.Streams.ingestTrioStream(spark, dir,
           ckpt, store, numPerms = 8, numBands = 4, threshold = 0.8,
           minLen = 5,
@@ -391,15 +392,14 @@ class StreamsSpec extends SparkSpec {
     // independent from-scratch batch truth — simultaneously, out of
     // the same store
     val dir = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("graft_trio_slices").toString
+    val tmp = scratch(spark, "graft_trio_slices")
     val raw = spark.read.parquet(s"$dir/documents.parquet")
       .orderBy("doc_id")
     val n = raw.count()
     val chunks = raw.collect().grouped((n / 3 + 1).toInt).toSeq
     val schema = raw.schema
     chunks.zipWithIndex.foreach { case (rows, i) =>
-      val staging = Files.createTempDirectory(s"graft_trio_st_$i")
-        .toString
+      val staging = scratch(spark, s"graft_trio_st_$i")
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .coalesce(1).write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()
@@ -407,8 +407,8 @@ class StreamsSpec extends SparkSpec {
       Files.move(part.toPath,
         java.nio.file.Paths.get(s"$tmp/docs_$i.parquet"))
     }
-    val ckpt = Files.createTempDirectory("graft_ckpt_trio_sl").toString
-    val store = Files.createTempDirectory("graft_trio_store").toString
+    val ckpt = scratch(spark, "graft_ckpt_trio_sl")
+    val store = scratch(spark, "graft_trio_store")
     val sliced = graft.streaming.Streams.ingestTrioStream(spark, tmp,
         ckpt, store, numPerms = 8, numBands = 4, threshold = 0.8,
         minLen = 5, glob = "*.parquet",
@@ -481,14 +481,14 @@ class StreamsSpec extends SparkSpec {
     // corpus regardless of slicing — and must survive forced
     // compaction (maxStoreFiles = 2 over 3 batches fires it)
     val dir = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("graft_sam_slices").toString
+    val tmp = scratch(spark, "graft_sam_slices")
     val raw = spark.read.parquet(s"$dir/documents.parquet")
       .orderBy("doc_id")
     val n = raw.count()
     val chunks = raw.collect().grouped((n / 3 + 1).toInt).toSeq
     val schema = raw.schema
     chunks.zipWithIndex.foreach { case (rows, i) =>
-      val staging = Files.createTempDirectory(s"graft_sam_st_$i").toString
+      val staging = scratch(spark, s"graft_sam_st_$i")
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .coalesce(1).write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()
@@ -496,19 +496,19 @@ class StreamsSpec extends SparkSpec {
       Files.move(part.toPath,
         java.nio.file.Paths.get(s"$tmp/docs_$i.parquet"))
     }
-    val ckpt = Files.createTempDirectory("graft_ckpt_sam_sl").toString
-    val store = Files.createTempDirectory("graft_sam_store").toString
+    val ckpt = scratch(spark, "graft_ckpt_sam_sl")
+    val store = scratch(spark, "graft_sam_store")
     val sliced = Streams.saMaintainStream(spark, tmp, ckpt, store,
         minLen = 5, glob = "*.parquet", maxStoreFiles = 2)
       .as[(Long, Long, Long)].collect().toSet
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val scratch = graft.text.SuffixArray.dupPositions(docs, "doc_id",
+    val fromScratch = graft.text.SuffixArray.dupPositions(docs, "doc_id",
         "text", minLen = 5)
       .as[(Long, Long, Long)].collect().toSet
-    assert(sliced === scratch)
+    assert(sliced === fromScratch)
     // the property only bites if some duplicate straddles the
     // corpus/arrival split
-    assert(scratch.exists { case (id, _, nd) => id % 17 == 0 && nd > 0 },
+    assert(fromScratch.exists { case (id, _, nd) => id % 17 == 0 && nd > 0 },
       "fixture must contain an arrival-side duplicated doc")
     // forced compaction kept the growing stores bounded
     def nParts(sub: String): Int = new java.io.File(s"$store/$sub")
@@ -526,14 +526,14 @@ class StreamsSpec extends SparkSpec {
     // compaction to fire repeatedly; labels must STILL equal the
     // from-scratch CC (compaction only rewrites files, never data).
     val dir = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("graft_ccm_cpt").toString
+    val tmp = scratch(spark, "graft_ccm_cpt")
     val raw = spark.read.parquet(s"$dir/documents.parquet")
       .orderBy("doc_id")
     val n = raw.count()
     val chunks = raw.collect().grouped((n / 6 + 1).toInt).toSeq
     val schema = raw.schema
     chunks.zipWithIndex.foreach { case (rows, i) =>
-      val staging = Files.createTempDirectory(s"graft_ccm_cst_$i").toString
+      val staging = scratch(spark, s"graft_ccm_cst_$i")
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .coalesce(1).write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()
@@ -541,19 +541,19 @@ class StreamsSpec extends SparkSpec {
       Files.move(part.toPath,
         java.nio.file.Paths.get(s"$tmp/docs_$i.parquet"))
     }
-    val ckpt = Files.createTempDirectory("graft_ckpt_ccm_cpt").toString
-    val store = Files.createTempDirectory("graft_ccm_cpt_store").toString
+    val ckpt = scratch(spark, "graft_ckpt_ccm_cpt")
+    val store = scratch(spark, "graft_ccm_cpt_store")
     val got = Streams.ccMaintainStream(spark, tmp, ckpt, store,
         numPerms = 8, numBands = 4, threshold = 0.8, glob = "*.parquet",
         maxStoreFiles = 2)
       .as[(Long, Long, Boolean)].collect().toSet
-    val scratch = graft.dedup.Dedup.connectedComponents(
+    val fromScratch = graft.dedup.Dedup.connectedComponents(
         graft.dedup.Dedup.minhashLshPairs(
           spark.read.parquet(s"$dir/documents.parquet"), "doc_id",
           "text", numPerms = 8, numBands = 4, threshold = 0.8),
         "doc_a", "doc_b")
       .as[(Long, Long, Boolean)].collect().toSet
-    assert(got === scratch)
+    assert(got === fromScratch)
     // bounded store: compaction keeps each index dir at or under the
     // cap plus one compaction width — never one file pair per batch
     def nParts(sub: String): Int = new java.io.File(s"$store/$sub")
@@ -576,14 +576,14 @@ class StreamsSpec extends SparkSpec {
   test("ohlc update mode: same bars as complete mode, state evicted") {
     val dir = "/root/testdata/sf0.001"
     // complete-mode reference
-    val ckptC = Files.createTempDirectory("graft_ckpt_oc").toString
+    val ckptC = scratch(spark, "graft_ckpt_oc")
     val complete = Streams.ohlcStream(spark, dir, ckptC,
         valueExpr = (col("value").cast("decimal(18,2)") * 100)
           .cast("long"))
       .collect().toSet
     // update-mode + snapshot-chain upsert
-    val ckptU = Files.createTempDirectory("graft_ckpt_ou").toString
-    val tbl = Files.createTempDirectory("graft_ohlc_tbl_t").toString
+    val ckptU = scratch(spark, "graft_ckpt_ou")
+    val tbl = scratch(spark, "graft_ohlc_tbl_t")
     val update = Streams.ohlcStreamUpdate(spark, dir, ckptU, tbl,
         valueExpr = (col("value").cast("decimal(18,2)") * 100)
           .cast("long"))
@@ -598,10 +598,10 @@ class StreamsSpec extends SparkSpec {
     // maxFilesPerTrigger=1 the watermark advances per batch, so bars
     // more than 1 day behind the max seen event time age OUT of the
     // state store — final state must hold fewer rows than total bars
-    val tmp = Files.createTempDirectory("graft_ohlc_days").toString
+    val tmp = scratch(spark, "graft_ohlc_days")
     val days = 8
     (0 until 4).foreach { i =>
-      val staging = Files.createTempDirectory(s"graft_ohlc_st_$i").toString
+      val staging = scratch(spark, s"graft_ohlc_st_$i")
       spark.range(i * 20, i * 20 + 20)
         .select(col("id").as("event_id"),
           (col("id") % 3).as("user_id"),
@@ -619,8 +619,8 @@ class StreamsSpec extends SparkSpec {
       Files.move(part.toPath,
         java.nio.file.Paths.get(s"$tmp/ev_$i.parquet"))
     }
-    val ckpt = Files.createTempDirectory("graft_ckpt_oev").toString
-    val tbl = Files.createTempDirectory("graft_ohlc_tbl_ev").toString
+    val ckpt = scratch(spark, "graft_ckpt_oev")
+    val tbl = scratch(spark, "graft_ohlc_tbl_ev")
     val (table, stateRows) = Streams.ohlcStreamUpdateStats(spark, tmp,
       ckpt, tbl, glob = "*.parquet")
     val totalBars = table.count()
@@ -636,13 +636,13 @@ class StreamsSpec extends SparkSpec {
     // table; the final snapshot must equal the batch latest-per-user
     // result, proving the stream → CDC-upsert loop end to end
     val dir = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("graft_cdc_slices").toString
+    val tmp = scratch(spark, "graft_cdc_slices")
     val raw = spark.read.parquet(s"$dir/events.parquet").orderBy("ts")
     val n = raw.count()
     val chunks = raw.collect().grouped((n / 3 + 1).toInt).toSeq
     val schema = raw.schema
     chunks.zipWithIndex.foreach { case (rows, i) =>
-      val staging = Files.createTempDirectory(s"graft_cdc_stage_$i").toString
+      val staging = scratch(spark, s"graft_cdc_stage_$i")
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .coalesce(1).write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()
@@ -650,8 +650,8 @@ class StreamsSpec extends SparkSpec {
       Files.move(part.toPath,
         java.nio.file.Paths.get(s"$tmp/ev_$i.parquet"))
     }
-    val ckpt = Files.createTempDirectory("graft_ckpt_up_spec").toString
-    val tbl = Files.createTempDirectory("graft_cdc_tbl_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_up_spec")
+    val tbl = scratch(spark, "graft_cdc_tbl_spec")
     // the upsert keeps the file's raw ts; compare as epoch micros so
     // the assertion is independent of the file's timestamp encoding
     val tsUs = unix_micros(col("ts").cast("timestamp")).as("ts_us")
@@ -719,7 +719,7 @@ class StreamsSpec extends SparkSpec {
 
   test("stream-stream interval join equals the batch interval join") {
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_ckpt_sj_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_sj_spec")
     val streamed = Streams
       .intervalJoinStreams(spark, dir, ckpt, "click", "purchase", 6)
       .collect()
@@ -730,7 +730,7 @@ class StreamsSpec extends SparkSpec {
 
   test("left-outer stream-stream join equals the batch left join") {
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_ckpt_sjo_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_sjo_spec")
     val streamed = Streams
       .intervalJoinStreamsOuter(spark, dir, ckpt, "click", "purchase", 6)
       .collect()
@@ -760,7 +760,7 @@ class StreamsSpec extends SparkSpec {
 
   test("full-outer stream-stream join equals the batch full join") {
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_ckpt_sjf_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_sjf_spec")
     val streamed = Streams
       .intervalJoinStreamsOuter(spark, dir, ckpt, "click", "purchase", 6,
         joinType = "fullOuter")
@@ -793,13 +793,13 @@ class StreamsSpec extends SparkSpec {
     // in batch i or i+1, so the join's left-side state must survive the
     // batch boundary — the property a single file never exercises
     val dir = "/root/testdata/sf0.001"
-    val tmp = Files.createTempDirectory("graft_sj_slices").toString
+    val tmp = scratch(spark, "graft_sj_slices")
     val raw = spark.read.parquet(s"$dir/events.parquet").orderBy("ts")
     val n = raw.count()
     val chunks = raw.collect().grouped((n / 3 + 1).toInt).toSeq
     val schema = raw.schema
     chunks.zipWithIndex.foreach { case (rows, i) =>
-      val staging = Files.createTempDirectory(s"graft_sj_stage_$i").toString
+      val staging = scratch(spark, s"graft_sj_stage_$i")
       spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
         .coalesce(1).write.mode("overwrite").parquet(staging)
       val part = new java.io.File(staging).listFiles()
@@ -807,7 +807,7 @@ class StreamsSpec extends SparkSpec {
       Files.move(part.toPath,
         java.nio.file.Paths.get(s"$tmp/ev_$i.parquet"))
     }
-    val ckpt = Files.createTempDirectory("graft_ckpt_sj_sl").toString
+    val ckpt = scratch(spark, "graft_ckpt_sj_sl")
     val sliced = Streams.intervalJoinStreams(spark, tmp, ckpt,
       "click", "purchase", 6, glob = "*.parquet").collect()
     val batch = batchIntervalJoin(dir).collect()
@@ -816,7 +816,7 @@ class StreamsSpec extends SparkSpec {
 
   test("stream-static enrichment equals the batch join") {
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_ckpt_en_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_en_spec")
 
     val streamed = Streams.enrichStream(spark, dir, ckpt).collect()
     val batch = Tables.events(spark, dir)
@@ -834,7 +834,7 @@ class StreamsSpec extends SparkSpec {
 
   test("streaming top-k heavy hitters equals the batch rank") {
     val dir = "/root/testdata/sf0.001"
-    val ckpt = Files.createTempDirectory("graft_ckpt_topk_spec").toString
+    val ckpt = scratch(spark, "graft_ckpt_topk_spec")
     val streamed = Streams.topKStream(spark, dir, ckpt, k = 3)
       .select(to_date(col("day")).as("day"), col("event_type"),
         col("user_id"), col("cnt"))
@@ -851,5 +851,98 @@ class StreamsSpec extends SparkSpec {
       .collect()
     assert(streamed.length === batch.length)
     assert(streamed.toSet === batch.toSet)
+  }
+
+  private val sf0001 = "/root/testdata/sf0.001"
+
+  /** State partition dirs of the checkpoint's first stateful operator. */
+  private def statePartitionDirs(ckpt: String): Int =
+    new java.io.File(s"$ckpt/state/0").listFiles()
+      .count(f => f.isDirectory && f.getName.forall(_.isDigit))
+
+  /** A session whose file scans cut `file` into about `pieces` splits. */
+  private def splitSession(file: String, pieces: Int): SparkSession = {
+    val bytes = (new java.io.File(file).length + pieces - 1) / pieces
+    val s = spark.newSession()
+    s.conf.set("spark.sql.files.maxPartitionBytes", bytes)
+    s.conf.set("spark.sql.files.openCostInBytes", bytes)
+    s
+  }
+
+  test("state partitions are min(shuffle partitions, input splits)") {
+    // one stream per state mechanism: windowed aggregation on the HDFS
+    // store, flatMapGroupsWithState, transformWithState on RocksDB
+    val dir = sf0001
+    val events = s"$dir/events.parquet"
+    val shuffle = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val streams = Seq[(SparkSession, String) => DataFrame](
+      (s, c) => Streams.dailyEventAgg(s, dir, c),
+      (s, c) => Streams.markovStream(s, dir, c),
+      (s, c) => Streams.sessionizeStreamTws(s, dir, c, gapMinutes = 30))
+    def run(s: SparkSession): Seq[(Int, Set[Row])] = streams.map { f =>
+      val ckpt = scratch(spark, "graft_ckpt_parts")
+      val rows = f(s, ckpt).collect().toSet
+      (statePartitionDirs(ckpt), rows)
+    }
+
+    // the events table is one small file: one split, one state partition
+    val one = run(spark)
+    assert(one.map(_._1) === Seq(1, 1, 1))
+    assert(one.forall(_._2.nonEmpty))
+
+    // fewer splits than shuffle partitions: one state partition a split,
+    // and the state handoff across partitions leaves the result alone
+    val few = splitSession(events, 3)
+    val fewSplits = few.read.parquet(events).rdd.getNumPartitions
+    assert(fewSplits >= 3)
+    val fewRun = run(few)
+    assert(fewRun.map(_._1) === Seq.fill(3)(math.min(shuffle, fewSplits)))
+    assert(fewRun.map(_._2) === one.map(_._2))
+
+    // at least as many splits as shuffle partitions: the full count
+    val many = splitSession(events, 2 * shuffle)
+    assert(many.read.parquet(events).rdd.getNumPartitions >= shuffle)
+    val manyRun = run(many)
+    assert(manyRun.map(_._1) === Seq.fill(3)(shuffle))
+    assert(manyRun.map(_._2) === one.map(_._2))
+  }
+
+  test("a restarted stream keeps its checkpoint's state partitions") {
+    // one file → one state partition; a second file and a smaller split
+    // size would size a fresh checkpoint wider, but the restart must
+    // keep the count the offset log recorded
+    val dir = sf0001
+    val tmp = scratch(spark, "graft_restart")
+    val raw = spark.read.parquet(s"$dir/events.parquet").orderBy("ts")
+    val rows = raw.collect()
+    def stage(i: Int, part: Seq[Row]): Unit = {
+      val staging = scratch(spark, s"graft_restart_st_$i")
+      spark.createDataFrame(java.util.Arrays.asList(part: _*), raw.schema)
+        .coalesce(1).write.mode("overwrite").parquet(staging)
+      val file = new java.io.File(staging).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.move(file.toPath, java.nio.file.Paths.get(s"$tmp/ev_$i.parquet"))
+    }
+    val (first, second) = rows.toSeq.splitAt(rows.length / 2)
+    stage(0, first)
+    val ckpt = scratch(spark, "graft_ckpt_restart")
+    Streams.dailyEventAgg(spark, tmp, ckpt, "*.parquet").collect()
+    assert(statePartitionDirs(ckpt) === 1)
+
+    stage(1, second)
+    val wider = splitSession(s"$tmp/ev_1.parquet", 3)
+    assert(wider.read.option("pathGlobFilter", "*.parquet").parquet(tmp)
+      .rdd.getNumPartitions > 1)
+    val restarted = Streams.dailyEventAgg(wider, tmp, ckpt, "*.parquet")
+      .select(to_date(col("day")).as("day"), col("event_type"),
+        col("cnt"), col("sum_value")).collect().toSet
+    assert(statePartitionDirs(ckpt) === 1)
+    val batch = Tables.events(spark, dir)
+      .groupBy(to_date(date_trunc("day", col("ts"))).as("day"),
+        col("event_type"))
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("value").cast("decimal(18,2)")).cast("double")
+          .as("sum_value")).collect().toSet
+    assert(restarted === batch)
   }
 }
