@@ -334,16 +334,9 @@ object ExtensionQueries {
   // batch).
   private[graft] val ccStreamSeedDir = artifactDir("ccStreamSeedDir") {
     (s, d, p) =>
-    val corpus = t(s, d, "documents").filter(col("doc_id") % 17 =!= 0)
-    val sets0 = Dedup.shingleSets(corpus, "doc_id", "text", 3)
-    sets0.write.mode("overwrite").parquet(s"$p/sets")
-    val banded0 = Dedup.bandedBuckets(sets0, 8, 4).stage()
-    banded0.write.mode("overwrite").parquet(s"$p/buckets")
-    Dedup.connectedComponents(
-      Dedup.nearDupPairsFromIndex(sets0, banded0, 0.8),
-      "doc_a", "doc_b")
-      .select("doc_id", "comp")
-      .write.mode("overwrite").parquet(s"$p/labels_seed")
+    Dedup.seedClusterStore(
+      t(s, d, "documents").filter(col("doc_id") % 17 =!= 0),
+      "doc_id", "text", numPerms = 8, numBands = 4, threshold = 0.8, p)
   }
 
   // The trio's IVF seed: same artifact shape as annStreamSeedDir but

@@ -330,24 +330,17 @@ object ScaleSmoke {
         expr("timestamp_micros(1600000000000000 + id * 1000)").as("ts"))
         .repartition(16)
         .write.mode("overwrite").parquet(s"$dir/in")
-      val sess = graft.streaming.Streams.statefulSession(spark,
-        s"$dir/in", "*.parquet", rocksDb = true)
-      val schema = sess.read.parquet(s"$dir/in").schema
-      val total = new java.util.concurrent.atomic.AtomicLong(0L)
-      val q = sess.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$dir/in")
+      import graft.streaming.Streams
+      val sess = Streams.statefulSession(spark, s"$dir/in", "*.parquet",
+        rocksDb = true)
+      val deduped = Streams.fileStream(sess, s"$dir/in", "*.parquet")
         .withWatermark("ts", "1 day")
         .dropDuplicatesWithinWatermark("user_id", "event_type")
         .select("user_id", "event_type")
-        .writeStream
-        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-          total.addAndGet(df.count()); ()
-        }
-        .option("checkpointLocation", s"$dir/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      val total = new java.util.concurrent.atomic.AtomicLong(0L)
+      Streams.catchUpEachBatch(deduped, s"$dir/ckpt") { (df, _) =>
+        total.addAndGet(df.count()); ()
+      }
       total.get()
     }
 

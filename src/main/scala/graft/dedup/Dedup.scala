@@ -224,6 +224,28 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), round(col("jaccard"), 6)
         .as("jaccard"))
 
+  /** Persist the near-dup cluster index's three at-rest artifacts under
+    * `path`: the shingle sets (`sets/`), their banded buckets
+    * (`buckets/`) and the corpus's connected-component labels
+    * (`labels_seed/`, written last) — the snapshot
+    * [[graft.streaming.Streams.ccMaintainStream]] grows. ONE shingle
+    * pass feeds all three: the staged sets/buckets are written AND
+    * reused for the seed pairs via [[nearDupPairsFromIndex]]
+    * ([[minhashLshPairs]] would re-tokenize + re-hash the corpus a
+    * second time for the exact same pairs). */
+  def seedClusterStore(corpus: DataFrame, idCol: String, textCol: String,
+                       numPerms: Int, numBands: Int, threshold: Double,
+                       path: String): Unit = {
+    val sets = shingleSets(corpus, idCol, textCol, 3)
+    sets.write.mode("overwrite").parquet(s"$path/sets")
+    val banded = bandedBuckets(sets, numPerms, numBands).stage()
+    banded.write.mode("overwrite").parquet(s"$path/buckets")
+    connectedComponents(nearDupPairsFromIndex(sets, banded, threshold),
+        "doc_a", "doc_b")
+      .select("doc_id", "comp")
+      .write.mode("overwrite").parquet(s"$path/labels_seed")
+  }
+
   /** SimHash fingerprint (Charikar '02), `bits`-wide: per token take bit
     * j of md5(token), sum over tokens, bit set iff count*2 > n_tokens.
     *

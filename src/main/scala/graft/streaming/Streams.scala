@@ -2,10 +2,13 @@ package graft.streaming
 
 import graft.ArtifactStore.scratch
 import graft.Staging._
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Structured Streaming parity — SURVEY.md §2.9.
   *
@@ -65,7 +68,7 @@ object Streams {
     // splits do not depend on the columns; an empty read schema skips
     // the schema-inference job
     val splits = spark.read
-      .schema(new org.apache.spark.sql.types.StructType())
+      .schema(new StructType())
       .option("pathGlobFilter", glob).parquet(dir)
       .queryExecution.sparkPlan.collectFirst {
         case s: FileSourceScanExec => s.inputRDD.getNumPartitions
@@ -86,13 +89,154 @@ object Streams {
   /** The `glob` files of `dir` as a file stream, one file per
     * micro-batch (the file-stream source wants a directory; the glob
     * selects the table out of it). */
-  private def fileStream(sess: SparkSession, dir: String,
-                         glob: String): DataFrame =
+  private[graft] def fileStream(sess: SparkSession, dir: String,
+                                glob: String): DataFrame =
+    fileStream(sess, dir, glob,
+      sess.read.option("pathGlobFilter", glob).parquet(dir).schema)
+
+  /** [[fileStream]] with the schema of a batch read the caller already
+    * holds, so the files' schema is not inferred a second time. */
+  private def fileStream(sess: SparkSession, dir: String, glob: String,
+                         schema: StructType): DataFrame =
     sess.readStream
-      .schema(sess.read.option("pathGlobFilter", glob).parquet(dir).schema)
+      .schema(schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", glob)
       .parquet(dir)
+
+  // ---- the catch-up runner -------------------------------------------------
+
+  /** Every stream here runs as a catch-up: `Trigger.AvailableNow`
+    * processes everything present under `checkpoint`'s offsets, in
+    * bounded batches, then stops. Returns the finished query (its
+    * `recentProgress` holds the per-batch metrics). */
+  private def catchUp(writer: DataStreamWriter[Row],
+                      checkpoint: String): StreamingQuery = {
+    val q = writer
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
+  }
+
+  /** Catch `stream` up into a memory sink and return its rows, read back
+    * from the session the stream ran in (for a stateful stream, the one
+    * [[statefulSession]] made). The sink's temp view is dropped once the
+    * result frame exists: the frame keeps the sink's rows, and nothing
+    * else pins them on the driver after the caller lets go of it. */
+  private def catchUpToMemory(stream: DataFrame, checkpoint: String,
+                              mode: String): DataFrame = {
+    val sink = "graft_sink_" + math.abs(checkpoint.hashCode)
+    catchUp(stream.writeStream.format("memory").queryName(sink)
+      .outputMode(mode), checkpoint)
+    val sess = stream.sparkSession
+    val rows = sess.table(sink)
+    sess.catalog.dropTempView(sink)
+    rows
+  }
+
+  /** Catch `stream` up through a `foreachBatch` sink running `f` on each
+    * (micro-batch, batch id). */
+  private[graft] def catchUpEachBatch(stream: DataFrame, checkpoint: String,
+                                      mode: String = "append")
+                                     (f: (DataFrame, Long) => Unit)
+  : StreamingQuery =
+    catchUp(stream.writeStream.outputMode(mode)
+      .foreachBatch((batch: Dataset[Row], batchId: Long) =>
+        f(batch.toDF(), batchId)), checkpoint)
+
+  // ---- snapshot chains -----------------------------------------------------
+
+  /** The versions of the snapshot chain at `path`: one `v_<batchId>`
+    * parquet dir per committed micro-batch, the newest being the
+    * current table. Hadoop FS, not java.io: the chain must work on any
+    * warehouse filesystem (HDFS/object store), not just local disk. */
+  private def snapshotVersions(spark: SparkSession, path: String)
+  : Seq[Long] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v_"))
+      .map(_.getPath.getName.stripPrefix("v_").toLong)
+  }
+
+  /** Whether Spark's write of the parquet dir `dir` completed: its
+    * job commit leaves a `_SUCCESS` marker as the last step. */
+  private def committed(spark: SparkSession, dir: String): Boolean = {
+    val marker = new Path(s"$dir/_SUCCESS")
+    marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(marker)
+  }
+
+  private def emptyFrame(spark: SparkSession, schema: StructType)
+  : DataFrame =
+    spark.createDataFrame(new java.util.ArrayList[Row](), schema)
+
+  /** Commit micro-batch `batchId` to the snapshot chain at `path`: write
+    * the frame `build` makes from the base as the new `v_<batchId>`,
+    * then retire the superseded versions. A parquet dir cannot be
+    * overwritten while it is also the read side of the new snapshot,
+    * hence the chain — the poor-man's form of what a transactional
+    * table format (Delta/Iceberg) provides at production scale.
+    *
+    * Crash-replay safety: after a crash between the `v_<batchId>` write
+    * and the offset commit, the batch is REDELIVERED with the same id
+    * while `v_<batchId>` is already the newest snapshot. Naively
+    * building on "latest" would then lazily READ the dir the overwrite
+    * targets (overwrite deletes it first → FileNotFoundException, and
+    * the only snapshot is gone). Two rules make replay safe: the base is
+    * the newest version STRICTLY BELOW `batchId` (`seed` when there is
+    * none), and a complete (`_SUCCESS`-marked) `v_<batchId>` skips
+    * `build` — the work is already durable. Superseded snapshots go only
+    * AFTER the new one is durable (a version above `batchId` is
+    * impossible under AvailableNow's monotone ids).
+    *
+    * @return `build`'s second result, or None when the batch was
+    *         already committed */
+  private def commitSnapshot[T](spark: SparkSession, path: String,
+                                batchId: Long, seed: => DataFrame)
+                               (build: DataFrame => (DataFrame, T))
+  : Option[T] = {
+    val out =
+      if (committed(spark, s"$path/v_$batchId")) None
+      else {
+        val base = snapshotVersions(spark, path).filter(_ < batchId)
+          .sorted.lastOption
+          .map(v => spark.read.parquet(s"$path/v_$v"))
+          .getOrElse(seed)
+        val (snapshot, result) = build(base)
+        snapshot.write.mode("overwrite").parquet(s"$path/v_$batchId")
+        Some(result)
+      }
+    val fs = new Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    snapshotVersions(spark, path).filter(_ < batchId)
+      .foreach(v => fs.delete(new Path(s"$path/v_$v"), true))
+    out
+  }
+
+  /** The current (highest-version) snapshot of a chain, or an empty
+    * frame of `schema` when none exists yet. */
+  private def latestSnapshot(spark: SparkSession, path: String,
+                             schema: StructType): DataFrame =
+    snapshotVersions(spark, path).sorted.lastOption
+      .map(v => spark.read.parquet(s"$path/v_$v"))
+      .getOrElse(emptyFrame(spark, schema))
+
+  /** The snapshot-chain MERGE sink: upsert one micro-batch into the
+    * chain at `tablePath` with [[graft.ops.relational.upsertLatest]],
+    * keyed by `keys`, latest wins on `versionCol`. Shared by
+    * [[upsertStreamToTable]] (CDC rows) and [[ohlcStreamUpdate]]
+    * (update-mode aggregates). */
+  private def snapshotChainMerge(spark: SparkSession, tablePath: String,
+                                 schema: StructType, keys: Seq[String],
+                                 versionCol: String, batch: DataFrame,
+                                 batchId: Long): Unit =
+    commitSnapshot(spark, tablePath, batchId, emptyFrame(spark, schema)) {
+      base => (graft.ops.relational.upsertLatest(base, batch, keys,
+        versionCol), ())
+    }
 
   /** Daily tumbling-window aggregate over the `events` stream: count +
     * exact value sum per (day, event_type), watermarked 1 day.
@@ -111,16 +255,28 @@ object Streams {
       .select(col("win.start").as("day"), col("event_type"), col("cnt"),
         col("sum_value_dec").cast("double").as("sum_value"))
 
-    val sinkName = "graft_stream_" + math.abs(checkpoint.hashCode)
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("complete")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(sinkName)
+    catchUpToMemory(agg, checkpoint, "complete")
+  }
+
+  /** The shared OHLC windowed aggregation over a raw event stream —
+    * identical plan under both output modes. */
+  private def ohlcAgg(stream: DataFrame, barSeconds: Long,
+                      valueExpr: Column): DataFrame = {
+    val ord = struct(col("ts"), col("event_id"))
+    normalizeTs(stream)
+      .withColumn("__v", valueExpr)
+      .withWatermark("ts", "1 day")
+      .groupBy(window(col("ts"), s"$barSeconds seconds").as("win"),
+        col("event_type"))
+      .agg(min_by(col("__v"), ord).as("open"),
+        max(col("__v")).as("high"),
+        min(col("__v")).as("low"),
+        max_by(col("__v"), ord).as("close"),
+        count(lit(1)).as("n_ticks"),
+        sum(col("__v").cast("decimal(18,2)")).as("volume"))
+      .select(col("event_type"), col("win.start").as("bar_start"),
+        col("open"), col("high"), col("low"), col("close"),
+        col("n_ticks"), col("volume"))
   }
 
   /** Streaming OHLC candles: the incremental twin of
@@ -146,43 +302,13 @@ object Streams {
     * @param valueExpr tick-value projection (default raw `value`);
     *   pass an integer-cents cast for exact cross-engine bars
     */
-  /** The shared OHLC windowed aggregation over a raw event stream —
-    * identical plan under both output modes. */
-  private def ohlcAgg(stream: DataFrame, barSeconds: Long,
-                      valueExpr: Column): DataFrame = {
-    val ord = struct(col("ts"), col("event_id"))
-    normalizeTs(stream)
-      .withColumn("__v", valueExpr)
-      .withWatermark("ts", "1 day")
-      .groupBy(window(col("ts"), s"$barSeconds seconds").as("win"),
-        col("event_type"))
-      .agg(min_by(col("__v"), ord).as("open"),
-        max(col("__v")).as("high"),
-        min(col("__v")).as("low"),
-        max_by(col("__v"), ord).as("close"),
-        count(lit(1)).as("n_ticks"),
-        sum(col("__v").cast("decimal(18,2)")).as("volume"))
-      .select(col("event_type"), col("win.start").as("bar_start"),
-        col("open"), col("high"), col("low"), col("close"),
-        col("n_ticks"), col("volume"))
-  }
-
   def ohlcStream(spark: SparkSession, dir: String, checkpoint: String,
                  barSeconds: Long = 86400L,
                  glob: String = "events.parquet",
                  valueExpr: Column = col("value")): DataFrame = {
     val sess = statefulSession(spark, dir, glob)
     val agg = ohlcAgg(fileStream(sess, dir, glob), barSeconds, valueExpr)
-    val sinkName = "graft_ohlc_" + math.abs(checkpoint.hashCode)
-    val q = agg.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("complete")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(sinkName)
+    catchUpToMemory(agg, checkpoint, "complete")
   }
 
   /** The PRODUCTION deployment of [[ohlcStream]]: `update` output mode
@@ -216,20 +342,12 @@ object Streams {
   : (DataFrame, Long) = {
     val sess = statefulSession(spark, dir, glob)
     val agg = ohlcAgg(fileStream(sess, dir, glob), barSeconds, valueExpr)
-    val tableSchema = agg.schema
-      .add("__bid", org.apache.spark.sql.types.LongType)
-    val q = agg.writeStream
-      .outputMode("update")
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        snapshotChainMerge(sess, tablePath, tableSchema,
-          keys = Seq("event_type", "bar_start"), versionCol = "__bid",
-          batch.toDF().withColumn("__bid", lit(batchId)), batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    val tableSchema = agg.schema.add("__bid", LongType)
+    val q = catchUpEachBatch(agg, checkpoint, "update") { (batch, batchId) =>
+      snapshotChainMerge(sess, tablePath, tableSchema,
+        keys = Seq("event_type", "bar_start"), versionCol = "__bid",
+        batch.withColumn("__bid", lit(batchId)), batchId)
+    }
     val stateRows = q.recentProgress.toSeq
       .flatMap(p => Option(p.stateOperators).toSeq.flatMap(_.toSeq))
       .lastOption.map(_.numRowsTotal).getOrElse(0L)
@@ -249,10 +367,6 @@ object Streams {
   case class Session(user_id: Long, session_start: java.sql.Timestamp,
                      n_events: Long, sum_value: Double)
 
-  /** Batch sessionization (gaps-and-islands): a new session starts when
-    * the gap to the previous event of the same user exceeds `gapMinutes`.
-    * One shuffle by user + one ordered scan — the exact shape of W1's
-    * running counter, reused on event-time. */
   /** Streaming exact dedup: emit each (user_id, event_type) key once,
     * with state bounded by the watermark — the stream-ingest side of the
     * dedup surface (`Dedup.exact` is the at-rest side). State size is
@@ -270,16 +384,7 @@ object Streams {
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select("user_id", "event_type")
 
-    val sinkName = "graft_dedup_stream_" + math.abs(checkpoint.hashCode)
-    val q = deduped.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(sinkName)
+    catchUpToMemory(deduped, checkpoint, "append")
   }
 
   /** Streaming per-window top-k heavy hitters: maintain exact running
@@ -315,19 +420,10 @@ object Streams {
       .select(col("win.start").as("day"), col("event_type"),
         col("user_id"), col("cnt"))
 
-    val sinkName = "graft_topk_stream_" + math.abs(checkpoint.hashCode)
-    val q = counts.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("complete")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("day"), col("event_type"))
       .orderBy(col("cnt").desc, col("user_id"))
-    sess.table(sinkName)
+    catchUpToMemory(counts, checkpoint, "complete")
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= k)
       .drop("__rn")
@@ -358,16 +454,7 @@ object Streams {
         col("cell.bucket").as("bucket"))
       .agg(count(lit(1)).as("c"))
 
-    val sinkName = "graft_cms_" + math.abs(checkpoint.hashCode)
-    val q = cells.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("complete")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(sinkName)
+    catchUpToMemory(cells, checkpoint, "complete")
   }
 
   /** Streaming mergeable quantile sketch: the HDR bucket counts of
@@ -389,16 +476,7 @@ object Streams {
       .groupBy("bkt_lo")
       .agg(count(lit(1)).as("cnt"))
 
-    val sinkName = "graft_qsk_" + math.abs(checkpoint.hashCode)
-    val q = buckets.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("complete")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(sinkName)
+    catchUpToMemory(buckets, checkpoint, "complete")
   }
 
   /** Stream-static TEMPORAL enrichment: each event picks up the
@@ -426,16 +504,7 @@ object Streams {
       .join(dim, Seq(keyCol))
       .filter(col("ts") >= col(fromCol) && col("ts") < col(toCol))
 
-    val sinkName = "graft_scd2en_" + math.abs(checkpoint.hashCode)
-    val q = enriched.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    catchUpToMemory(enriched, checkpoint, "append")
   }
 
   /** Stream-static enrichment join: the event stream joined to a static
@@ -454,16 +523,7 @@ object Streams {
       .join(broadcast(dim), col("nk") === col("n_nationkey"))
       .select(col("event_id"), col("event_type"), col("n_name"))
 
-    val sinkName = "graft_enrich_stream_" + math.abs(checkpoint.hashCode)
-    val q = joined.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    catchUpToMemory(joined, checkpoint, "append")
   }
 
   /** Stream-stream interval join (attribution): each `leftType` event
@@ -529,16 +589,7 @@ object Streams {
         expr("unix_micros(left_ts)").as("left_us"),
         expr("unix_micros(right_ts)").as("right_us"), col("value"))
 
-    val sinkName = "graft_sjoin_" + math.abs(checkpoint.hashCode)
-    val q = joined.writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(sinkName)
+    catchUpToMemory(joined, checkpoint, "append")
   }
 
   /** OUTER stream-stream interval join over a finite input (leftOuter
@@ -616,13 +667,11 @@ object Streams {
     * into a versioned parquet table with
     * [[graft.ops.relational.upsertLatest]] inside a `foreachBatch` sink —
     * the loop that connects the streaming surface to the CDC/upsert
-    * surface. Each batch writes a NEW `v_<batchId>` snapshot directory
-    * (a parquet dir cannot be overwritten while it is also the read side
-    * of the merge); the highest version is the current table and the
-    * superseded snapshot is retired after the new one lands. This is the
-    * poor-man's snapshot chain that a transactional table format
-    * (Delta/Iceberg MERGE) provides at production scale — the per-batch
-    * merge semantics are identical.
+    * surface. Each batch commits a NEW `v_<batchId>` snapshot of the
+    * chain ([[commitSnapshot]]); the highest version is the current
+    * table and the superseded snapshot is retired after the new one
+    * lands. The per-batch merge semantics are those of a transactional
+    * table format's MERGE.
     *
     * Restart safety: foreachBatch may re-deliver a batch after a crash,
     * but the merge is idempotent (upserting the same rows twice yields
@@ -631,91 +680,17 @@ object Streams {
     *
     * Returns the final table: the latest row per `keys` by `versionCol`.
     */
-  /** The reusable snapshot-chain MERGE sink: upsert one micro-batch
-    * into the versioned parquet table at `tablePath`, keyed by `keys`
-    * with latest-wins on `versionCol`. Shared by
-    * [[upsertStreamToTable]] (CDC rows) and [[ohlcStreamUpdate]]
-    * (update-mode aggregates). Crash-replay safety: after a crash
-    * between the v_<batchId> write and the offset commit, this batch
-    * is REDELIVERED with the same id while v_<batchId> is already the
-    * latest snapshot. Naively merging "latest" would then lazily READ
-    * the same dir the overwrite targets (overwrite deletes it first →
-    * FileNotFoundException and the only snapshot is gone). Two rules
-    * make replay safe: the merge base is the latest version STRICTLY
-    * BELOW this batch id, and a complete (committed) v_<batchId>
-    * short-circuits — the work is already durable. Superseded
-    * snapshots are retired only AFTER the new one is durable. */
-  private def snapshotChainMerge(spark: SparkSession, tablePath: String,
-                                 schema: org.apache.spark.sql.types.StructType,
-                                 keys: Seq[String], versionCol: String,
-                                 batch: DataFrame, batchId: Long): Unit = {
-    // Hadoop FS, not java.io: the snapshot chain must work on any
-    // warehouse filesystem (HDFS/object store), not just local disk
-    val hadoopPath = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = hadoopPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    def versions(): Seq[Long] =
-      (if (fs.exists(hadoopPath)) fs.listStatus(hadoopPath).toSeq
-       else Seq.empty)
-        .filter(st => st.isDirectory && st.getPath.getName.startsWith("v_"))
-        .map(_.getPath.getName.stripPrefix("v_").toLong)
-    val committed = new org.apache.hadoop.fs.Path(
-      s"$tablePath/v_$batchId/_SUCCESS")
-    if (!fs.exists(committed)) {
-      val base = versions().filter(_ < batchId).sorted.lastOption
-        .map(v => spark.read.parquet(s"$tablePath/v_$v"))
-        .getOrElse(spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
-      graft.ops.relational
-        .upsertLatest(base, batch, keys, versionCol)
-        .write.mode("overwrite").parquet(s"$tablePath/v_$batchId")
-    }
-    // superseded (or partial, > batchId is impossible under
-    // AvailableNow's monotone ids) snapshots go only AFTER the new
-    // one is durable
-    versions().filter(_ < batchId).foreach(v => fs.delete(
-      new org.apache.hadoop.fs.Path(s"$tablePath/v_$v"), true))
-  }
-
-  /** Read the current (highest-version) snapshot of a chain table, or
-    * an empty frame of `schema` when none exists yet. */
-  private def latestSnapshot(spark: SparkSession, tablePath: String,
-                             schema: org.apache.spark.sql.types.StructType)
-  : DataFrame = {
-    val hadoopPath = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = hadoopPath.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    (if (fs.exists(hadoopPath)) fs.listStatus(hadoopPath).toSeq
-     else Seq.empty)
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("v_"))
-      .map(_.getPath.getName.stripPrefix("v_").toLong)
-      .sorted.lastOption
-      .map(v => spark.read.parquet(s"$tablePath/v_$v"))
-      .getOrElse(spark.createDataFrame(
-        new java.util.ArrayList[org.apache.spark.sql.Row](), schema))
-  }
-
   def upsertStreamToTable(spark: SparkSession, dir: String,
                           checkpoint: String, tablePath: String,
                           keys: Seq[String], versionCol: String,
                           glob: String = "events.parquet"): DataFrame = {
     val schema = spark.read.option("pathGlobFilter", glob).parquet(dir)
       .schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
+    catchUpEachBatch(fileStream(spark, dir, glob, schema), checkpoint) {
+      (batch, batchId) =>
         snapshotChainMerge(spark, tablePath, schema, keys, versionCol,
-          batch.toDF(), batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+          batch, batchId)
+    }
     latestSnapshot(spark, tablePath, schema)
   }
 
@@ -741,14 +716,8 @@ object Streams {
                      glob: String = "events.parquet"): DataFrame = {
     val schema = spark.read.option("pathGlobFilter", glob).parquet(dir)
       .schema
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
+    catchUpEachBatch(fileStream(spark, dir, glob, schema), checkpoint) {
+      (batch, _) =>
         val ok = coalesce(pred, lit(false))
         // pinned: the published and quarantine writes would otherwise
         // each re-read the batch's source files — 2× input I/O per batch
@@ -757,20 +726,13 @@ object Streams {
           pinned.filter(ok).write.mode("append").parquet(goodPath)
           pinned.filter(!ok).write.mode("append").parquet(badPath)
         } finally pinned.unpersist(blocking = false)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     def side(path: String, tag: String): DataFrame = {
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(
+      val fs = new Path(path).getFileSystem(
         spark.sparkContext.hadoopConfiguration)
       val df =
-        if (fs.exists(new org.apache.hadoop.fs.Path(path)))
-          spark.read.schema(schema).parquet(path)
-        else spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+        if (fs.exists(new Path(path))) spark.read.schema(schema).parquet(path)
+        else emptyFrame(spark, schema)
       df.agg(count(lit(1)).as("n_rows"),
         coalesce(sum(col("value").cast("decimal(18,2)")),
           lit(java.math.BigDecimal.ZERO).cast("decimal(18,2)"))
@@ -780,29 +742,37 @@ object Streams {
     side(goodPath, "published").unionAll(side(badPath, "quarantined"))
   }
 
-  /** Restore a shared at-rest seed snapshot into a run's own MUTABLE
-    * store by file copy — the stream-startup path a production
-    * deployment takes instead of re-deriving its index from the corpus
-    * (the snapshot is built once per corpus version; each stream run
-    * copies it because the store grows per batch and the shared
-    * snapshot must stay read-only). Every destination subdir is
-    * guarded: FileUtil.copy into an EXISTING directory nests the
-    * source under it (assignment/assignment) and silently corrupts
-    * the layout, so a populated store is refused loudly. */
-  private def restoreSeed(spark: SparkSession, src: String,
-                          destBase: String, subs: Seq[String]): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    subs.foreach { sub =>
-      val from = new org.apache.hadoop.fs.Path(s"$src/$sub")
-      val to = new org.apache.hadoop.fs.Path(s"$destBase/$sub")
-      val toFs = to.getFileSystem(conf)
-      require(!toFs.exists(to),
-        s"seed restore target $to already exists — the store is " +
-          "populated; use a fresh storePath or drop seedFrom")
-      org.apache.hadoop.fs.FileUtil.copy(from.getFileSystem(conf),
-        from, toFs, to, false, conf)
+  /** Seed an index kernel's MUTABLE store once. With `seedFrom`, the
+    * `subs` of that shared at-rest snapshot are restored by file copy —
+    * the stream-startup path a production deployment takes instead of
+    * re-deriving its index from the corpus (the snapshot is built once
+    * per corpus version; each stream run copies it because the store
+    * grows per batch and the shared snapshot must stay read-only);
+    * without it, `build` writes them from the corpus. Both write the
+    * last of `subs` last, so when that one is committed an earlier run
+    * over the same checkpoint already seeded — and since grew — the
+    * store, and a restart keeps it as it is. Every restore target is
+    * guarded: FileUtil.copy into an EXISTING directory nests the source
+    * under it (assignment/assignment) and silently corrupts the layout,
+    * so a populated store is refused loudly. */
+  private def seedStore(spark: SparkSession, store: String,
+                        subs: Seq[String], seedFrom: Option[String])
+                       (build: => Unit): Unit =
+    if (!committed(spark, s"$store/${subs.last}")) seedFrom match {
+      case Some(src) =>
+        val conf = spark.sparkContext.hadoopConfiguration
+        subs.foreach { sub =>
+          val from = new Path(s"$src/$sub")
+          val to = new Path(s"$store/$sub")
+          val toFs = to.getFileSystem(conf)
+          require(!toFs.exists(to),
+            s"seed restore target $to already exists — the store is " +
+              "populated; use a fresh storePath or drop seedFrom")
+          org.apache.hadoop.fs.FileUtil.copy(from.getFileSystem(conf),
+            from, toFs, to, false, conf)
+        }
+      case None => build
     }
-  }
 
   /** Compact a grow-by-append parquet store IN PLACE once it holds
     * more than `maxFiles` part files: snapshot the current file list,
@@ -862,41 +832,195 @@ object Streams {
                      glob: String = "documents.parquet"): DataFrame = {
     import graft.dedup.Dedup
     val docs = spark.read.option("pathGlobFilter", glob).parquet(dir)
-    val schema = docs.schema
     // the persisted dedup index, built once — every batch probes it
     val corpusSets = Dedup.shingleSets(
       docs.filter(col("doc_id") % 17 =!= 0), "doc_id", "text", 3)
     val corpusIndex = Dedup.bandedBuckets(corpusSets, numPerms, numBands)
       .stage()
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
+    val stream = fileStream(spark, dir, glob, docs.schema)
       .filter(col("doc_id") % 17 === 0)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       _: Long) =>
-        val arrivals = batch.toDF().persist()
-        try {
-          val dups = Dedup.incrementalNearDupsIndexed(arrivals,
-            corpusSets, corpusIndex, "doc_id", "text",
-            numPerms, numBands, threshold)
-            .groupBy(col("new_id").as("doc_id"))
-            .agg(count(lit(1)).as("n_dups"))
-          arrivals.select(col("doc_id"))
-            .join(dups, Seq("doc_id"), "left")
-            .select(col("doc_id"), col("n_dups").isNull.as("keep"),
-              coalesce(col("n_dups"), lit(0L)).as("n_dups"))
-            .write.mode("append").parquet(outPath)
-        } finally arrivals.unpersist(blocking = false)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    catchUpEachBatch(stream, checkpoint) { (batch, _) =>
+      val arrivals = batch.persist()
+      try {
+        val dups = Dedup.incrementalNearDupsIndexed(arrivals,
+          corpusSets, corpusIndex, "doc_id", "text",
+          numPerms, numBands, threshold)
+          .groupBy(col("new_id").as("doc_id"))
+          .agg(count(lit(1)).as("n_dups"))
+        arrivals.select(col("doc_id"))
+          .join(dups, Seq("doc_id"), "left")
+          .select(col("doc_id"), col("n_dups").isNull.as("keep"),
+            coalesce(col("n_dups"), lit(0L)).as("n_dups"))
+          .write.mode("append").parquet(outPath)
+      } finally arrivals.unpersist(blocking = false)
+    }
     spark.read.parquet(outPath)
+  }
+
+  // ---- the at-rest index kernels -------------------------------------------
+  // One kernel per index, shared by its single stream and by
+  // ingestTrioStream: constructing a kernel seeds its store
+  // ([[seedStore]]: restored from a prebuilt snapshot or built from the
+  // corpus slice — the same deterministic computation over the same
+  // slice either way), `step` folds one persisted micro-batch in, and
+  // `view` reads the final state.
+
+  private val labelsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("comp", LongType)))
+  private val reportSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("n_positions", LongType),
+    StructField("n_dup_positions", LongType)))
+
+  /** What one CC step grew: the batch's corpus-probe pairs (staged, so
+    * counting them reads the checkpoint only) and the post-compaction
+    * (file count, byte size) of the `sets` and `buckets` stores. */
+  private final case class CcGrowth(probePairs: DataFrame,
+                                    sets: (Long, Long),
+                                    buckets: (Long, Long))
+
+  /** The near-dup CC kernel of [[ccMaintainStream]]: the LSH index
+    * (`sets` + `buckets`, grown by append) and the `labels` snapshot
+    * chain under `store`, seeded with the corpus components. */
+  private final class CcIndex(spark: SparkSession, store: String,
+                              corpus: DataFrame, seedFrom: Option[String],
+                              numPerms: Int, numBands: Int,
+                              threshold: Double, maxStoreFiles: Int) {
+    import graft.dedup.Dedup
+    seedStore(spark, store, Seq("sets", "buckets", "labels_seed"),
+        seedFrom) {
+      Dedup.seedClusterStore(corpus, "doc_id", "text", numPerms, numBands,
+        threshold, store)
+    }
+    private val seedLabels = spark.read.parquet(s"$store/labels_seed")
+    private val labelsPath = s"$store/labels"
+
+    /** Probe the pre-growth index, grow it, commit the batch's labels,
+      * then compact both index stores. None when the batch was already
+      * committed (a replay after a crash before the offset commit). */
+    def step(arrivals: DataFrame, batchId: Long): Option[CcGrowth] =
+      commitSnapshot(spark, labelsPath, batchId, seedLabels) { base =>
+        // the batch's OWN artifacts built ONCE (staged) for every
+        // consumer — corpus probe, within-batch pairs, index growth;
+        // three tokenize+hash passes collapsed to one
+        val arrSets = Dedup.shingleSets(arrivals, "doc_id", "text", 3)
+        val arrBanded = Dedup.bandedBuckets(arrSets, numPerms, numBands)
+          .stage()
+        // probe the CURRENT index (pre-growth: within-batch pairs come
+        // from the full LSH pass over the batch instead, so nothing is
+        // double-counted and nothing self-pairs). Staged EAGERLY so
+        // pre-growth semantics are enforced by execution order —
+        // without the materialization the probe would only run inside
+        // the label write, AFTER this batch appends its own signatures
+        // below, and correctness would hinge on spark.read having
+        // snapshotted the file listing at analysis time (an implicit
+        // InMemoryFileIndex timing assumption, not a contract)
+        val cross = Dedup.incrementalNearDupsFromSets(arrSets, arrBanded,
+            spark.read.parquet(s"$store/sets"),
+            spark.read.parquet(s"$store/buckets"), threshold)
+          .select(col("new_id").as("a"), col("corpus_id").as("b"))
+          .stage()
+        val within = Dedup.nearDupPairsFromIndex(arrSets, arrBanded,
+            threshold)
+          .select(col("doc_a").as("a"), col("doc_b").as("b"))
+        // grow the index BEFORE committing labels: a crash between the
+        // two re-runs the whole batch (dup appends are absorbed), the
+        // reverse order could skip growth forever
+        arrSets.write.mode("append").parquet(s"$store/sets")
+        arrBanded.write.mode("append").parquet(s"$store/buckets")
+        (Dedup.incrementalComponents(base, "doc_id", "comp",
+            cross.unionByName(within), "a", "b")
+          .select(col("doc_id"), col("comp")), cross)
+      }.map(cross => CcGrowth(cross,
+        compactStore(spark, s"$store/sets", maxStoreFiles),
+        compactStore(spark, s"$store/buckets", maxStoreFiles)))
+
+    /** The committed (doc_id, comp) labels. */
+    def view: DataFrame = latestSnapshot(spark, labelsPath, labelsSchema)
+  }
+
+  /** The exact-substring kernel of [[saMaintainStream]]: the probe
+    * index (`gram_positions` membership log + `gram_stats` per-shard
+    * rollups, grown by append), its `seed_report`, and the `report`
+    * snapshot chain under `store`. */
+  private final class SaIndex(spark: SparkSession, store: String,
+                              corpus: DataFrame, seedFrom: Option[String],
+                              minLen: Int, maxStoreFiles: Int) {
+    import graft.text.SuffixArray
+    seedStore(spark, store, Seq("gram_positions", "gram_stats",
+        "seed_report"), seedFrom) {
+      SuffixArray.seedProbeStore(corpus, "doc_id", "text", minLen, store)
+    }
+    private val seedReport = spark.read.parquet(s"$store/seed_report")
+    private val reportPath = s"$store/report"
+
+    /** Probe, grow, compact, commit — the order of
+      * [[saMaintainStream]]'s scaladoc. */
+    def step(arrivals: DataFrame, batchId: Long): Unit =
+      commitSnapshot(spark, reportPath, batchId, seedReport) { base =>
+        // probe views that structurally exclude THIS batch's own
+        // contribution (replay-safe — see saMaintainStream step 1); the
+        // anti-join build side is the batch-bounded id set
+        val arrIds = arrivals.select("doc_id").distinct()
+        val posView = spark.read.parquet(s"$store/gram_positions")
+          .join(broadcast(arrIds), Seq("doc_id"), "left_anti")
+        val statsView = spark.read.parquet(s"$store/gram_stats")
+          .filter(col("shard_id") =!= lit(batchId))
+        val merged = SuffixArray.deltaDupPositions(posView, statsView,
+            base, arrivals, "doc_id", "text", minLen)
+          .stage() // EAGER: must probe pre-growth
+        // grow the index BEFORE committing the report (a crash between
+        // the two replays the batch; the appends below are excluded
+        // from its re-probe, so replay is exact)
+        val bg = SuffixArray.slidingGrams(arrivals, "doc_id", "text",
+          minLen).stage()
+        bg.write.mode("append").parquet(s"$store/gram_positions")
+        bg.groupBy("gram").agg(count(lit(1)).as("n_occ"))
+          .withColumn("shard_id", lit(batchId))
+          .write.mode("append").parquet(s"$store/gram_stats")
+        compactStore(spark, s"$store/gram_positions", maxStoreFiles)
+        compactStore(spark, s"$store/gram_stats", maxStoreFiles)
+        (merged, ())
+      }
+
+    /** The committed (doc_id, n_positions, n_dup_positions) report. */
+    def view: DataFrame = latestSnapshot(spark, reportPath, reportSchema)
+  }
+
+  /** The IVF-assignment kernel of [[annMaintainStream]]: the frozen
+    * `centroids`, the corpus `assignment` and the `assignment_delta`
+    * log (grown by append) under `store`. */
+  private final class AnnIndex(spark: SparkSession, store: String,
+                               corpus: DataFrame, seedFrom: Option[String],
+                               maxStoreFiles: Int) {
+    import graft.similarity.Similarity
+    seedStore(spark, store, Seq("assignment", "centroids"), seedFrom) {
+      Similarity.seedIvfStore(corpus, "label", store)
+    }
+    private val centroids = spark.read.parquet(s"$store/centroids")
+    private val deltaPath = s"$store/assignment_delta"
+
+    /** Append each arriving (vec_id, embedding)'s stored-index cell,
+      * tagged with the batch's `shard_id`, then compact the log. */
+    def step(arrivals: DataFrame, batchId: Long): Unit = {
+      Similarity.assignToStoredCells(arrivals, centroids)
+        .withColumn("shard_id", lit(batchId))
+        .write.mode("append").parquet(deltaPath)
+      compactStore(spark, deltaPath, maxStoreFiles)
+    }
+
+    /** (vec_id, cell): the stored corpus assignment ∪ the arrivals. */
+    def view: DataFrame = {
+      val stored = spark.read.parquet(s"$store/assignment")
+        .select(col("vec_id"), col("cell"))
+      val delta = new Path(deltaPath)
+      if (!delta.getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .exists(delta)) stored // no arrivals streamed
+      else stored.unionByName(spark.read.parquet(deltaPath)
+        // at-least-once append absorption: frozen centroids make
+        // every replay of a vec_id produce the identical cell
+        .dropDuplicates("vec_id")
+        .select(col("vec_id"), col("cell")))
+    }
   }
 
   /** ONLINE dedup-cluster maintenance — the streaming deployment of
@@ -953,50 +1077,14 @@ object Streams {
                        glob: String = "documents.parquet",
                        maxStoreFiles: Int = 32,
                        seedFrom: Option[String] = None): DataFrame = {
-    import graft.dedup.Dedup
     val docs = spark.read.option("pathGlobFilter", glob).parquet(dir)
-    val schema = docs.schema
-    val corpus = docs.filter(col("doc_id") % 17 =!= 0)
-    // seed the stores once: corpus-side index + corpus-side components
-    // — built from the corpus, or restored from the prebuilt snapshot
-    // by file copy (the sets/buckets stores grow per batch, so a
-    // SHARED snapshot is copied, never mutated in place). The inline
-    // build runs ONE shingle pass for everything — the staged
-    // sets/buckets are written AND reused for the seed pairs via
-    // nearDupPairsFromIndex (minhashLshPairs here would re-tokenize +
-    // re-hash the corpus a second time for the exact same pairs)
-    val seedLabels = seedFrom match {
-      case Some(src) =>
-        restoreSeed(spark, src, storePath,
-          Seq("sets", "buckets", "labels_seed"))
-        spark.read.parquet(s"$storePath/labels_seed")
-      case None =>
-        val sets0 = Dedup.shingleSets(corpus, "doc_id", "text", 3)
-        sets0.write.mode("overwrite").parquet(s"$storePath/sets")
-        val banded0 = Dedup.bandedBuckets(sets0, numPerms, numBands)
-          .stage()
-        banded0.write.mode("overwrite").parquet(s"$storePath/buckets")
-        Dedup.connectedComponents(
-          Dedup.nearDupPairsFromIndex(sets0, banded0, threshold),
-          "doc_a", "doc_b")
-          .select("doc_id", "comp")
-    }
-    val labelsPath = s"$storePath/labels"
-    val labelsSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("comp",
-        org.apache.spark.sql.types.LongType)))
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
-      .filter(col("doc_id") % 17 === 0)
+    val cc = new CcIndex(spark, storePath,
+      docs.filter(col("doc_id") % 17 =!= 0), seedFrom, numPerms, numBands,
+      threshold, maxStoreFiles)
     // driver-side metrics buffer: rows accumulate per batch and flush
     // in bulk (see STATE TIERING above). foreachBatch runs batches
     // sequentially on the stream thread; the final flush happens
-    // after awaitTermination — synchronized for belt and braces.
+    // after the stream ends — synchronized for belt and braces.
     val metricBuf = new scala.collection.mutable.ArrayBuffer[
       (Long, Long, Long, Long, Long, Long)]()
     def flushMetrics(): Unit = {
@@ -1014,89 +1102,25 @@ object Streams {
         ()
       }
     }
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val hadoopPath = new org.apache.hadoop.fs.Path(labelsPath)
-        val fs = hadoopPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        def versions(): Seq[Long] =
-          (if (fs.exists(hadoopPath)) fs.listStatus(hadoopPath).toSeq
-           else Seq.empty)
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith("v_"))
-            .map(_.getPath.getName.stripPrefix("v_").toLong)
-        val committed = new org.apache.hadoop.fs.Path(
-          s"$labelsPath/v_$batchId/_SUCCESS")
-        if (!fs.exists(committed)) {
-          val arrivals = batch.toDF().persist()
-          try {
-            // probe the CURRENT index (pre-growth: within-batch pairs
-            // come from the full LSH pass over the batch instead, so
-            // nothing is double-counted and nothing self-pairs).
-            // Staged EAGERLY so pre-growth semantics are enforced by
-            // execution order — without the materialization the probe
-            // would only run inside the label write, AFTER this batch
-            // appends its own signatures below, and correctness would
-            // hinge on spark.read having snapshotted the file listing
-            // at analysis time (an implicit InMemoryFileIndex timing
-            // assumption, not a contract)
-            // the batch's OWN artifacts built ONCE (staged) for every
-            // consumer — corpus probe, within-batch pairs, index
-            // growth; three tokenize+hash passes collapsed to one
-            val arrSets = Dedup.shingleSets(arrivals, "doc_id",
-              "text", 3)
-            val arrBanded = Dedup.bandedBuckets(arrSets, numPerms,
-              numBands).stage()
-            val cross = Dedup.incrementalNearDupsFromSets(arrSets,
-                arrBanded,
-                spark.read.parquet(s"$storePath/sets"),
-                spark.read.parquet(s"$storePath/buckets"), threshold)
-              .select(col("new_id").as("a"), col("corpus_id").as("b"))
-              .stage()
-            val within = Dedup.nearDupPairsFromIndex(arrSets,
-                arrBanded, threshold)
-              .select(col("doc_a").as("a"), col("doc_b").as("b"))
-            // grow the index BEFORE committing labels: a crash between
-            // the two re-runs the whole batch (dup appends are
-            // absorbed), the reverse order could skip growth forever
-            arrSets.write.mode("append").parquet(s"$storePath/sets")
-            arrBanded.write.mode("append").parquet(s"$storePath/buckets")
-            val base = versions().filter(_ < batchId).sorted.lastOption
-              .map(v => spark.read.parquet(s"$labelsPath/v_$v"))
-              .getOrElse(seedLabels)
-            Dedup.incrementalComponents(base, "doc_id", "comp",
-                cross.unionByName(within), "a", "b")
-              .select(col("doc_id"), col("comp"))
-              .write.mode("overwrite").parquet(s"$labelsPath/v_$batchId")
-            // state tiering: per-batch store metrics + in-place
-            // compaction of the grow-by-append index (see scaladoc)
-            val nProbe = cross.count() // staged — a cached-count only
-            val (setsN, setsB) = compactStore(spark,
-              s"$storePath/sets", maxStoreFiles)
-            val (bktN, bktB) = compactStore(spark,
-              s"$storePath/buckets", maxStoreFiles)
-            // buffer the row; flush rides the compaction cadence so
-            // the metrics table never costs a write job per batch
-            val flushDue = metricBuf.synchronized {
-              metricBuf += ((batchId, nProbe, setsN, setsB, bktN, bktB))
-              metricBuf.size >= maxStoreFiles
-            }
-            if (flushDue) flushMetrics()
-          } finally arrivals.unpersist(blocking = false)
+    val stream = fileStream(spark, dir, glob, docs.schema)
+      .filter(col("doc_id") % 17 === 0)
+    catchUpEachBatch(stream, checkpoint) { (batch, batchId) =>
+      val arrivals = batch.persist()
+      try cc.step(arrivals, batchId).foreach { g =>
+        // buffer the batch's store-health row; the flush rides the
+        // compaction cadence so the metrics table never costs a write
+        // job per batch
+        val flushDue = metricBuf.synchronized {
+          metricBuf += ((batchId, g.probePairs.count(), g.sets._1,
+            g.sets._2, g.buckets._1, g.buckets._2))
+          metricBuf.size >= maxStoreFiles
         }
-        versions().filter(_ < batchId).foreach(v => fs.delete(
-          new org.apache.hadoop.fs.Path(s"$labelsPath/v_$v"), true))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+        if (flushDue) flushMetrics()
+      } finally arrivals.unpersist(blocking = false)
+    }
     flushMetrics() // final flush: persist whatever the cadence buffered
-    latestSnapshot(spark, labelsPath, labelsSchema)
-      .select(col("doc_id"), col("comp"),
-        (col("doc_id") === col("comp")).as("is_canonical"))
+    cc.view.select(col("doc_id"), col("comp"),
+      (col("doc_id") === col("comp")).as("is_canonical"))
   }
 
   /** Streaming EXACT-SUBSTRING dedup maintenance — the foreachBatch
@@ -1149,96 +1173,18 @@ object Streams {
                        minLen: Int, glob: String = "documents.parquet",
                        maxStoreFiles: Int = 32,
                        seedFrom: Option[String] = None): DataFrame = {
-    import graft.text.SuffixArray
     val docs = spark.read.option("pathGlobFilter", glob).parquet(dir)
-    val schema = docs.schema
-    val corpus = docs.filter(col("doc_id") % 17 =!= 0)
-    // seed the store once — build from the corpus SA, or restore the
-    // prebuilt snapshot artifacts by file copy (the store is mutated
-    // per batch, so a SHARED snapshot is copied, never grown in place)
-    seedFrom match {
-      case Some(src) =>
-        restoreSeed(spark, src, storePath,
-          Seq("gram_positions", "gram_stats", "seed_report"))
-      case None =>
-        SuffixArray.seedProbeStore(corpus, "doc_id", "text", minLen,
-          storePath)
-    }
-    val seedReport = spark.read.parquet(s"$storePath/seed_report")
-    val reportPath = s"$storePath/report"
-    val reportSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_positions",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_dup_positions",
-        org.apache.spark.sql.types.LongType)))
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
+    val sa = new SaIndex(spark, storePath,
+      docs.filter(col("doc_id") % 17 =!= 0), seedFrom, minLen,
+      maxStoreFiles)
+    val stream = fileStream(spark, dir, glob, docs.schema)
       .filter(col("doc_id") % 17 === 0)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val hadoopPath = new org.apache.hadoop.fs.Path(reportPath)
-        val fs = hadoopPath.getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        def versions(): Seq[Long] =
-          (if (fs.exists(hadoopPath)) fs.listStatus(hadoopPath).toSeq
-           else Seq.empty)
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith("v_"))
-            .map(_.getPath.getName.stripPrefix("v_").toLong)
-        val committed = new org.apache.hadoop.fs.Path(
-          s"$reportPath/v_$batchId/_SUCCESS")
-        if (!fs.exists(committed)) {
-          val arrivals = batch.toDF().persist()
-          try {
-            val base = versions().filter(_ < batchId).sorted.lastOption
-              .map(v => spark.read.parquet(s"$reportPath/v_$v"))
-              .getOrElse(seedReport)
-            // probe views that structurally exclude THIS batch's own
-            // contribution (replay-safe — see scaladoc step 1); the
-            // anti-join build side is the batch-bounded id set
-            val arrIds = arrivals.select("doc_id").distinct()
-            val posView = spark.read
-              .parquet(s"$storePath/gram_positions")
-              .join(broadcast(arrIds), Seq("doc_id"), "left_anti")
-            val statsView = spark.read
-              .parquet(s"$storePath/gram_stats")
-              .filter(col("shard_id") =!= lit(batchId))
-            val merged = SuffixArray.deltaDupPositions(posView,
-                statsView, base, arrivals, "doc_id", "text", minLen)
-              .stage() // EAGER: must probe pre-growth
-            // grow the index BEFORE committing the report (a crash
-            // between the two replays the batch; the appends above
-            // are excluded from its re-probe, so replay is exact)
-            val bg = SuffixArray.slidingGrams(arrivals, "doc_id",
-              "text", minLen).stage()
-            bg.write.mode("append")
-              .parquet(s"$storePath/gram_positions")
-            bg.groupBy("gram").agg(count(lit(1)).as("n_occ"))
-              .withColumn("shard_id", lit(batchId))
-              .write.mode("append").parquet(s"$storePath/gram_stats")
-            compactStore(spark, s"$storePath/gram_positions",
-              maxStoreFiles)
-            compactStore(spark, s"$storePath/gram_stats",
-              maxStoreFiles)
-            merged.write.mode("overwrite")
-              .parquet(s"$reportPath/v_$batchId")
-          } finally arrivals.unpersist(blocking = false)
-        }
-        versions().filter(_ < batchId).foreach(v => fs.delete(
-          new org.apache.hadoop.fs.Path(s"$reportPath/v_$v"), true))
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    latestSnapshot(spark, reportPath, reportSchema)
+    catchUpEachBatch(stream, checkpoint) { (batch, batchId) =>
+      val arrivals = batch.persist()
+      try sa.step(arrivals, batchId)
+      finally arrivals.unpersist(blocking = false)
+    }
+    sa.view
   }
 
   /** Streaming IVF-ASSIGNMENT maintenance — the ANN-side member of the
@@ -1288,54 +1234,14 @@ object Streams {
                         glob: String = "embeddings.parquet",
                         maxStoreFiles: Int = 32,
                         seedFrom: Option[String] = None): DataFrame = {
-    import graft.similarity.Similarity
     val emb = spark.read.option("pathGlobFilter", glob).parquet(dir)
-    val schema = emb.schema
-    val corpus = emb.filter(col("vec_id") % 9 =!= 0)
-    // seed the store once — derive from the corpus, or restore the
-    // prebuilt snapshot by file copy (the store grows per batch, so a
-    // SHARED snapshot is copied, never mutated in place)
-    seedFrom match {
-      case Some(src) =>
-        restoreSeed(spark, src, storePath,
-          Seq("assignment", "centroids"))
-      case None =>
-        Similarity.seedIvfStore(corpus, "label", storePath)
-    }
-    val centroids = spark.read.parquet(s"$storePath/centroids")
-    val deltaPath = s"$storePath/assignment_delta"
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
+    val ann = new AnnIndex(spark, storePath,
+      emb.filter(col("vec_id") % 9 =!= 0), seedFrom, maxStoreFiles)
+    val stream = fileStream(spark, dir, glob, emb.schema)
       .filter(col("vec_id") % 9 === 0)
       .select((col("vec_id") + 200000L).as("vec_id"), col("embedding"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        Similarity.assignToStoredCells(batch.toDF(), centroids)
-          .withColumn("shard_id", lit(batchId))
-          .write.mode("append").parquet(deltaPath)
-        compactStore(spark, deltaPath, maxStoreFiles)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val stored = spark.read.parquet(s"$storePath/assignment")
-      .select(col("vec_id"), col("cell"))
-    val hadoopDelta = new org.apache.hadoop.fs.Path(deltaPath)
-    val fs = hadoopDelta.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(hadoopDelta)) stored // no arrivals streamed
-    else stored.unionByName(
-      spark.read.parquet(deltaPath)
-        // at-least-once append absorption: frozen centroids make
-        // every replay of a vec_id produce the identical cell
-        .dropDuplicates("vec_id")
-        .select(col("vec_id"), col("cell")))
+    catchUpEachBatch(stream, checkpoint)(ann.step)
+    ann.view
   }
 
   /** UNIFIED ingest topology — ONE arrivals stream whose foreachBatch
@@ -1351,7 +1257,7 @@ object Streams {
     * consistency three separate streams cannot pin (one could be a
     * batch ahead of another).
     *
-    * Store layout: `cc/{sets,buckets,labels}`,
+    * Store layout: `cc/{sets,buckets,labels_seed,labels}`,
     * `sa/{gram_positions,gram_stats,seed_report,report}`,
     * `ann/{assignment,centroids,assignment_delta}` — each exactly its
     * single-stream counterpart's, so every at-rest consumer (the
@@ -1359,12 +1265,15 @@ object Streams {
     * .rebuildIvfStore]], the decontamination passes) reads a trio
     * store unchanged.
     *
-    * Per-batch crash-safety is inherited kernel-by-kernel: the ANN
-    * append is absorbable (frozen centroids; dedup-on-read), CC index
-    * growth precedes the guarded label commit (duplicate appends are
-    * absorbed by the candidate join's distinct), and the SA probe
-    * structurally excludes the batch's own contribution so replay is
-    * exact. All three final states are batch-slicing-invariant, so
+    * Each batch runs the three single streams' own per-batch steps —
+    * the same [[CcIndex]], [[SaIndex]] and [[AnnIndex]] kernels, not
+    * copies — so the trio's crash safety is theirs, in this order: the
+    * ANN append first (absorbable: frozen centroids, dedup-on-read),
+    * then CC index growth before its guarded label commit (duplicate
+    * appends are absorbed by the candidate join's distinct), then the
+    * SA probe, staged before growth with the batch's own rows
+    * excluded, so replay is exact. All three final states are
+    * batch-slicing-invariant, so
     * the merged view equals the from-scratch batch computation over
     * corpus ∪ arrivals (StreamsSpec pins 3-slice ≡ batch for ALL
     * THREE artifacts out of one run; the oracle recomputes the same).
@@ -1387,193 +1296,42 @@ object Streams {
                        ccSeedFrom: Option[String] = None,
                        saSeedFrom: Option[String] = None,
                        annSeedFrom: Option[String] = None): DataFrame = {
-    import graft.dedup.Dedup
-    import graft.similarity.Similarity
-    import graft.text.SuffixArray
     val docs = spark.read.option("pathGlobFilter", glob).parquet(dir)
-    val schema = docs.schema
     val corpus = docs.filter(col("doc_id") % 17 =!= 0)
     val emb = spark.read.parquet(
       embPath.getOrElse(s"$dir/embeddings.parquet"))
-    // ---- seed the three stores, once: built from the corpus slice,
-    // or restored from the shared prebuilt snapshots by file copy
-    // (kernel-by-kernel, exactly the single-stream restore paths —
-    // the stores grow per batch, so shared snapshots are copied,
-    // never mutated in place). Restored or built, the seed content is
-    // the same deterministic computation over the same slice.
-    val seedLabels = ccSeedFrom match {
-      case Some(src) =>
-        restoreSeed(spark, src, s"$storePath/cc",
-          Seq("sets", "buckets", "labels_seed"))
-        spark.read.parquet(s"$storePath/cc/labels_seed")
-      case None =>
-        val sets0 = Dedup.shingleSets(corpus, "doc_id", "text", 3)
-        sets0.write.mode("overwrite").parquet(s"$storePath/cc/sets")
-        val banded0 = Dedup.bandedBuckets(sets0, numPerms, numBands)
-          .stage()
-        banded0.write.mode("overwrite")
-          .parquet(s"$storePath/cc/buckets")
-        Dedup.connectedComponents(
-          Dedup.nearDupPairsFromIndex(sets0, banded0, threshold),
-          "doc_a", "doc_b").select("doc_id", "comp")
-    }
-    saSeedFrom match {
-      case Some(src) =>
-        restoreSeed(spark, src, s"$storePath/sa",
-          Seq("gram_positions", "gram_stats", "seed_report"))
-      case None =>
-        SuffixArray.seedProbeStore(corpus, "doc_id", "text", minLen,
-          s"$storePath/sa")
-    }
-    val seedReport = spark.read.parquet(s"$storePath/sa/seed_report")
-    annSeedFrom match {
-      case Some(src) =>
-        restoreSeed(spark, src, s"$storePath/ann",
-          Seq("assignment", "centroids"))
-      case None =>
-        Similarity.seedIvfStore(emb.filter(col("vec_id") % 17 =!= 0),
-          "label", s"$storePath/ann")
-    }
-    val centroids = spark.read.parquet(s"$storePath/ann/centroids")
-    val labelsPath = s"$storePath/cc/labels"
-    val reportPath = s"$storePath/sa/report"
-    val deltaPath = s"$storePath/ann/assignment_delta"
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val labelsSchema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("comp", LongType)))
-    val reportSchema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("n_positions", LongType),
-      StructField("n_dup_positions", LongType)))
-    val stream = spark.readStream
-      .schema(schema)
-      .option("maxFilesPerTrigger", "1")
-      .option("pathGlobFilter", glob)
-      .parquet(dir)
+    val cc = new CcIndex(spark, s"$storePath/cc", corpus, ccSeedFrom,
+      numPerms, numBands, threshold, maxStoreFiles)
+    val sa = new SaIndex(spark, s"$storePath/sa", corpus, saSeedFrom,
+      minLen, maxStoreFiles)
+    val ann = new AnnIndex(spark, s"$storePath/ann",
+      emb.filter(col("vec_id") % 17 =!= 0), annSeedFrom, maxStoreFiles)
+    val vectors = emb.select(col("vec_id"), col("embedding"))
+    val stream = fileStream(spark, dir, glob, docs.schema)
       .filter(col("doc_id") % 17 === 0)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row],
-                       batchId: Long) =>
-        val conf = spark.sparkContext.hadoopConfiguration
-        def versions(path: String): Seq[Long] = {
-          val hp = new org.apache.hadoop.fs.Path(path)
-          val fs = hp.getFileSystem(conf)
-          (if (fs.exists(hp)) fs.listStatus(hp).toSeq else Seq.empty)
-            .filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith("v_"))
-            .map(_.getPath.getName.stripPrefix("v_").toLong)
-        }
-        def committed(path: String): Boolean = {
-          val p = new org.apache.hadoop.fs.Path(
-            s"$path/v_$batchId/_SUCCESS")
-          p.getFileSystem(conf).exists(p)
-        }
-        def dropSuperseded(path: String): Unit =
-          versions(path).filter(_ < batchId).foreach { v =>
-            val p = new org.apache.hadoop.fs.Path(s"$path/v_$v")
-            p.getFileSystem(conf).delete(p, true)
-          }
-        val arrivals = batch.toDF().persist()
-        try {
-          // ---- ANN kernel first (absorbable append — a crash after
-          // it replays the batch and dedup-on-read keeps one row) ----
-          val arrVecs = arrivals.select(col("doc_id").as("vec_id"))
-            .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-          Similarity.assignToStoredCells(arrVecs, centroids)
-            .withColumn("shard_id", lit(batchId))
-            .write.mode("append").parquet(deltaPath)
-          compactStore(spark, deltaPath, maxStoreFiles)
-          // ---- CC kernel ([[ccMaintainStream]], metrics-free) ----
-          if (!committed(labelsPath)) {
-            val arrSets = Dedup.shingleSets(arrivals, "doc_id",
-              "text", 3)
-            val arrBanded = Dedup.bandedBuckets(arrSets, numPerms,
-              numBands).stage()
-            // probe the PRE-GROWTH index, staged eagerly (execution
-            // order enforces pre-growth semantics — see the single)
-            val cross = Dedup.incrementalNearDupsFromSets(arrSets,
-                arrBanded,
-                spark.read.parquet(s"$storePath/cc/sets"),
-                spark.read.parquet(s"$storePath/cc/buckets"),
-                threshold)
-              .select(col("new_id").as("a"), col("corpus_id").as("b"))
-              .stage()
-            val within = Dedup.nearDupPairsFromIndex(arrSets,
-                arrBanded, threshold)
-              .select(col("doc_a").as("a"), col("doc_b").as("b"))
-            arrSets.write.mode("append")
-              .parquet(s"$storePath/cc/sets")
-            arrBanded.write.mode("append")
-              .parquet(s"$storePath/cc/buckets")
-            val base = versions(labelsPath).filter(_ < batchId)
-              .sorted.lastOption
-              .map(v => spark.read.parquet(s"$labelsPath/v_$v"))
-              .getOrElse(seedLabels)
-            Dedup.incrementalComponents(base, "doc_id", "comp",
-                cross.unionByName(within), "a", "b")
-              .select(col("doc_id"), col("comp"))
-              .write.mode("overwrite")
-              .parquet(s"$labelsPath/v_$batchId")
-            compactStore(spark, s"$storePath/cc/sets", maxStoreFiles)
-            compactStore(spark, s"$storePath/cc/buckets", maxStoreFiles)
-          }
-          dropSuperseded(labelsPath)
-          // ---- SA kernel ([[saMaintainStream]], replay-exact) ----
-          if (!committed(reportPath)) {
-            val base = versions(reportPath).filter(_ < batchId)
-              .sorted.lastOption
-              .map(v => spark.read.parquet(s"$reportPath/v_$v"))
-              .getOrElse(seedReport)
-            val arrIds = arrivals.select("doc_id").distinct()
-            val posView = spark.read
-              .parquet(s"$storePath/sa/gram_positions")
-              .join(broadcast(arrIds), Seq("doc_id"), "left_anti")
-            val statsView = spark.read
-              .parquet(s"$storePath/sa/gram_stats")
-              .filter(col("shard_id") =!= lit(batchId))
-            val merged = SuffixArray.deltaDupPositions(posView,
-                statsView, base, arrivals, "doc_id", "text", minLen)
-              .stage() // EAGER: must probe pre-growth
-            val bg = SuffixArray.slidingGrams(arrivals, "doc_id",
-              "text", minLen).stage()
-            bg.write.mode("append")
-              .parquet(s"$storePath/sa/gram_positions")
-            bg.groupBy("gram").agg(count(lit(1)).as("n_occ"))
-              .withColumn("shard_id", lit(batchId))
-              .write.mode("append").parquet(s"$storePath/sa/gram_stats")
-            compactStore(spark, s"$storePath/sa/gram_positions",
-              maxStoreFiles)
-            compactStore(spark, s"$storePath/sa/gram_stats",
-              maxStoreFiles)
-            merged.write.mode("overwrite")
-              .parquet(s"$reportPath/v_$batchId")
-          }
-          dropSuperseded(reportPath)
-        } finally arrivals.unpersist(blocking = false)
-        ()
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    catchUpEachBatch(stream, checkpoint) { (batch, batchId) =>
+      val arrivals = batch.persist()
+      try {
+        ann.step(arrivals.select(col("doc_id").as("vec_id"))
+          .join(vectors, "vec_id"), batchId)
+        cc.step(arrivals, batchId)
+        sa.step(arrivals, batchId)
+      } finally arrivals.unpersist(blocking = false)
+    }
     // ---- the consistent cross-index view ----
-    val labels = latestSnapshot(spark, labelsPath, labelsSchema)
-    val report = latestSnapshot(spark, reportPath, reportSchema)
-    val annStored = spark.read.parquet(s"$storePath/ann/assignment")
-      .select(col("vec_id"), col("cell"))
-    val hadoopDelta = new org.apache.hadoop.fs.Path(deltaPath)
-    val fs = hadoopDelta.getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    val annView = if (!fs.exists(hadoopDelta)) annStored
-      else annStored.unionByName(spark.read.parquet(deltaPath)
-        .dropDuplicates("vec_id").select(col("vec_id"), col("cell")))
-    report
-      .join(annView.withColumnRenamed("vec_id", "doc_id"), Seq("doc_id"))
+    val labels = cc.view
+    sa.view
+      .join(ann.view.withColumnRenamed("vec_id", "doc_id"), Seq("doc_id"))
       .join(labels, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("comp"), col("doc_id")).as("comp"),
         col("n_positions"), col("n_dup_positions"), col("cell"))
   }
 
+  /** Batch sessionization (gaps-and-islands): a new session starts when
+    * the gap to the previous event of the same user exceeds `gapMinutes`.
+    * One shuffle by user + one ordered scan — the exact shape of W1's
+    * running counter, reused on event-time. */
   def sessionizeBatch(events: DataFrame, gapMinutes: Int): DataFrame = {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
@@ -1679,16 +1437,7 @@ object Streams {
           out.iterator
       }
 
-    val sinkName = "graft_sessions_" + math.abs(checkpoint.hashCode)
-    val q = sessions.toDF().writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(sinkName)
+    catchUpToMemory(sessions.toDF(), checkpoint, "append")
   }
 
   case class StepEvent(user_id: Long, ts: java.sql.Timestamp,
@@ -1737,22 +1486,13 @@ object Streams {
           out.iterator
       }
 
-    val sinkName = "graft_markov_" + math.abs(checkpoint.hashCode)
-    val q = steps.toDF().writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     // read-time view: per-from totals as a window sum over the counts
     // (a counts⋈totals self-join over the SAME memory-sink relation
     // hits Catalyst's conflicting-attribute check — and the window
     // reuses the groupBy's hash partitioning, so it costs no shuffle)
     val wTot = org.apache.spark.sql.expressions.Window
       .partitionBy("from_type")
-    sess.table(sinkName)
+    catchUpToMemory(steps.toDF(), checkpoint, "append")
       .groupBy("from_type", "to_type")
       .agg(count(lit(1)).as("c"))
       .withColumn("tot", sum(col("c")).over(wTot))
@@ -1798,16 +1538,7 @@ object Streams {
         org.apache.spark.sql.streaming.TimeMode.None(),
         OutputMode.Append())
 
-    val sinkName = "graft_tws_sessions_" + math.abs(checkpoint.hashCode)
-    val q = sessions.toDF().writeStream
-      .format("memory")
-      .queryName(sinkName)
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    sess.table(sinkName)
+    catchUpToMemory(sessions.toDF(), checkpoint, "append")
   }
 
   /** Per-user session folder for [[sessionizeStreamTws]]: one

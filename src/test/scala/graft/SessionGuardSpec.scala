@@ -4,9 +4,9 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Session configuration, temp-dir lifetime and state partitioning are
-  * each decided in one module; this keeps copies from drifting back into
-  * `src/main`. */
+/** Session configuration, temp-dir lifetime, state partitioning and the
+  * streaming run, read and commit protocols are each decided in one
+  * place; this keeps copies from drifting back into `src/main`. */
 class SessionGuardSpec extends AnyFunSuite {
   private val root = new File("src/main/scala")
 
@@ -44,5 +44,42 @@ class SessionGuardSpec extends AnyFunSuite {
     val knob = hits("statePartitions", Set.empty)
     assert(set.isEmpty && knob.isEmpty,
       (set ++ knob).mkString("\n", "\n", ""))
+  }
+
+  /** `text` with its comments blanked (line breaks kept, so line
+    * numbers hold); string and char literals are skipped intact. */
+  private def code(text: String): String =
+    Seq("\"\"\".*?\"\"\"", // triple-quoted string
+      "\"(?:\\\\.|[^\"\\\\\n])*\"", // string
+      "'(?:\\\\.|[^'\\\\\n])'", // char
+      "/\\*.*?\\*/", "//[^\n]*") // block and line comments
+      .mkString("(?s)", "|", "").r.replaceAllIn(text, m =>
+        java.util.regex.Matcher.quoteReplacement(
+          if (m.matched.startsWith("/")) m.matched.filter(_ == '\n')
+          else m.matched))
+
+  test("catch-up runs, snapshot commits and stream reads appear only in " +
+    "Streams' helpers") {
+    val streams = "graft/streaming/Streams.scala"
+    // pattern -> the Streams defs allowed to hold it; sessionEventStream
+    // keeps its own uncapped read (each user's whole history must
+    // arrive in one batch)
+    val owners = Seq(
+      "Trigger\\.AvailableNow" -> Set("catchUp"),
+      "_SUCCESS" -> Set("committed"),
+      "\\.readStream" -> Set("fileStream", "sessionEventStream"))
+    val found = for {
+      f <- sources(root)
+      rel = root.toPath.relativize(f.toPath).toString
+      text = code(new String(java.nio.file.Files.readAllBytes(f.toPath),
+        "UTF-8"))
+      (pattern, allowed) <- owners
+      m <- pattern.r.findAllMatchIn(text).toSeq
+      enclosing = "\\bdef\\s+(\\w+)".r.findAllMatchIn(text.take(m.start))
+        .toSeq.lastOption.map(_.group(1))
+      if rel != streams || !enclosing.exists(allowed)
+    } yield s"$rel:${text.take(m.start).count(_ == '\n') + 1}: " +
+      s"${m.matched} in ${enclosing.getOrElse("<no def>")}"
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

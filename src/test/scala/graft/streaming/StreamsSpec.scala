@@ -945,4 +945,148 @@ class StreamsSpec extends SparkSpec {
           .as("sum_value")).collect().toSet
     assert(restarted === batch)
   }
+
+  test("memory-sink streams drop their sink views and keep their rows") {
+    // the sink's temp view would otherwise pin every result row on the
+    // driver for the session's lifetime
+    val dir = sf0001
+    def sinkViews(df: DataFrame): Seq[String] =
+      df.sparkSession.catalog.listTables().collect().toSeq.map(_.name)
+        .filter(_.startsWith("graft_"))
+    val daily = Streams.dailyEventAgg(spark, dir,
+      scratch(spark, "graft_ckpt_views_daily"))
+    val enriched = Streams.enrichStream(spark, dir,
+      scratch(spark, "graft_ckpt_views_enrich"))
+    assert(sinkViews(daily).isEmpty, sinkViews(daily))
+    assert(sinkViews(enriched).isEmpty, sinkViews(enriched))
+    val dailyBatch = Tables.events(spark, dir)
+      .groupBy(to_date(date_trunc("day", col("ts"))).as("day"),
+        col("event_type"))
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("value").cast("decimal(18,2)")).cast("double")
+          .as("sum_value"))
+    assert(daily.select(to_date(col("day")).as("day"), col("event_type"),
+        col("cnt"), col("sum_value")).collect().toSet ===
+      dailyBatch.collect().toSet)
+    val enrichBatch = Tables.events(spark, dir)
+      .select(col("event_id"), col("event_type"),
+        pmod(col("user_id"), lit(25)).as("nk"))
+      .join(spark.read.parquet(s"$dir/nation.parquet")
+        .select(col("n_nationkey"), col("n_name")),
+        col("nk") === col("n_nationkey"))
+      .select(col("event_id"), col("event_type"), col("n_name"))
+    assert(enriched.collect().toSet === enrichBatch.collect().toSet)
+  }
+
+  /** `table` of sf0.001 split in `orderCol` order into `n` files of a
+    * fresh dir, which a file stream reads as `n` micro-batches. */
+  private def sliced(table: String, orderCol: String, n: Int,
+                     name: String): String = {
+    val dir = scratch(spark, name)
+    val raw = spark.read.parquet(s"$sf0001/$table.parquet").orderBy(orderCol)
+    val rows = raw.collect()
+    rows.grouped(rows.length / n + 1).zipWithIndex.foreach { case (part, i) =>
+      val staging = scratch(spark, s"${name}_st_$i")
+      spark.createDataFrame(java.util.Arrays.asList(part: _*), raw.schema)
+        .coalesce(1).write.mode("overwrite").parquet(staging)
+      val file = new java.io.File(staging).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.move(file.toPath,
+        java.nio.file.Paths.get(s"$dir/${table}_$i.parquet"))
+    }
+    dir
+  }
+
+  private def commitIds(ckpt: String): Seq[Long] =
+    new java.io.File(s"$ckpt/commits").listFiles().toSeq
+      .filter(_.getName.forall(_.isDigit)).map(_.getName.toLong).sorted
+
+  /** Delete the last offset commit (and its local-FS `.crc` sibling,
+    * whose staleness would fail the re-commit's rename): the state a
+    * crash between a batch's sink work and its commit leaves behind. */
+  private def dropLastCommit(ckpt: String): Unit = {
+    val last = commitIds(ckpt).last
+    assert(new java.io.File(s"$ckpt/commits/$last").delete())
+    val crc = new java.io.File(s"$ckpt/commits/.$last.crc")
+    if (crc.exists()) assert(crc.delete())
+  }
+
+  private def versionDirs(chain: String): Int =
+    new java.io.File(chain).listFiles()
+      .count(f => f.isDirectory && f.getName.startsWith("v_"))
+
+  /** The distinct rows of each grown store under `store`. */
+  private def storeRows(store: String, subs: Seq[String]): Seq[Set[Row]] =
+    subs.map(sub => spark.read.parquet(s"$store/$sub").collect().toSet)
+
+  /** Run `stream` over `ckpt` to the end, crash it before its last
+    * offset commit, and restart it in a fresh session (the first
+    * session's StreamingQueryManager still holds the checkpoint; a real
+    * restart is a new driver). The replay must reproduce the result,
+    * re-commit the batch, keep one `v_*` dir in each of `chains`, and
+    * keep the grown `stores` under `store` instead of re-seeding them. */
+  private def assertCrashReplay[T](ckpt: String, store: String,
+                                   chains: Seq[String],
+                                   stores: Seq[String])
+                                  (stream: SparkSession => Set[T]): Unit = {
+    val whole = stream(spark)
+    val commits = commitIds(ckpt)
+    assert(commits.length > 1, "the fixture must stream several batches")
+    val grown = storeRows(store, stores)
+    dropLastCommit(ckpt)
+    assert(stream(spark.newSession()) === whole,
+      "crash-replay must reproduce the result")
+    assert(commitIds(ckpt) === commits, "the replayed batch re-commits")
+    chains.foreach(c => assert(versionDirs(s"$store/$c") === 1, c))
+    // a plain Boolean: the row sets are too large for a useful diff
+    val kept = storeRows(store, stores) == grown
+    assert(kept, "a restart must keep the grown stores")
+  }
+
+  test("cc maintain stream: a crash before the last offset commit " +
+    "replays to the uninterrupted result") {
+    val docs = sliced("documents", "doc_id", 3, "graft_ccm_crash")
+    val ckpt = scratch(spark, "graft_ckpt_ccm_crash")
+    val store = scratch(spark, "graft_ccm_crash_store")
+    assertCrashReplay(ckpt, store, Seq("labels"), Seq("sets", "buckets")) {
+      s => Streams.ccMaintainStream(s, docs, ckpt, store, numPerms = 8,
+          numBands = 4, threshold = 0.8, glob = "*.parquet")
+        .as[(Long, Long, Boolean)].collect().toSet
+    }
+  }
+
+  test("sa maintain stream: a crash before the last offset commit " +
+    "replays to the uninterrupted result") {
+    val docs = sliced("documents", "doc_id", 3, "graft_sam_crash")
+    val ckpt = scratch(spark, "graft_ckpt_sam_crash")
+    val store = scratch(spark, "graft_sam_crash_store")
+    assertCrashReplay(ckpt, store, Seq("report"),
+        Seq("gram_positions", "gram_stats")) {
+      s => Streams.saMaintainStream(s, docs, ckpt, store, minLen = 5,
+          glob = "*.parquet")
+        .as[(Long, Long, Long)].collect().toSet
+    }
+  }
+
+  test("ingest trio stream: a crash before the last offset commit " +
+    "replays to the uninterrupted result") {
+    // seeded from the shared snapshots, as q_stream_ingest_trio runs:
+    // the restart must find its store seeded, not restore over it
+    import graft.{ExtensionQueries => EQ}
+    val docs = sliced("documents", "doc_id", 3, "graft_trio_crash")
+    val ckpt = scratch(spark, "graft_ckpt_trio_crash")
+    val store = scratch(spark, "graft_trio_crash_store")
+    val (ccSeed, saSeed, annSeed) = (EQ.ccStreamSeedDir(spark, sf0001),
+      EQ.saStreamSeedDir(spark, sf0001), EQ.annTrioSeedDir(spark, sf0001))
+    assertCrashReplay(ckpt, store, Seq("cc/labels", "sa/report"),
+        Seq("cc/sets", "cc/buckets", "sa/gram_positions", "sa/gram_stats",
+          "ann/assignment_delta")) {
+      s => Streams.ingestTrioStream(s, docs, ckpt, store, numPerms = 8,
+          numBands = 4, threshold = 0.8, minLen = 5, glob = "*.parquet",
+          embPath = Some(s"$sf0001/embeddings.parquet"),
+          ccSeedFrom = Some(ccSeed), saSeedFrom = Some(saSeed),
+          annSeedFrom = Some(annSeed))
+        .as[(Long, Long, Long, Long, Int)].collect().toSet
+    }
+  }
 }
