@@ -818,7 +818,7 @@ object Dedup {
       // ids, so the self-join always resolves); my own label.
       // shuffle_hash: build the node-sized labels side and stream the
       // E-row sym frame unsorted — the default SortMergeJoin re-sorts
-      // sym every round (guide §3.1; the Graph.runPageRank idiom)
+      // sym every round (guide §3.1; the Graph.powerIterate idiom)
       val viaNeighbors = sym.join(labels.hint("shuffle_hash"),
           sym("dst") === labels("id"))
         .select(sym("src").as("id"), col("comp"))

@@ -1,7 +1,7 @@
 package graft.graph
 
 import graft.Staging._
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph analytics over edge DataFrames.
@@ -46,11 +46,11 @@ object Graph {
     * Shape per iteration: ranks ⋈ out-degreed edges on `src` (one
     * shuffle on src), contributions re-keyed and summed per `dst` (one
     * shuffle on dst), left-join back onto the node set so in-degree-0
-    * nodes keep their teleport share. Edges + degrees are staged ONCE
-    * (`Staging.stage`) and reused by every iteration; each iteration
-    * is checkpointed so lineage stays flat — the driver never sees a
-    * row. At 100 TB the edge list partitioning on `src` is reused
-    * across all k ranks⋈edges joins.
+    * nodes keep their teleport share. Edges + degrees are persisted
+    * ONCE, hash-partitioned on `src`, and reused by every iteration,
+    * whose joins exchange only the node-sized side; each iteration is
+    * checkpointed so lineage stays flat — the driver never sees a row.
+    * All variants run one kernel, [[powerIterate]].
     *
     * damping is expressed as a percent (85 ≡ 0.85) to stay integer.
     *
@@ -58,7 +58,7 @@ object Graph {
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
                iterations: Int, dampingPct: Int = 85): DataFrame =
-    runPageRank(edges, srcCol, dstCol, iterations, dampingPct,
+    unweighted(edges, srcCol, dstCol, None, iterations, dampingPct,
       stopOnFixpoint = false)._1
 
   /** [[pageRank]] with convergence-based stopping: runs until the
@@ -76,11 +76,20 @@ object Graph {
     * logged and returned so callers can record convergence behavior. */
   def pageRankConverged(edges: DataFrame, srcCol: String, dstCol: String,
                         maxIterations: Int = 50, dampingPct: Int = 85)
-  : (DataFrame, Int) = {
-    val (ranks, iters) = runPageRank(edges, srcCol, dstCol,
-      maxIterations, dampingPct, stopOnFixpoint = true)
-    (ranks, iters)
-  }
+  : (DataFrame, Int) =
+    unweighted(edges, srcCol, dstCol, None, maxIterations, dampingPct,
+      stopOnFixpoint = true)
+
+  /** [[powerIterate]] over unweighted edges: each out-edge carries
+    * rank div out-degree. */
+  private def unweighted(edges: DataFrame, srcCol: String, dstCol: String,
+                         seeds: Option[DataFrame], iterations: Int,
+                         dampingPct: Int, stopOnFixpoint: Boolean)
+  : (DataFrame, Int) =
+    powerIterate(edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst")),
+      count(lit(1)), "rank_micro div out", seeds, iterations, dampingPct,
+      stopOnFixpoint)
 
   /** Checksum metric for an integer-valued per-node state frame: the
     * sum of each row's 64-bit hash, exact in decimal. Consecutive-round
@@ -89,15 +98,28 @@ object Graph {
     * round's OWN staging action ([[graft.Staging.stageObserved]]), so
     * fixpoint detection costs zero extra jobs — previously a separate
     * aggregation scan ran per round. */
-  private def checksumMetric(cols: Seq[String])
-  : org.apache.spark.sql.Column =
+  private def checksumMetric(cols: Seq[String]): Column =
     coalesce(
       sum(xxhash64(cols.map(col): _*).cast("decimal(38,0)")),
       lit(0).cast("decimal(38,0)")).as("ck")
 
-  private def runPageRank(edges: DataFrame, srcCol: String,
-                          dstCol: String, iterations: Int,
-                          dampingPct: Int, stopOnFixpoint: Boolean)
+  /** The power-iteration kernel behind [[pageRank]],
+    * [[pageRankConverged]], [[personalizedPageRank]] and
+    * [[pageRankWeighted]]: one round is
+    * teleport + d·(in_sum + sink_share) div 100 per node, where in_sum
+    * sums `share` over the node's in-edges.
+    *
+    * @param edges pipeline with long `src`, `dst` and whatever `share`
+    *              reads; staged here once, after validation
+    * @param out   per-`src` aggregate the contribution divides by
+    *              (out-degree or out-weight), exposed to `share` as `out`
+    * @param share per-edge contribution of the source's `rank_micro`
+    * @param seeds None: uniform teleport over all N nodes; Some: teleport
+    *              to the seeds (column `node`) that appear in the graph
+    */
+  private def powerIterate(edges: DataFrame, out: Column, share: String,
+                           seeds: Option[DataFrame], iterations: Int,
+                           dampingPct: Int, stopOnFixpoint: Boolean)
   : (DataFrame, Int) = {
     require(iterations >= 1, s"iterations must be >= 1: $iterations")
     require(dampingPct >= 0 && dampingPct <= 100,
@@ -105,9 +127,7 @@ object Graph {
 
     // stage the (possibly expensive) edge pipeline once — nodes, degrees,
     // and the iteration join all read it
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .stage()
+    val e = edges.stage()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
@@ -119,101 +139,112 @@ object Graph {
     // return the empty frame instead of dividing by zero below
     if (n == 0L)
       return (nodes.select(col("node"), lit(0L).as("rank_micro")), 0)
-    // (1 - d) * SCALE / N in pure integer: ((100 - d) * SCALE div 100) div N
-    val teleport = ((100L - dampingPct) * Scale / 100L) / n
 
-    // out-degree joined onto the edge list once, hash-partitioned on the
-    // join key and persisted (NOT checkpointed: persist keeps
-    // outputPartitioning visible to the planner, so each iteration
-    // shuffles only the small ranks side — the E-row edge list is
-    // exchanged exactly once no matter how many iterations run)
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("out"))
+    // `out` joined onto the edge list once, hash-partitioned on the join
+    // key and persisted, so the E-row edge list is exchanged once however
+    // many rounds run (see [[graft.Staging]] on persist vs stage); every
+    // exit below, a thrown `require` included, releases it
+    val outDeg = e.groupBy("src").agg(out.as("out"))
     val eDeg = e.join(outDeg, "src").repartition(col("src")).persist()
-
-    // dangling-node flag staged onto the node set ONCE: nodes absent
-    // from outDeg are sinks whose mass must be redistributed. nSinks is
-    // one bounded driver scalar; when it is 0 (symmetrized graphs) the
-    // per-round sink aggregation never runs and the update expression
-    // is the sink-free one, unchanged to the bit.
-    val flagged = nodes
-      .join(outDeg.select(col("src").as("node"),
+    try {
+      // dangling-node (and seed) flags staged onto the node set ONCE:
+      // nodes absent from outDeg are sinks whose mass must be
+      // redistributed. nSinks is one bounded driver scalar; when it is 0
+      // (symmetrized graphs) the per-round sink aggregation never runs
+      // and the update expression is the sink-free one, unchanged to the
+      // bit.
+      val withOut = nodes.join(outDeg.select(col("src").as("node"),
         lit(true).as("has_out")), Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("has_out"), lit(false)).as("has_out"))
-      .stage()
-    val nSinks = flagged.filter(!col("has_out")).count()
+      val flagged = seeds.fold(withOut)(s => withOut.join(
+          s.select(col("node").cast("long").as("node")).distinct()
+            .select(col("node"), lit(true).as("is_seed")),
+          Seq("node"), "left"))
+        .select(Seq(col("node"),
+          coalesce(col("has_out"), lit(false)).as("has_out")) ++
+          seeds.map(_ => coalesce(col("is_seed"), lit(false))
+            .as("is_seed")): _*)
+        .stage()
+      val nSinks = flagged.filter(!col("has_out")).count()
+      // (1 - d) * SCALE shared out in pure integer: over all N nodes, or
+      // over the seeds only ((100 - d) * SCALE div 100) div |seeds|
+      val pool = (100L - dampingPct) * Scale / 100L
+      val teleport = seeds match {
+        case None => lit(pool / n)
+        case Some(_) =>
+          val nSeeds = flagged.filter(col("is_seed")).count()
+          require(nSeeds > 0, "no seed appears in the graph")
+          when(col("is_seed"), lit(pool / nSeeds)).otherwise(lit(0L))
+      }
+      val carried = flagged.columns.toSeq.map(col)
 
-    // each iteration is checkpointed (the Pregel pattern, same as CC's
-    // rounds): measured at sf0.1 the per-round materialization runs the
-    // 3-iteration loop in ~3 s where the single fused lazy plan took
-    // ~12 s — one deep composite plan re-plans every iteration's join
-    // tree together and the optimizer/AQE cost grows superlinearly with
-    // depth, while per-round checkpoints keep every job the same small
-    // shape and the lineage flat at ANY iteration count
-    var ranks = flagged.select(col("node"), col("has_out"),
-      lit(Scale / n).as("rank_micro"))
-    // initial sink mass in closed form — ranks start uniform, so no job
-    var sinkSum: Long = nSinks * (Scale / n)
-    var prevSum: java.math.BigDecimal = null
-    var iter = 0
-    var converged = false
-    while (iter < iterations && !converged) {
-      // previous round's sink mass shared out per node: carried by the
-      // previous staging action's observation (zero extra jobs);
-      // symmetrized graphs have sinkSum = 0 throughout
-      val sinkShare: Long = if (nSinks == 0L) 0L else sinkSum / n
-      // shuffle_hash on the node-sized sides (guide §3.1): the default
-      // SortMergeJoin re-SORTS the persisted E-row eDeg side every
-      // round (persist pins rows, not order). Hashing builds the
-      // bounded ranks/contrib side instead and streams eDeg unsorted —
-      // per round: one exchange of the node-sized frame, zero E-row
-      // sorts. (At plan-time-known small sizes Spark may still pick
-      // broadcast, which is strictly better; at scale the hint holds.)
-      val contrib = eDeg.join(ranks.hint("shuffle_hash"),
-          eDeg("src") === ranks("node"))
-        .select(eDeg("dst").as("node"),
-          expr("rank_micro div out").as("c"))
-        .groupBy("node")
-        .agg(sum(col("c")).as("in_sum"))
-      val next = flagged.join(contrib.hint("shuffle_hash"),
-          Seq("node"), "left")
-        .select(col("node"), col("has_out"),
-          (lit(teleport) +
+      // each iteration is checkpointed (the Pregel pattern, same as CC's
+      // rounds): measured at sf0.1 the per-round materialization runs the
+      // 3-iteration loop in ~3 s where the single fused lazy plan took
+      // ~12 s — one deep composite plan re-plans every iteration's join
+      // tree together and the optimizer/AQE cost grows superlinearly with
+      // depth, while per-round checkpoints keep every job the same small
+      // shape and the lineage flat at ANY iteration count
+      var ranks = flagged.select(carried :+
+        lit(Scale / n).as("rank_micro"): _*)
+      // initial sink mass in closed form — ranks start uniform, so no job
+      var sinkSum: Long = nSinks * (Scale / n)
+      var prevSum: java.math.BigDecimal = null
+      var iter = 0
+      var converged = false
+      while (iter < iterations && !converged) {
+        // previous round's sink mass shared out per node: carried by the
+        // previous staging action's observation (zero extra jobs);
+        // symmetrized graphs have sinkSum = 0 throughout
+        val sinkShare: Long = if (nSinks == 0L) 0L else sinkSum / n
+        // shuffle_hash on the node-sized sides (guide §3.1): the default
+        // SortMergeJoin re-SORTS the persisted E-row eDeg side every
+        // round (persist pins rows, not order). Hashing builds the
+        // bounded ranks/contrib side instead and streams eDeg unsorted —
+        // per round: one exchange of the node-sized frame, zero E-row
+        // sorts. (At plan-time-known small sizes Spark may still pick
+        // broadcast, which is strictly better; at scale the hint holds.)
+        val contrib = eDeg.join(ranks.hint("shuffle_hash"),
+            eDeg("src") === ranks("node"))
+          .select(eDeg("dst").as("node"), expr(share).as("c"))
+          .groupBy("node")
+          .agg(sum(col("c")).as("in_sum"))
+        val next = flagged.join(contrib.hint("shuffle_hash"),
+            Seq("node"), "left")
+          .select(carried :+ (teleport +
             expr(s"($dampingPct * (coalesce(in_sum, 0L) + $sinkShare))" +
-              " div 100"))
-            .as("rank_micro"))
-      // fixpoint checksum and next sink sum both ride the round's own
-      // checkpoint job as observe() metrics — the loop runs exactly one
-      // job per iteration regardless of convergence mode or sinks
-      if (stopOnFixpoint || nSinks > 0L) {
-        val metrics =
-          (if (stopOnFixpoint)
-            Seq(checksumMetric(Seq("node", "rank_micro"))) else Nil) ++
-          (if (nSinks > 0L)
-            Seq(coalesce(sum(when(!col("has_out"), col("rank_micro"))),
-              lit(0L)).cast("long").as("sink_sum")) else Nil)
-        val (staged, row) = graft.Staging.stageObserved(next, metrics: _*)
-        ranks = staged
-        if (nSinks > 0L) sinkSum = row("sink_sum").asInstanceOf[Long]
-        if (stopOnFixpoint) {
-          val s = row("ck").asInstanceOf[java.math.BigDecimal]
-          converged = prevSum != null && s.compareTo(prevSum) == 0
-          prevSum = s
-        }
-      } else ranks = next.stage()
-      iter += 1
-    }
-    eDeg.unpersist()
-    if (stopOnFixpoint) {
-      if (converged)
-        log.info(s"pageRankConverged: fixpoint after $iter iterations " +
-          s"(cap $iterations)")
-      else
-        log.info(s"pageRankConverged: cap $iterations reached WITHOUT " +
-          "a fixpoint (integer limit cycle) — ranks are within one " +
-          "unit of stationary")
-    }
-    (ranks.select(col("node"), col("rank_micro")), iter)
+              " div 100")).as("rank_micro"): _*)
+        // fixpoint checksum and next sink sum both ride the round's own
+        // checkpoint job as observe() metrics — the loop runs exactly one
+        // job per iteration regardless of convergence mode or sinks
+        if (stopOnFixpoint || nSinks > 0L) {
+          val metrics =
+            (if (stopOnFixpoint)
+              Seq(checksumMetric(Seq("node", "rank_micro"))) else Nil) ++
+            (if (nSinks > 0L)
+              Seq(coalesce(sum(when(!col("has_out"), col("rank_micro"))),
+                lit(0L)).cast("long").as("sink_sum")) else Nil)
+          val (staged, row) = graft.Staging.stageObserved(next, metrics: _*)
+          ranks = staged
+          if (nSinks > 0L) sinkSum = row("sink_sum").asInstanceOf[Long]
+          if (stopOnFixpoint) {
+            val s = row("ck").asInstanceOf[java.math.BigDecimal]
+            converged = prevSum != null && s.compareTo(prevSum) == 0
+            prevSum = s
+          }
+        } else ranks = next.stage()
+        iter += 1
+      }
+      if (stopOnFixpoint) {
+        if (converged)
+          log.info(s"pageRankConverged: fixpoint after $iter iterations " +
+            s"(cap $iterations)")
+        else
+          log.info(s"pageRankConverged: cap $iterations reached WITHOUT " +
+            "a fixpoint (integer limit cycle) — ranks are within one " +
+            "unit of stationary")
+      }
+      (ranks.select(col("node"), col("rank_micro")), iter)
+    } finally eDeg.unpersist()
   }
 
   /** Global triangle count over an UNDIRECTED edge list (one row per
@@ -444,11 +475,9 @@ object Graph {
     val e0 = edges.select(col(aCol).cast("long").as("a"),
       col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-    // like pageRank's eDeg: persist WITH a visible src partitioning
-    // (stage()'s checkpoint would erase outputPartitioning), so each
-    // round's edges⋈labels join exchanges only the node-sized labels
-    // side — the E-row edge list is shuffled exactly once, not once
-    // per round
+    // persisted on src (see [[graft.Staging]] on persist vs stage), so
+    // each round's edges⋈labels join exchanges only the node-sized
+    // labels side — the E-row edge list is shuffled once, not per round
     val e = e0.select(col("a").as("src"), col("b").as("dst"))
       .union(e0.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
@@ -476,7 +505,7 @@ object Graph {
       // of agg + sort-window; GraphSpec's sync-replica test pins the
       // tie-break either way)
       // shuffle_hash: build the node-sized labels side, stream the
-      // persisted E-row edge list unsorted (see runPageRank's rationale)
+      // persisted E-row edge list unsorted (see powerIterate's rationale)
       val next = e.join(labels.hint("shuffle_hash"),
           e("src") === labels("node"))
         .select(e("dst").as("node"), col("community"))
@@ -622,7 +651,7 @@ object Graph {
       // hub-heavy graph (indeg·Scale), exactly why DuckDB's SUM(BIGINT)
       // returns HUGEINT — the decimal keeps the two engines bit-equal
       // shuffle_hash both directions: build the node-sized score side,
-      // stream the persisted E-row list unsorted (runPageRank rationale)
+      // stream the persisted E-row list unsorted (powerIterate rationale)
       val aRaw = eBySrc.join(hubs.hint("shuffle_hash"),
           eBySrc("src") === hubs("node"))
         .groupBy(eBySrc("dst").as("node"))
@@ -674,11 +703,9 @@ object Graph {
     * is teleport_i + d·(in_sum + sink_share) div 100 where teleport_i =
     * ((100−d)·Scale/100)/|seeds| for seeds and 0 elsewhere; dangling
     * mass redistributes uniformly as in [[pageRank]]. Seeds appearing
-    * nowhere in the edge list are ignored (they can hold no mass).
-    *
-    * Shape per iteration is identical to [[pageRank]]: the E-row edge
-    * list shuffles once total, the node-sized rank frame per round,
-    * sink totals ride each round's own staging action.
+    * nowhere in the edge list are ignored (they can hold no mass); a
+    * call where none appears fails. Runs [[pageRank]]'s kernel,
+    * [[powerIterate]], with the seed-only teleport.
     *
     * @param seeds one column `node` (long-castable)
     * @return (node: long, rank_micro: long)
@@ -686,67 +713,9 @@ object Graph {
   def personalizedPageRank(edges: DataFrame, srcCol: String,
                            dstCol: String, seeds: DataFrame,
                            iterations: Int, dampingPct: Int = 85)
-  : DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1: $iterations")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"dampingPct must be in [0,100]: $dampingPct")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .stage()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .stage()
-    val n = nodes.count()
-    if (n == 0L)
-      return nodes.select(col("node"), lit(0L).as("rank_micro"))
-    val outDeg = e.groupBy("src").agg(count(lit(1)).as("out"))
-    val eDeg = e.join(outDeg, "src").repartition(col("src")).persist()
-    val flagged = nodes
-      .join(outDeg.select(col("src").as("node"),
-        lit(true).as("has_out")), Seq("node"), "left")
-      .join(seeds.select(col("node").cast("long").as("node"))
-        .distinct().select(col("node"), lit(true).as("is_seed")),
-        Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("has_out"), lit(false)).as("has_out"),
-        coalesce(col("is_seed"), lit(false)).as("is_seed"))
-      .stage()
-    val nSinks = flagged.filter(!col("has_out")).count()
-    val nSeeds = flagged.filter(col("is_seed")).count()
-    require(nSeeds > 0, "no seed appears in the graph")
-    val teleportSeed = ((100L - dampingPct) * Scale / 100L) / nSeeds
-    var ranks = flagged.select(col("node"), col("has_out"),
-      col("is_seed"), lit(Scale / n).as("rank_micro"))
-    var sinkSum: Long = nSinks * (Scale / n)
-    var iter = 0
-    while (iter < iterations) {
-      val sinkShare: Long = if (nSinks == 0L) 0L else sinkSum / n
-      val contrib = eDeg.join(ranks.hint("shuffle_hash"),
-          eDeg("src") === ranks("node"))
-        .select(eDeg("dst").as("node"),
-          expr("rank_micro div out").as("c"))
-        .groupBy("node")
-        .agg(sum(col("c")).as("in_sum"))
-      val next = flagged.join(contrib.hint("shuffle_hash"),
-          Seq("node"), "left")
-        .select(col("node"), col("has_out"), col("is_seed"),
-          (when(col("is_seed"), lit(teleportSeed)).otherwise(lit(0L)) +
-            expr(s"($dampingPct * (coalesce(in_sum, 0L) + $sinkShare))" +
-              " div 100"))
-            .as("rank_micro"))
-      if (nSinks > 0L) {
-        val (staged, row) = graft.Staging.stageObserved(next,
-          coalesce(sum(when(!col("has_out"), col("rank_micro"))),
-            lit(0L)).cast("long").as("sink_sum"))
-        ranks = staged
-        sinkSum = row("sink_sum").asInstanceOf[Long]
-      } else ranks = next.stage()
-      iter += 1
-    }
-    eDeg.unpersist()
-    ranks.select(col("node"), col("rank_micro"))
-  }
+  : DataFrame =
+    unweighted(edges, srcCol, dstCol, Some(seeds), iterations, dampingPct,
+      stopOnFixpoint = false)._1
 
   /** Edge-WEIGHTED PageRank: rank flows along each out-edge in
     * proportion to its weight (contribution = rank·w div Σw(src))
@@ -762,73 +731,21 @@ object Graph {
     * can reach Scale=1e12 and weights are unbounded longs — the raw
     * product can pass 2⁶³; the QUOTIENT is ≤ rank so the summed
     * in-flow stays long-ranged, mirroring DuckDB's HUGEINT sums).
-    * Per-iteration shape is identical to [[pageRank]]: weighted edges
-    * staged once pre-partitioned on src, one node-sized frame per
-    * round, sink totals ride each round's staging action.
+    * Runs [[pageRank]]'s kernel, [[powerIterate]].
     *
     * @return (node: long, rank_micro: long)
     */
   def pageRankWeighted(edges: DataFrame, srcCol: String, dstCol: String,
                        weightCol: String, iterations: Int,
-                       dampingPct: Int = 85): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1: $iterations")
-    require(dampingPct >= 0 && dampingPct <= 100,
-      s"dampingPct must be in [0,100]: $dampingPct")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+                       dampingPct: Int = 85): DataFrame =
+    powerIterate(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
-      .filter(col("w") > 0)
-      .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      .stage()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .distinct()
-      .stage()
-    val n = nodes.count()
-    if (n == 0L)
-      return nodes.select(col("node"), lit(0L).as("rank_micro"))
-    val wsum = e.groupBy("src").agg(sum(col("w")).as("wsum"))
-    val eW = e.join(wsum, "src").repartition(col("src")).persist()
-    val flagged = nodes
-      .join(wsum.select(col("src").as("node"), lit(true).as("has_out")),
-        Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("has_out"), lit(false)).as("has_out"))
-      .stage()
-    val nSinks = flagged.filter(!col("has_out")).count()
-    val teleport = (100L - dampingPct) * Scale / 100L / n
-    var ranks = flagged.select(col("node"), col("has_out"),
-      lit(Scale / n).as("rank_micro"))
-    var sinkSum: Long = nSinks * (Scale / n)
-    var iter = 0
-    while (iter < iterations) {
-      val sinkShare: Long = if (nSinks == 0L) 0L else sinkSum / n
-      val contrib = eW.join(ranks.hint("shuffle_hash"),
-          eW("src") === ranks("node"))
-        .select(eW("dst").as("node"),
-          expr("cast((cast(rank_micro as decimal(38,0)) * w) div wsum" +
-            " as long)").as("c"))
-        .groupBy("node")
-        .agg(sum(col("c")).as("in_sum"))
-      val next = flagged.join(contrib.hint("shuffle_hash"),
-          Seq("node"), "left")
-        .select(col("node"), col("has_out"),
-          (lit(teleport) +
-            expr(s"($dampingPct * (coalesce(in_sum, 0L) + $sinkShare))" +
-              " div 100"))
-            .as("rank_micro"))
-      if (nSinks > 0L) {
-        val (staged, row) = graft.Staging.stageObserved(next,
-          coalesce(sum(when(!col("has_out"), col("rank_micro"))),
-            lit(0L)).cast("long").as("sink_sum"))
-        ranks = staged
-        sinkSum = row("sink_sum").asInstanceOf[Long]
-      } else ranks = next.stage()
-      iter += 1
-    }
-    eW.unpersist()
-    ranks.select(col("node"), col("rank_micro"))
-  }
+        .filter(col("w") > 0)
+        .groupBy("src", "dst").agg(sum(col("w")).as("w")),
+      sum(col("w")),
+      "cast((cast(rank_micro as decimal(38,0)) * w) div out as long)",
+      None, iterations, dampingPct, stopOnFixpoint = false)._1
 
   /** Neighborhood Jaccard similarity for every EDGE of an undirected
     * graph: J(u,v) = |N(u)∩N(v)| / |N(u)∪N(v)| — the normalized
@@ -925,7 +842,7 @@ object Graph {
       survivors = kept
       if (!converged) {
         // shuffle_hash: semi-join builds the node-sized survivor set,
-        // streaming the E-row edge list unsorted (runPageRank rationale)
+        // streaming the E-row edge list unsorted (powerIterate rationale)
         e = e.join(kept.select(col("node").as("lo"))
               .hint("shuffle_hash"), Seq("lo"), "left_semi")
           .join(kept.select(col("node").as("hi"))
@@ -955,16 +872,9 @@ object Graph {
     * blast radius, where static reachability ([[bfsHops]]) badly
     * overcounts (Holme & Saramäki '12, temporal networks).
     *
-    * Earliest-arrival Bellman-Ford with a CHANGED-ONLY frontier: state
-    * is one (node, arrival) row per reached node; each round relaxes
-    * edges out of nodes whose arrival improved last round
-    * (`edge.ts >= arrival(src)` gates the traversal, the arrival
-    * candidate is the edge's own timestamp), min-merges into the
-    * state, and stops when a round improves nobody (the observed
-    * `n_changed` rides the round's staging action). Propagating only
-    * the frontier is lossless: an unchanged node's contributions were
-    * min-merged the round after it last changed, and min is
-    * idempotent. `maxHops` caps path length.
+    * Earliest-arrival Bellman-Ford on [[relaxMin]]: `edge.ts >=
+    * arrival(src)` gates the traversal and the arrival candidate is the
+    * edge's own timestamp. `maxHops` caps path length.
     *
     * All-integer (epoch timestamps as longs): exact, associative,
     * oracle-unrollable.
@@ -979,47 +889,12 @@ object Graph {
                            seeds: DataFrame, startTs: Long,
                            maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0: $maxHops")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"),
-      col(tsCol).cast("long").as("ts"))
-      .repartition(col("src")).stage() // stage(), not persist(): the checkpointed edge list carries accurate size stats, so the planner can broadcast it outright when it fits — measured faster than pinning the partitioning (0.75x with persist) because these loops' frontiers are tiny
-    var state = seeds.select(col("node").cast("long").as("node"))
-      .distinct()
-      .select(col("node"), lit(startTs).as("arrival"))
-      .stage()
-    if (state.isEmpty) return state
-    var frontier = state
-    var hop = 0
-    while (hop < maxHops) {
-      // NO shuffle_hash hint here: the changed-only frontier is tiny in
-      // the common case and the planner's broadcast of it beats a forced
-      // shuffle (measured 0.86x with the hint); when the frontier
-      // outgrows broadcast the persisted src-partitioning below still
-      // caps the join at one frontier-sized exchange
-      val cand = e.join(frontier.select(col("node").as("src"),
-          col("arrival").as("src_arr")), Seq("src"))
-        .filter(col("ts") >= col("src_arr"))
-        .groupBy(col("dst").as("node"))
-        .agg(min(col("ts")).as("cand"))
-      val merged = state.join(cand, Seq("node"), "full_outer")
-        .select(col("node"),
-          least(col("arrival"), col("cand")).as("arrival"),
-          coalesce(col("cand") < col("arrival"),
-            col("arrival").isNull).as("changed"))
-      val (staged, row) = graft.Staging.stageObserved(merged,
-        coalesce(sum(when(col("changed"), 1L)), lit(0L)).cast("long")
-          .as("n_changed"))
-      state = staged.select(col("node"), col("arrival"))
-      if (row("n_changed").asInstanceOf[Long] == 0L) {
-        log.info(s"temporalReachability: fixpoint after ${hop + 1} " +
-          s"rounds (cap $maxHops)")
-        return state
-      }
-      frontier = staged.filter(col("changed"))
-        .select(col("node"), col("arrival"))
-      hop += 1
-    }
-    state
+    relaxMin("temporalReachability",
+      edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"),
+        col(tsCol).cast("long").as("ts")),
+      seeds, "arrival", startTs, gate = Some(col("ts") >= col("at")),
+      candidate = col("ts"), maxHops)
   }
 
   /** Multi-source single-source-shortest-paths over non-negative
@@ -1028,22 +903,9 @@ object Graph {
     * the primitive under supply-chain cost attribution and
     * weighted-proximity features.
     *
-    * Distributed Bellman-Ford with a CHANGED-ONLY frontier, exactly
-    * the [[temporalReachability]] shape: state is one (node, dist)
-    * row per REACHED node; round k relaxes only edges out of nodes
-    * whose distance improved in round k−1 (candidate = dist(src) + w,
-    * min-merged into the state), and the loop stops the first round
-    * that improves nobody — the observed `n_changed` metric rides the
-    * round's own staging action, zero extra jobs. Frontier-only
-    * relaxation is lossless (an unchanged node's out-contributions
-    * were merged the round after it last changed; min is idempotent),
-    * and each round's state equals full Bellman-Ford's after the same
-    * number of rounds — which is what makes the unrolled SQL oracle
-    * possible. All-integer distances: exact, associative.
-    *
-    * At 100 TB: edge list staged once, pre-partitioned on `src`, so
-    * every round's join reuses the layout and only the node-sized
-    * frontier shuffles; state never exceeds one row per reached node.
+    * Distributed Bellman-Ford on [[relaxMin]], the
+    * [[temporalReachability]] kernel, with candidate dist(src) + w.
+    * All-integer distances: exact, associative.
     *
     * @param seeds     one column `node`; all seeds start at dist 0
     * @param maxRounds cap on path length in edges (rounds)
@@ -1053,40 +915,70 @@ object Graph {
                     wCol: String, seeds: DataFrame,
                     maxRounds: Int): DataFrame = {
     require(maxRounds >= 0, s"maxRounds must be >= 0: $maxRounds")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"),
-      col(wCol).cast("long").as("w"))
-      .repartition(col("src")).stage() // stage(), not persist(): the checkpointed edge list carries accurate size stats, so the planner can broadcast it outright when it fits — measured faster than pinning the partitioning (0.75x with persist) because these loops' frontiers are tiny
+    relaxMin("shortestPaths",
+      edges.select(col(srcCol).cast("long").as("src"),
+        col(dstCol).cast("long").as("dst"),
+        col(wCol).cast("long").as("w")),
+      seeds, "dist", 0L, gate = None, candidate = col("at") + col("w"),
+      maxRounds)
+  }
+
+  /** The changed-only min-relaxation kernel behind
+    * [[temporalReachability]] and [[shortestPaths]] (Bellman-Ford with a
+    * CHANGED-ONLY frontier): state is one (node, `value`) row per reached
+    * node; each round joins the nodes whose value improved last round
+    * (`at` = their value) against their out-edges, keeps the edges
+    * passing `gate`, takes the min `candidate` per target, min-merges it
+    * into the state, and stops the first round that improves nobody —
+    * the observed `n_changed` rides the round's own staging action.
+    * Frontier-only relaxation is lossless (an unchanged node's
+    * contributions were merged the round after it last changed; min is
+    * idempotent), and each round's state equals full Bellman-Ford's
+    * after the same number of rounds — which is what makes the unrolled
+    * SQL oracle possible.
+    *
+    * @param edges pipeline with long `src`, `dst` and whatever `gate` and
+    *              `candidate` read; staged here once
+    * @param seeds one column `node`; every seed starts at `start`
+    */
+  private def relaxMin(op: String, edges: DataFrame, seeds: DataFrame,
+                       value: String, start: Long, gate: Option[Column],
+                       candidate: Column, maxRounds: Int): DataFrame = {
+    // staged, so the planner may broadcast it whole (see [[graft.Staging]]
+    // on persist vs stage)
+    val e = edges.repartition(col("src")).stage()
     var state = seeds.select(col("node").cast("long").as("node"))
       .distinct()
-      .select(col("node"), lit(0L).as("dist"))
+      .select(col("node"), lit(start).as(value))
       .stage()
     if (state.isEmpty) return state
     var frontier = state
     var round = 0
     while (round < maxRounds) {
-      // no hint: broadcast of the small changed-only frontier wins
-      // (see temporalReachability)
-      val cand = e.join(frontier.select(col("node").as("src"),
-          col("dist").as("src_dist")), Seq("src"))
+      // NO shuffle_hash hint here: the planner picks the join (at sf0.1
+      // it broadcasts the staged edge list), measured faster than a
+      // forced shuffle (0.86x with the hint)
+      val out = e.join(frontier.select(col("node").as("src"),
+        col(value).as("at")), Seq("src"))
+      val cand = gate.fold(out)(out.filter)
         .groupBy(col("dst").as("node"))
-        .agg(min(col("src_dist") + col("w")).as("cand"))
+        .agg(min(candidate).as("cand"))
       val merged = state.join(cand, Seq("node"), "full_outer")
         .select(col("node"),
-          least(col("dist"), col("cand")).as("dist"),
-          coalesce(col("cand") < col("dist"),
-            col("dist").isNull).as("changed"))
+          least(col(value), col("cand")).as(value),
+          coalesce(col("cand") < col(value),
+            col(value).isNull).as("changed"))
       val (staged, row) = graft.Staging.stageObserved(merged,
         coalesce(sum(when(col("changed"), 1L)), lit(0L)).cast("long")
           .as("n_changed"))
-      state = staged.select(col("node"), col("dist"))
+      state = staged.select(col("node"), col(value))
       if (row("n_changed").asInstanceOf[Long] == 0L) {
-        log.info(s"shortestPaths: fixpoint after ${round + 1} rounds " +
+        log.info(s"$op: fixpoint after ${round + 1} rounds " +
           s"(cap $maxRounds)")
         return state
       }
       frontier = staged.filter(col("changed"))
-        .select(col("node"), col("dist"))
+        .select(col("node"), col(value))
       round += 1
     }
     state
@@ -1098,54 +990,18 @@ object Graph {
     * centrality Σ 1/d, closeness approximations, and "distance to the
     * k trusted hubs" features all read off this frame.
     *
-    * Same changed-frontier rounds as [[bfsHops]], with the landmark id
-    * carried through the traversal: state is one (lm, node, hops) row
+    * [[bfsHops]]'s kernel, [[bfsRounds]], with the landmark id carried
+    * through the traversal as a key: state is one (lm, node, hops) row
     * per (landmark, reached node) pair — k·reach rows, k bounded by the
-    * landmark SAMPLE (you pick tens of landmarks, not |V|). Each round
-    * joins the frontier against the once-staged src-partitioned edge
-    * list and anti-joins the settled set on (lm, node); the observed
-    * `n_new` stops the loop at fixpoint with zero extra jobs.
+    * landmark SAMPLE (you pick tens of landmarks, not |V|).
     *
     * @param seeds one column `node`: the landmarks (lm = the node)
     * @return (lm: long, node: long, hops: int)
     */
   def landmarkDistances(edges: DataFrame, srcCol: String, dstCol: String,
-                        seeds: DataFrame, maxHops: Int): DataFrame = {
-    require(maxHops >= 0, s"maxHops must be >= 0: $maxHops")
-    val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .repartition(col("src")).persist() // NOT stage(): a checkpoint ERASES outputPartitioning and every round would re-exchange the E-row edge list (the eDeg idiom)
-    // every exit (empty seeds, fixpoint, hop cap) returns a staged frame
-    // that no longer reads `e`, so the edge list is released on all three
-    try {
-      var settled = seeds.select(col("node").cast("long").as("node"))
-        .distinct()
-        .select(col("node").as("lm"), col("node"), lit(0).as("hops"))
-        .stage()
-      if (settled.isEmpty) return settled
-      var frontier = settled
-      var hop = 0
-      while (hop < maxHops) {
-        val reached = e.join(frontier.select(col("lm"),
-            col("node").as("src")).hint("shuffle_hash"), Seq("src"))
-          .select(col("lm"), col("dst").as("node")).distinct()
-          .join(settled.select("lm", "node"), Seq("lm", "node"),
-            "left_anti")
-          .select(col("lm"), col("node"), lit(hop + 1).as("hops"))
-        val (stagedFrontier, row) = graft.Staging.stageObserved(reached,
-          count(lit(1)).as("n_new"))
-        frontier = stagedFrontier
-        if (row("n_new").asInstanceOf[Long] == 0L) {
-          log.info(s"landmarkDistances: frontier empty after ${hop + 1} " +
-            s"rounds (cap $maxHops)")
-          return settled
-        }
-        settled = settled.unionAll(frontier).stage()
-        hop += 1
-      }
-      settled
-    } finally e.unpersist()
-  }
+                        seeds: DataFrame, maxHops: Int): DataFrame =
+    bfsRounds("landmarkDistances", edges, srcCol, dstCol, seeds,
+      keys = Seq("lm"), maxHops)
 
   /** Multi-source BFS hop distance: the minimum number of directed
     * edges from ANY seed to each reachable node — "how far is this
@@ -1155,19 +1011,13 @@ object Graph {
     * link-spam distance filters, and feature generation for ER all
     * consume exactly this.
     *
-    * Frontier-propagating rounds: a node's distance FINALIZES the round
-    * it is first reached (every in-path through later-reached nodes is
-    * strictly longer), so round r joins only the r-1-distance frontier
-    * against the edge list — contribution volume is out-edges-of-
-    * frontier, not all edges, and the loop stops as soon as a round
-    * reaches nobody new (the observed `n_new` metric rides the round's
-    * own staging action — no extra job). All-integer distances: exact,
-    * associative, oracle-unrollable.
-    *
-    * Shape per round: frontier ⋈ edges on `src` (edge list staged once,
-    * pre-partitioned on src so every round reuses the layout), min-agg
-    * on `dst`, anti-join against the settled set. At 100 TB the state
-    * is one (node, dist) row per REACHED node — never |V|·rounds.
+    * Frontier-propagating rounds ([[bfsRounds]]): a node's distance
+    * FINALIZES the round it is first reached (every in-path through
+    * later-reached nodes is strictly longer), so round r joins only the
+    * r-1-distance frontier against the edge list — contribution volume
+    * is out-edges-of-frontier, not all edges. All-integer distances:
+    * exact, associative, oracle-unrollable. At 100 TB the state is one
+    * (node, dist) row per REACHED node — never |V|·rounds.
     *
     * Unreached nodes are absent from the output (distance ∞); cap
     * `maxHops` bounds the rounds on pathological diameters.
@@ -1177,37 +1027,58 @@ object Graph {
     * @return (node: long, hops: int)
     */
   def bfsHops(edges: DataFrame, srcCol: String, dstCol: String,
-              seeds: DataFrame, maxHops: Int): DataFrame = {
+              seeds: DataFrame, maxHops: Int): DataFrame =
+    bfsRounds("bfsHops", edges, srcCol, dstCol, seeds, keys = Nil,
+      maxHops)
+
+  /** The settled-set kernel behind [[bfsHops]] and [[landmarkDistances]]:
+    * every seed is settled at hop 0, once per `keys` column (each a copy
+    * of the seed's node id, so the empty list is one traversal shared by
+    * all seeds); round r joins the r−1 frontier against the edge list,
+    * anti-joins the (keys, node) pairs already settled, and stops the
+    * first round that reaches nobody new — the observed `n_new` rides
+    * the round's own staging action.
+    */
+  private def bfsRounds(op: String, edges: DataFrame, srcCol: String,
+                        dstCol: String, seeds: DataFrame,
+                        keys: Seq[String], maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0: $maxHops")
+    // persisted on src (see [[graft.Staging]] on persist vs stage), so
+    // each round exchanges only the frontier; every exit returns a
+    // staged frame that no longer reads `e`, so it is released on all
     val e = edges.select(col(srcCol).cast("long").as("src"),
-      col(dstCol).cast("long").as("dst"))
-      .repartition(col("src")).stage() // stage(), not persist(): the checkpointed edge list carries accurate size stats, so the planner can broadcast it outright when it fits — measured faster than pinning the partitioning (0.75x with persist) because these loops' frontiers are tiny
-    var settled = seeds.select(col("node").cast("long").as("node"))
-      .distinct()
-      .select(col("node"), lit(0).as("hops"))
-      .stage()
-    if (settled.isEmpty) return settled
-    var frontier = settled
-    var hop = 0
-    while (hop < maxHops) {
-      // no hint: broadcast of the small frontier wins (see
-      // temporalReachability)
-      val reached = e.join(frontier.select(col("node").as("src")),
-          Seq("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(settled.select("node"), Seq("node"), "left_anti")
-        .select(col("node"), lit(hop + 1).as("hops"))
-      val (stagedFrontier, row) = graft.Staging.stageObserved(reached,
-        count(lit(1)).as("n_new"))
-      frontier = stagedFrontier
-      if (row("n_new").asInstanceOf[Long] == 0L) {
-        log.info(s"bfsHops: frontier empty after ${hop + 1} rounds " +
-          s"(cap $maxHops)")
-        return settled
+        col(dstCol).cast("long").as("dst"))
+      .repartition(col("src")).persist()
+    try {
+      val keyed = keys.map(col)
+      var settled = seeds.select(col("node").cast("long").as("node"))
+        .distinct()
+        .select(keys.map(col("node").as(_)) ++
+          Seq(col("node"), lit(0).as("hops")): _*)
+        .stage()
+      if (settled.isEmpty) return settled
+      var frontier = settled
+      var hop = 0
+      while (hop < maxHops) {
+        val reached = e.join(frontier
+            .select(keyed :+ col("node").as("src"): _*)
+            .hint("shuffle_hash"), Seq("src"))
+          .select(keyed :+ col("dst").as("node"): _*).distinct()
+          .join(settled.select(keyed :+ col("node"): _*), keys :+ "node",
+            "left_anti")
+          .select(keyed ++ Seq(col("node"), lit(hop + 1).as("hops")): _*)
+        val (stagedFrontier, row) = graft.Staging.stageObserved(reached,
+          count(lit(1)).as("n_new"))
+        frontier = stagedFrontier
+        if (row("n_new").asInstanceOf[Long] == 0L) {
+          log.info(s"$op: frontier empty after ${hop + 1} rounds " +
+            s"(cap $maxHops)")
+          return settled
+        }
+        settled = settled.unionAll(frontier).stage()
+        hop += 1
       }
-      settled = settled.unionAll(frontier).stage()
-      hop += 1
-    }
-    settled
+      settled
+    } finally e.unpersist()
   }
 }

@@ -41,12 +41,10 @@ object Walks {
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
     // rank-indexed adjacency + degrees, built once, probed every step
-    // persisted with a VISIBLE src partitioning, deliberately NOT
-    // staged (the pageRank eDeg idiom: a checkpoint erases
-    // outputPartitioning and every step's probe join would re-exchange
-    // the E-row adjacency; the window's own hash exchange on src is
+    // persisted, deliberately NOT staged (see [[graft.Staging]] on
+    // persist vs stage): the window's own hash exchange on src is
     // the one exchange the adjacency ever pays, and each step then
-    // shuffles only the walk-sized frontier side). At web-graph scale
+    // shuffles only the walk-sized frontier side. At web-graph scale
     // the adjacency cannot broadcast, so the pinned partitioning is
     // what caps per-step cost.
     val adj = e.withColumn("rk",

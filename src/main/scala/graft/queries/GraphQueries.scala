@@ -114,7 +114,7 @@ private[graft] object GraphQueries {
 
     // the honest DIRECTED variant: customer→supplier edges are NOT
     // symmetrized, so every supplier is a dangling sink — the
-    // per-round sink-mass redistribution (Graph.runPageRank) is what
+    // per-round sink-mass redistribution (Graph.powerIterate) is what
     // keeps total rank conserved; the twin unrolls the same integer
     // iterations including the sink term
     "q_pagerank_directed" -> ((s, d) =>
@@ -428,7 +428,7 @@ private[graft] object GraphQueries {
     // directed PageRank with dangling-sink redistribution: sinks
     // (suppliers — no out-edges) pool their rank each round and every
     // node gets share = sink_sum // n added to its in-sum before
-    // damping, mirroring Graph.runPageRank's integer formulation
+    // damping, mirroring Graph.powerIterate's integer formulation
     "q_pagerank_directed" ->
       """WITH e AS (
            SELECT DISTINCT o_custkey AS src, l_suppkey + 10000000 AS dst

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.ArtifactStore.scratch
 import graft.ops.relational
 
 /** Physical-plan shape guards for the scale-critical properties: these
@@ -61,7 +62,7 @@ class PlanSpec extends SparkSpec {
     // 100 TB this is the difference between scanning one partition and
     // scanning the lake
     import spark.implicits._
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val tmp = scratch(spark, "graft_dpp")
     Tables.t(spark, sf, "lineitem")
       .select("l_orderkey", "l_quantity", "l_returnflag")
       .write.mode("overwrite").partitionBy("l_returnflag").parquet(tmp)
@@ -69,8 +70,7 @@ class PlanSpec extends SparkSpec {
     // the dim must be a real (file) relation: a LocalRelation's filter is
     // constant-folded away before the DPP rule looks for a selective
     // predicate on the build side
-    val dimPath = java.nio.file.Files.createTempDirectory("graft_dppd")
-      .toString
+    val dimPath = scratch(spark, "graft_dppd")
     Seq(("R", "returned"), ("A", "accepted"), ("N", "none"))
       .toDF("l_returnflag", "meaning")
       .write.mode("overwrite").parquet(dimPath)

@@ -1,9 +1,8 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.DataFrame
 
+import graft.ArtifactStore.scratch
 import graft.Staging._
 import graft.dedup.Dedup
 import graft.graph.Graph
@@ -24,8 +23,7 @@ class StagingSpec extends SparkSpec {
   ).toDF("src", "dst")
 
   private def withCheckpointDir[A](body: => A): A = {
-    val dir = Files.createTempDirectory("graft-ckpt").toFile
-    spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
+    spark.sparkContext.setCheckpointDir(scratch(spark, "graft_ckpt"))
     // the session is shared across suites — restore local mode after
     // (setCheckpointDir(null) maps to None via Option(directory))
     try body

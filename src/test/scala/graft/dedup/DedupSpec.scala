@@ -2,6 +2,7 @@ package graft.dedup
 
 import org.apache.spark.sql.functions._
 
+import graft.ArtifactStore.scratch
 import graft.SparkSpec
 
 class DedupSpec extends SparkSpec {
@@ -116,8 +117,7 @@ class DedupSpec extends SparkSpec {
   test("file-backed LSH index probe ≡ the in-lineage incremental path") {
     val newDocs = docs.filter(col("doc_id") % 2 === 0)
     val corpus = docs.filter(col("doc_id") % 2 =!= 0)
-    val dir = java.nio.file.Files
-      .createTempDirectory("lsh_index_spec").toString
+    val dir = scratch(spark, "lsh_index_spec")
     val sets = Dedup.shingleSets(corpus, "doc_id", "text", 3)
     sets.write.mode("overwrite").parquet(s"$dir/sets")
     Dedup.bandedBuckets(sets, numPerms = 8, numBands = 4)
@@ -397,8 +397,7 @@ class DedupSpec extends SparkSpec {
     }
     val trainDf = train.toDF("doc_id", "text")
     val benchDf = bench.toDF("doc_id", "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_bloom_rt").toString + "/bf"
+    val path = scratch(spark, "graft_bloom_rt") + "/bf"
     Dedup.bloomBuild(benchDf, "doc_id", "text", k = 5)
       .write.mode("overwrite").parquet(path)
     val atRest = Dedup.bloomProbe(spark.read.parquet(path), trainDf,

@@ -1,9 +1,8 @@
 package graft.functions
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
+import graft.ArtifactStore.scratch
 import graft.SparkSpec
 import graft.sources.Layout
 
@@ -42,8 +41,8 @@ class ZOrderSpec extends SparkSpec {
     // file to a compact tile, so a narrow y band prunes most files.
     val grid = spark.range(65536L)
       .selectExpr("id % 256 as x", "id div 256 as y")
-    val zPath = Files.createTempDirectory("graft_zorder").toString
-    val linPath = Files.createTempDirectory("graft_linear").toString
+    val zPath = scratch(spark, "graft_zorder")
+    val linPath = scratch(spark, "graft_linear")
     Layout.zorderWrite(grid, "x", "y", bits = 8, numFiles = 16, zPath)
     Layout.linearWrite(grid, "x", numFiles = 16, linPath)
 
@@ -64,8 +63,8 @@ class ZOrderSpec extends SparkSpec {
   test("compact rewrites a fragmented table into few bounded files") {
     val data = spark.range(200000L)
       .selectExpr("id", "id % 97 as k", "cast(id as string) as pad")
-    val fragPath = Files.createTempDirectory("graft_frag").toString
-    val outPath = Files.createTempDirectory("graft_compacted").toString
+    val fragPath = scratch(spark, "graft_frag")
+    val outPath = scratch(spark, "graft_compacted")
     data.repartition(64).write.mode("overwrite").parquet(fragPath)
 
     val (before, after) =

@@ -341,6 +341,19 @@ class GraphSpec extends SparkSpec {
     assert(got === refPpr(edges, seedSet, 3))
   }
 
+  test("personalized pagerank with every node seeded equals pageRank") {
+    val rnd = new scala.util.Random(29)
+    val edges = (0 until 70).map(_ =>
+      (rnd.nextInt(15).toLong, rnd.nextInt(20).toLong))
+      .filter(e => e._1 != e._2).distinct
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    assert(nodes.exists(v => !edges.exists(_._1 == v)), "needs sinks")
+    val ppr = Graph.personalizedPageRank(edges.toDF("s", "d"), "s", "d",
+        nodes.toDF("node"), iterations = 3)
+      .as[(Long, Long)].collect().toMap
+    assert(ppr === run(edges, 3))
+  }
+
   /** Driver-side multi-source BFS replica. */
   private def refBfs(edges: Seq[(Long, Long)], seeds: Set[Long],
                      maxHops: Int): Map[Long, Int] = {
@@ -750,5 +763,26 @@ class GraphSpec extends SparkSpec {
         assert(cache.isEmpty, s"edge list still cached (seeds $lms, cap $cap)")
         assert(got.count() === (if (lms.isEmpty) 0 else 1 + cap.min(3)))
     }
+  }
+
+  test("the pagerank variants release their persisted edge frame on " +
+    "every exit") {
+    val rnd = new scala.util.Random(31)
+    val e = (0 until 40).map(_ =>
+      (rnd.nextInt(10).toLong, rnd.nextInt(12).toLong, 1L + rnd.nextInt(5)))
+      .filter(x => x._1 != x._2).distinct
+    val edges = e.toDF("s", "d", "w")
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    // no seed appears in the graph: the call throws after the persist
+    intercept[IllegalArgumentException] {
+      Graph.personalizedPageRank(edges, "s", "d",
+        Seq(1000L, 1001L).toDF("node"), iterations = 2)
+    }
+    assert(cache.isEmpty, "personalizedPageRank leaked its edge frame")
+    Graph.pageRank(edges, "s", "d", iterations = 2).count()
+    assert(cache.isEmpty, "pageRank leaked its edge frame")
+    Graph.pageRankWeighted(edges, "s", "d", "w", iterations = 2).count()
+    assert(cache.isEmpty, "pageRankWeighted leaked its edge frame")
   }
 }

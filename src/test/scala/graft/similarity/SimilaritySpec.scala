@@ -2,6 +2,7 @@ package graft.similarity
 
 import org.apache.spark.sql.functions._
 
+import graft.ArtifactStore.scratch
 import graft.SparkSpec
 
 class SimilaritySpec extends SparkSpec {
@@ -724,8 +725,7 @@ class SimilaritySpec extends SparkSpec {
     val arrivals = (200 until 230).map(i =>
       (i.toLong, Array.fill(8)((rnd.nextDouble() * 2 - 1).toFloat)))
       .toDF("vec_id", "embedding")
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_ivf_seed").toString
+    val store = scratch(spark, "graft_ivf_seed")
     Similarity.seedIvfStore(corpus, "label", store)
     val stored = spark.read.parquet(s"$store/centroids")
     val viaStore = Similarity.assignToStoredCells(arrivals, stored)
@@ -814,8 +814,7 @@ class SimilaritySpec extends SparkSpec {
     val v = vecs(0 until 60).zipWithIndex.map { case ((id, e), i) =>
       (id, e, i % 4) }.toDF("vec_id", "embedding", "label")
     val vOnly = v.select(col("vec_id"), col("embedding"))
-    val store = java.nio.file.Files
-      .createTempDirectory("graft_ivf_rebuild").toString
+    val store = scratch(spark, "graft_ivf_rebuild")
     Similarity.seedIvfStore(v, "label", store)
     val before = spark.read.parquet(s"$store/assignment")
       .as[(Long, Int)].collect().toSet

@@ -1,9 +1,8 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
+import graft.ArtifactStore.scratch
 import graft.SparkSpec
 
 /** S4-S9 (SURVEY.md §2.1): CSV round trip, partitioned lake layout with
@@ -97,7 +96,7 @@ class SourcesSpec extends SparkSpec {
     // the reference re-runs one season's DAG and replaces only that
     // season's object (`scrape_data_to_gcs.py:264-266`); the Spark-native
     // equivalent is dynamic partition overwrite
-    val lake = Files.createTempDirectory("graft_dpo").toString
+    val lake = scratch(spark, "graft_dpo")
     val v1 = Seq((1996, "a", 1), (1996, "b", 2), (1997, "c", 3))
       .toDF("season", "k", "v")
     v1.write.mode("overwrite").partitionBy("season").parquet(lake)
@@ -119,7 +118,7 @@ class SourcesSpec extends SparkSpec {
   }
 
   test("S9 warehouse table: saveAsTable + catalog read back") {
-    val wh = Files.createTempDirectory("graft_wh").toString
+    val wh = scratch(spark, "graft_wh")
     df.write.mode("overwrite")
       .option("path", s"$wh/t_sources_spec")
       .saveAsTable("t_sources_spec")

@@ -1,16 +1,17 @@
 package graft.sources
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
 
+import graft.ArtifactStore.scratch
 import graft.SparkSpec
 
 class StagedPagesSpec extends SparkSpec {
   import spark.implicits._
 
   private def writePages(): String = {
-    val dir = Files.createTempDirectory("graft_pages")
+    val dir = Paths.get(scratch(spark, "graft_pages"))
     Seq("a" -> Seq("row1", "row2"), "b" -> Seq("row3"),
       "c" -> Seq("row4", "row5", "row6")).foreach { case (p, lines) =>
       Files.write(dir.resolve(s"page_$p.txt"),
@@ -88,7 +89,7 @@ class StagedPagesSpec extends SparkSpec {
     // the dim must be a real SCAN: a local Seq constant-folds its
     // filter into the LocalRelation, leaving no selective Filter node
     // for PartitionPruning to key on
-    val dimPath = Files.createTempDirectory("graft_dpp_dim").toString
+    val dimPath = scratch(spark, "graft_dpp_dim")
     Seq(("page_b.txt", "keep"), ("page_x.txt", "other"))
       .toDF("p", "tag").write.mode("overwrite").parquet(dimPath)
     val dim = spark.read.parquet(dimPath).filter(col("tag") === "keep")
@@ -107,7 +108,7 @@ class StagedPagesSpec extends SparkSpec {
   }
 
   test("staged-pages composes with the anchor-extract pattern (S3)") {
-    val dir = Files.createTempDirectory("graft_html")
+    val dir = Paths.get(scratch(spark, "graft_html"))
     Files.write(dir.resolve("p1.html"),
       """<a href="/coaches/jacksph01c.html">Phil</a>
         |<a href="/players/jordami01.html">MJ</a>

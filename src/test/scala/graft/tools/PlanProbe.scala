@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *
   *   sbt "Test/runMain graft.PlanProbe <which> [sfDir]"
   *
-  * where <which> ∈ pagerank | walks | sa | hits | labelprop. Prints the
+  * where <which> ∈ walks | sa | sa_round | hits | labelprop. Prints the
   * formatted plan of one mid-loop round built EXACTLY the way the
   * operator builds it (same staging/persist state), so Exchange/Sort
   * placement in the dump is what the loop actually runs.
@@ -24,39 +24,6 @@ object PlanProbe {
     import graft.Staging.StageOps
 
     which match {
-      case "pagerank" =>
-        // one mid-loop pageRank round, staged exactly like Graph.runPageRank
-        val edges = ExtensionQueries.symAdjacency(spark, d)
-        val e = edges.select(col("src").cast("long").as("src"),
-          col("dst").cast("long").as("dst")).stage()
-        val nodes = e.select(col("src").as("node"))
-          .union(e.select(col("dst").as("node"))).distinct().stage()
-        val n = nodes.count()
-        val outDeg = e.groupBy("src").agg(count(lit(1)).as("out"))
-        val eDeg = e.join(outDeg, "src").repartition(col("src")).persist()
-        val flagged = nodes
-          .join(outDeg.select(col("src").as("node"),
-            lit(true).as("has_out")), Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("has_out"), lit(false)).as("has_out"))
-          .stage()
-        val ranks = flagged.select(col("node"), col("has_out"),
-          lit(graft.graph.Graph.Scale / n).as("rank_micro")).stage()
-        val contrib = eDeg.join(ranks.hint("shuffle_hash"),
-          eDeg("src") === ranks("node"))
-          .select(eDeg("dst").as("node"),
-            expr("rank_micro div out").as("c"))
-          .groupBy("node")
-          .agg(sum(col("c")).as("in_sum"))
-        val next = flagged.join(contrib.hint("shuffle_hash"),
-          Seq("node"), "left")
-          .select(col("node"), col("has_out"),
-            (lit(100L) + expr("85 * coalesce(in_sum, 0L) div 100"))
-              .as("rank_micro"))
-        println("=== pageRank: one mid-loop round (contrib join + agg + " +
-          "flagged join) ===")
-        next.explain("formatted")
-
       case "hits" =>
         val e0 = ExtensionQueries.sharedTradeEdges(spark, d)
           .select(col("a").cast("long").as("src"),
