@@ -27,6 +27,14 @@ import org.apache.spark.sql.SparkSession
   *    aggregate's win (isolated probe: ~4 s hashing vs ~22 s fallback at
   *    40M candidates / 100k groups). Buffers are k·16 bytes, so a million
   *    hashed groups is tens of MB per partition. Pinned by TopKAggSpec.
+  *  - `spark.sql.artifact.isolation.enabled = false`: tasks run under the
+  *    executor's shared class loader instead of one loader per session.
+  *    Spark caches generated classes per (class loader, source), so a
+  *    query re-run in a later session, or a stream in its cloned one,
+  *    reuses compiled classes instead of compiling, loading and JIT-ing
+  *    them again. The engine adds no session artifacts (jars, files), so
+  *    the flag chooses nothing else; [[graft.streaming.Streams
+  *    .streamSession]] sets it on the per-run stream sessions too.
   */
 object Session {
   /** Task slots for the mains and probes: `SPARK_GRAFT_CPUS`, or 32. */
@@ -43,6 +51,7 @@ object Session {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold",
         (1L << 20))
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

@@ -43,9 +43,29 @@ object Streams {
       case _ => df
     }
 
-  /** The session a stateful stream over the `glob` files of `dir` runs
-    * in. Each stateful operator keeps one state store per shuffle
-    * partition (a stream-stream join keeps four), and every store
+  /** The session one stream run does all of its Spark work in: its seed
+    * reads, the stream, the `foreachBatch` kernels and the result it
+    * returns. It is a `newSession()` of `spark` with artifact isolation
+    * off, set before the session's first use (Spark reads the flag once,
+    * lazily). Spark caches generated classes by (task thread's context
+    * class loader, source), and an isolated session's tasks run under
+    * that session's own executor class loader; since every run starts in
+    * a new session (and the stream itself in a clone of it), every run
+    * would compile, load and JIT its generated classes from cold. With
+    * isolation off the tasks run under the executor's shared loader, so
+    * a repeat run reuses the first run's classes. The engine adds no
+    * session artifacts, so the flag only chooses that loader. Scratch
+    * dirs stay owned by `spark`: keying them by a per-run session would
+    * keep that session reachable until the context stops. */
+  private[graft] def streamSession(spark: SparkSession): SparkSession = {
+    val ns = spark.newSession()
+    ns.conf.set("spark.sql.artifact.isolation.enabled", "false")
+    ns
+  }
+
+  /** The [[streamSession]] a stateful stream over the `glob` files of
+    * `dir` runs in. Each stateful operator keeps one state store per
+    * shuffle partition (a stream-stream join keeps four), and every store
     * commits each micro-batch, so at small state the per-batch cost
     * follows the partition count, not the data. The count is therefore
     * the smaller of `spark`'s `spark.sql.shuffle.partitions` and the
@@ -73,7 +93,7 @@ object Streams {
       .queryExecution.sparkPlan.collectFirst {
         case s: FileSourceScanExec => s.inputRDD.getNumPartitions
       }.get
-    val ns = spark.newSession()
+    val ns = streamSession(spark)
     ns.conf.set("spark.sql.shuffle.partitions", math.min(splits,
       spark.conf.get("spark.sql.shuffle.partitions").toInt).toLong)
     if (rocksDb) {
@@ -121,10 +141,10 @@ object Streams {
   }
 
   /** Catch `stream` up into a memory sink and return its rows, read back
-    * from the session the stream ran in (for a stateful stream, the one
-    * [[statefulSession]] made). The sink's temp view is dropped once the
-    * result frame exists: the frame keeps the sink's rows, and nothing
-    * else pins them on the driver after the caller lets go of it. */
+    * from the session the stream ran in (the one [[streamSession]]
+    * made). The sink's temp view is dropped once the result frame
+    * exists: the frame keeps the sink's rows, and nothing else pins
+    * them on the driver after the caller lets go of it. */
   private def catchUpToMemory(stream: DataFrame, checkpoint: String,
                               mode: String): DataFrame = {
     val sink = "graft_sink_" + math.abs(checkpoint.hashCode)
@@ -500,7 +520,7 @@ object Streams {
                            keyCol: String, fromCol: String,
                            toCol: String,
                            glob: String = "events.parquet"): DataFrame = {
-    val enriched = normalizeTs(fileStream(spark, dir, glob))
+    val enriched = normalizeTs(fileStream(streamSession(spark), dir, glob))
       .join(dim, Seq(keyCol))
       .filter(col("ts") >= col(fromCol) && col("ts") < col(toCol))
 
@@ -514,10 +534,11 @@ object Streams {
   def enrichStream(spark: SparkSession, dir: String, checkpoint: String,
                    glob: String = "events.parquet",
                    dimDir: String = null): DataFrame = {
-    val dim = spark.read
+    val sess = streamSession(spark)
+    val dim = sess.read
       .parquet(s"${if (dimDir == null) dir else dimDir}/nation.parquet")
       .select(col("n_nationkey"), col("n_name"))
-    val joined = fileStream(spark, dir, glob)
+    val joined = fileStream(sess, dir, glob)
       .select(col("event_id"), col("event_type"),
         pmod(col("user_id"), lit(25)).as("nk"))
       .join(broadcast(dim), col("nk") === col("n_nationkey"))
@@ -684,14 +705,15 @@ object Streams {
                           checkpoint: String, tablePath: String,
                           keys: Seq[String], versionCol: String,
                           glob: String = "events.parquet"): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir)
+    val sess = streamSession(spark)
+    val schema = sess.read.option("pathGlobFilter", glob).parquet(dir)
       .schema
-    catchUpEachBatch(fileStream(spark, dir, glob, schema), checkpoint) {
+    catchUpEachBatch(fileStream(sess, dir, glob, schema), checkpoint) {
       (batch, batchId) =>
-        snapshotChainMerge(spark, tablePath, schema, keys, versionCol,
+        snapshotChainMerge(sess, tablePath, schema, keys, versionCol,
           batch, batchId)
     }
-    latestSnapshot(spark, tablePath, schema)
+    latestSnapshot(sess, tablePath, schema)
   }
 
   /** Validated ingest: route every streamed row through a per-ROW
@@ -714,9 +736,10 @@ object Streams {
                      goodPath: String, badPath: String,
                      pred: org.apache.spark.sql.Column,
                      glob: String = "events.parquet"): DataFrame = {
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(dir)
+    val sess = streamSession(spark)
+    val schema = sess.read.option("pathGlobFilter", glob).parquet(dir)
       .schema
-    catchUpEachBatch(fileStream(spark, dir, glob, schema), checkpoint) {
+    catchUpEachBatch(fileStream(sess, dir, glob, schema), checkpoint) {
       (batch, _) =>
         val ok = coalesce(pred, lit(false))
         // pinned: the published and quarantine writes would otherwise
@@ -729,10 +752,10 @@ object Streams {
     }
     def side(path: String, tag: String): DataFrame = {
       val fs = new Path(path).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
+        sess.sparkContext.hadoopConfiguration)
       val df =
-        if (fs.exists(new Path(path))) spark.read.schema(schema).parquet(path)
-        else emptyFrame(spark, schema)
+        if (fs.exists(new Path(path))) sess.read.schema(schema).parquet(path)
+        else emptyFrame(sess, schema)
       df.agg(count(lit(1)).as("n_rows"),
         coalesce(sum(col("value").cast("decimal(18,2)")),
           lit(java.math.BigDecimal.ZERO).cast("decimal(18,2)"))
@@ -831,13 +854,14 @@ object Streams {
                      threshold: Double,
                      glob: String = "documents.parquet"): DataFrame = {
     import graft.dedup.Dedup
-    val docs = spark.read.option("pathGlobFilter", glob).parquet(dir)
+    val sess = streamSession(spark)
+    val docs = sess.read.option("pathGlobFilter", glob).parquet(dir)
     // the persisted dedup index, built once — every batch probes it
     val corpusSets = Dedup.shingleSets(
       docs.filter(col("doc_id") % 17 =!= 0), "doc_id", "text", 3)
     val corpusIndex = Dedup.bandedBuckets(corpusSets, numPerms, numBands)
       .stage()
-    val stream = fileStream(spark, dir, glob, docs.schema)
+    val stream = fileStream(sess, dir, glob, docs.schema)
       .filter(col("doc_id") % 17 === 0)
     catchUpEachBatch(stream, checkpoint) { (batch, _) =>
       val arrivals = batch.persist()
@@ -854,7 +878,7 @@ object Streams {
           .write.mode("append").parquet(outPath)
       } finally arrivals.unpersist(blocking = false)
     }
-    spark.read.parquet(outPath)
+    sess.read.parquet(outPath)
   }
 
   // ---- the at-rest index kernels -------------------------------------------
@@ -1077,8 +1101,9 @@ object Streams {
                        glob: String = "documents.parquet",
                        maxStoreFiles: Int = 32,
                        seedFrom: Option[String] = None): DataFrame = {
-    val docs = spark.read.option("pathGlobFilter", glob).parquet(dir)
-    val cc = new CcIndex(spark, storePath,
+    val sess = streamSession(spark)
+    val docs = sess.read.option("pathGlobFilter", glob).parquet(dir)
+    val cc = new CcIndex(sess, storePath,
       docs.filter(col("doc_id") % 17 =!= 0), seedFrom, numPerms, numBands,
       threshold, maxStoreFiles)
     // driver-side metrics buffer: rows accumulate per batch and flush
@@ -1092,17 +1117,17 @@ object Streams {
         val r = metricBuf.toList; metricBuf.clear(); r
       }
       if (rows.nonEmpty) {
-        import spark.implicits._
+        import sess.implicits._
         rows.toDF("batch_id", "n_probe_pairs", "n_sets_files",
             "sets_bytes", "n_buckets_files", "buckets_bytes")
           .coalesce(1)
           .write.mode("append").parquet(s"$storePath/metrics")
         // bulk flushes still append one file each — same cap
-        compactStore(spark, s"$storePath/metrics", maxStoreFiles)
+        compactStore(sess, s"$storePath/metrics", maxStoreFiles)
         ()
       }
     }
-    val stream = fileStream(spark, dir, glob, docs.schema)
+    val stream = fileStream(sess, dir, glob, docs.schema)
       .filter(col("doc_id") % 17 === 0)
     catchUpEachBatch(stream, checkpoint) { (batch, batchId) =>
       val arrivals = batch.persist()
@@ -1173,11 +1198,12 @@ object Streams {
                        minLen: Int, glob: String = "documents.parquet",
                        maxStoreFiles: Int = 32,
                        seedFrom: Option[String] = None): DataFrame = {
-    val docs = spark.read.option("pathGlobFilter", glob).parquet(dir)
-    val sa = new SaIndex(spark, storePath,
+    val sess = streamSession(spark)
+    val docs = sess.read.option("pathGlobFilter", glob).parquet(dir)
+    val sa = new SaIndex(sess, storePath,
       docs.filter(col("doc_id") % 17 =!= 0), seedFrom, minLen,
       maxStoreFiles)
-    val stream = fileStream(spark, dir, glob, docs.schema)
+    val stream = fileStream(sess, dir, glob, docs.schema)
       .filter(col("doc_id") % 17 === 0)
     catchUpEachBatch(stream, checkpoint) { (batch, batchId) =>
       val arrivals = batch.persist()
@@ -1234,10 +1260,11 @@ object Streams {
                         glob: String = "embeddings.parquet",
                         maxStoreFiles: Int = 32,
                         seedFrom: Option[String] = None): DataFrame = {
-    val emb = spark.read.option("pathGlobFilter", glob).parquet(dir)
-    val ann = new AnnIndex(spark, storePath,
+    val sess = streamSession(spark)
+    val emb = sess.read.option("pathGlobFilter", glob).parquet(dir)
+    val ann = new AnnIndex(sess, storePath,
       emb.filter(col("vec_id") % 9 =!= 0), seedFrom, maxStoreFiles)
-    val stream = fileStream(spark, dir, glob, emb.schema)
+    val stream = fileStream(sess, dir, glob, emb.schema)
       .filter(col("vec_id") % 9 === 0)
       .select((col("vec_id") + 200000L).as("vec_id"), col("embedding"))
     catchUpEachBatch(stream, checkpoint)(ann.step)
@@ -1296,18 +1323,19 @@ object Streams {
                        ccSeedFrom: Option[String] = None,
                        saSeedFrom: Option[String] = None,
                        annSeedFrom: Option[String] = None): DataFrame = {
-    val docs = spark.read.option("pathGlobFilter", glob).parquet(dir)
+    val sess = streamSession(spark)
+    val docs = sess.read.option("pathGlobFilter", glob).parquet(dir)
     val corpus = docs.filter(col("doc_id") % 17 =!= 0)
-    val emb = spark.read.parquet(
+    val emb = sess.read.parquet(
       embPath.getOrElse(s"$dir/embeddings.parquet"))
-    val cc = new CcIndex(spark, s"$storePath/cc", corpus, ccSeedFrom,
+    val cc = new CcIndex(sess, s"$storePath/cc", corpus, ccSeedFrom,
       numPerms, numBands, threshold, maxStoreFiles)
-    val sa = new SaIndex(spark, s"$storePath/sa", corpus, saSeedFrom,
+    val sa = new SaIndex(sess, s"$storePath/sa", corpus, saSeedFrom,
       minLen, maxStoreFiles)
-    val ann = new AnnIndex(spark, s"$storePath/ann",
+    val ann = new AnnIndex(sess, s"$storePath/ann",
       emb.filter(col("vec_id") % 17 =!= 0), annSeedFrom, maxStoreFiles)
     val vectors = emb.select(col("vec_id"), col("embedding"))
-    val stream = fileStream(spark, dir, glob, docs.schema)
+    val stream = fileStream(sess, dir, glob, docs.schema)
       .filter(col("doc_id") % 17 === 0)
     catchUpEachBatch(stream, checkpoint) { (batch, batchId) =>
       val arrivals = batch.persist()

@@ -4,9 +4,10 @@ import java.io.File
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Session configuration, temp-dir lifetime, state partitioning and the
-  * streaming run, read and commit protocols are each decided in one
-  * place; this keeps copies from drifting back into `src/main`. */
+/** Session configuration, per-run stream sessions, temp-dir lifetime,
+  * state partitioning and the streaming run, read and commit protocols
+  * are each decided in one place; this keeps copies from drifting back
+  * into `src/main`. */
 class SessionGuardSpec extends AnyFunSuite {
   private val root = new File("src/main/scala")
 
@@ -36,14 +37,17 @@ class SessionGuardSpec extends AnyFunSuite {
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 
-  test("spark.sql.shuffle.partitions is set only in Session and " +
-    "Streams, and no statePartitions knob exists") {
+  test("spark.sql.shuffle.partitions and artifact isolation are set " +
+    "only in Session and Streams, newSession() is called only in " +
+    "Streams.streamSession, and no statePartitions knob exists") {
     val set = hits(
-      "(conf\\.set|\\.config)\\(\\s*\"spark\\.sql\\.shuffle\\.partitions\"",
+      "(conf\\.set|\\.config)\\(\\s*\"spark\\.sql\\." +
+        "(shuffle\\.partitions|artifact\\.isolation\\.enabled)\"",
       Set("graft/Session.scala", "graft/streaming/Streams.scala"))
     val knob = hits("statePartitions", Set.empty)
-    assert(set.isEmpty && knob.isEmpty,
-      (set ++ knob).mkString("\n", "\n", ""))
+    val found = set ++ knob ++
+      streamsDefHits(Seq("\\.newSession\\(\\)" -> Set("streamSession")))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 
   /** `text` with its comments blanked (line breaks kept, so line
@@ -58,17 +62,13 @@ class SessionGuardSpec extends AnyFunSuite {
           if (m.matched.startsWith("/")) m.matched.filter(_ == '\n')
           else m.matched))
 
-  test("catch-up runs, snapshot commits and stream reads appear only in " +
-    "Streams' helpers") {
+  /** `rel:line: match in def` for every match, in the comment-stripped
+    * sources, of a pattern outside the Streams defs `owners` allows it
+    * in. */
+  private def streamsDefHits(owners: Seq[(String, Set[String])])
+  : Seq[String] = {
     val streams = "graft/streaming/Streams.scala"
-    // pattern -> the Streams defs allowed to hold it; sessionEventStream
-    // keeps its own uncapped read (each user's whole history must
-    // arrive in one batch)
-    val owners = Seq(
-      "Trigger\\.AvailableNow" -> Set("catchUp"),
-      "_SUCCESS" -> Set("committed"),
-      "\\.readStream" -> Set("fileStream", "sessionEventStream"))
-    val found = for {
+    for {
       f <- sources(root)
       rel = root.toPath.relativize(f.toPath).toString
       text = code(new String(java.nio.file.Files.readAllBytes(f.toPath),
@@ -80,6 +80,17 @@ class SessionGuardSpec extends AnyFunSuite {
       if rel != streams || !enclosing.exists(allowed)
     } yield s"$rel:${text.take(m.start).count(_ == '\n') + 1}: " +
       s"${m.matched} in ${enclosing.getOrElse("<no def>")}"
+  }
+
+  test("catch-up runs, snapshot commits and stream reads appear only in " +
+    "Streams' helpers") {
+    // pattern -> the Streams defs allowed to hold it; sessionEventStream
+    // keeps its own uncapped read (each user's whole history must
+    // arrive in one batch)
+    val found = streamsDefHits(Seq(
+      "Trigger\\.AvailableNow" -> Set("catchUp"),
+      "_SUCCESS" -> Set("committed"),
+      "\\.readStream" -> Set("fileStream", "sessionEventStream")))
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

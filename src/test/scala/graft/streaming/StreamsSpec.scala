@@ -978,6 +978,29 @@ class StreamsSpec extends SparkSpec {
     assert(enriched.collect().toSet === enrichBatch.collect().toSet)
   }
 
+  test("a repeat stream run reuses the first run's generated code") {
+    // Spark caches generated classes per (context class loader, source);
+    // a caller session with artifact isolation on runs its tasks under
+    // a loader of its own, and each stream run in a new session would
+    // compile every class again under yet another one
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.artifact.isolation.enabled", "true")
+    def run(): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Streams.dailyEventAgg(caller, sf0001,
+        scratch(spark, "graft_ckpt_reuse_daily")).collect()
+      Streams.annMaintainStream(caller, sf0001,
+        scratch(spark, "graft_ckpt_reuse_ann"),
+        scratch(spark, "graft_reuse_ann_store")).collect()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    val first = run()
+    val repeat = run()
+    assert(repeat < 10, s"repeat run compiled $repeat classes " +
+      s"(first run $first)")
+  }
+
   /** `table` of sf0.001 split in `orderCol` order into `n` files of a
     * fresh dir, which a file stream reads as `n` micro-batches. */
   private def sliced(table: String, orderCol: String, n: Int,
