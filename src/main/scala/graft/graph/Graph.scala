@@ -483,58 +483,59 @@ object Graph {
       .distinct()
       .repartition(col("src"))
       .persist()
-    val seed = e.select(col("src").as("node")).distinct()
-      .select(col("node"), col("node").as("community"))
-    // the seed checksum rides the seed's own staging job too
-    var prevSum: java.math.BigDecimal = null
-    var labels =
+    try {
+      val seed = e.select(col("src").as("node")).distinct()
+        .select(col("node"), col("node").as("community"))
+      // the seed checksum rides the seed's own staging job too
+      var prevSum: java.math.BigDecimal = null
+      var labels =
+        if (stopOnFixpoint) {
+          val (staged, row) = graft.Staging.stageObserved(seed,
+            checksumMetric(Seq("node", "community")))
+          prevSum = row("ck").asInstanceOf[java.math.BigDecimal]
+          staged
+        } else seed.stage()
+      var round = 0
+      var converged = false
+      while (round < rounds && !converged) {
+        // argmax by (count DESC, community ASC) as a hash-aggregate
+        // max_by — (c, −community) is strictly ordered within a node
+        // (community is unique per (node, community) group), so this is
+        // exactly the old row_number()-over-window pick without the
+        // window's per-node sort pass (two hash aggs per round instead
+        // of agg + sort-window; GraphSpec's sync-replica test pins the
+        // tie-break either way)
+        // shuffle_hash: build the node-sized labels side, stream the
+        // persisted E-row edge list unsorted (see powerIterate's rationale)
+        val next = e.join(labels.hint("shuffle_hash"),
+            e("src") === labels("node"))
+          .select(e("dst").as("node"), col("community"))
+          .groupBy("node", "community")
+          .agg(count(lit(1)).as("c"))
+          .groupBy("node")
+          .agg(max_by(col("community"),
+            struct(col("c"), (-col("community")).as("nc")))
+            .as("community"))
+        if (stopOnFixpoint) {
+          val (staged, row) = graft.Staging.stageObserved(next,
+            checksumMetric(Seq("node", "community")))
+          labels = staged
+          val s = row("ck").asInstanceOf[java.math.BigDecimal]
+          converged = s.compareTo(prevSum) == 0
+          prevSum = s
+        } else labels = next.stage()
+        round += 1
+      }
       if (stopOnFixpoint) {
-        val (staged, row) = graft.Staging.stageObserved(seed,
-          checksumMetric(Seq("node", "community")))
-        prevSum = row("ck").asInstanceOf[java.math.BigDecimal]
-        staged
-      } else seed.stage()
-    var round = 0
-    var converged = false
-    while (round < rounds && !converged) {
-      // argmax by (count DESC, community ASC) as a hash-aggregate
-      // max_by — (c, −community) is strictly ordered within a node
-      // (community is unique per (node, community) group), so this is
-      // exactly the old row_number()-over-window pick without the
-      // window's per-node sort pass (two hash aggs per round instead
-      // of agg + sort-window; GraphSpec's sync-replica test pins the
-      // tie-break either way)
-      // shuffle_hash: build the node-sized labels side, stream the
-      // persisted E-row edge list unsorted (see powerIterate's rationale)
-      val next = e.join(labels.hint("shuffle_hash"),
-          e("src") === labels("node"))
-        .select(e("dst").as("node"), col("community"))
-        .groupBy("node", "community")
-        .agg(count(lit(1)).as("c"))
-        .groupBy("node")
-        .agg(max_by(col("community"),
-          struct(col("c"), (-col("community")).as("nc")))
-          .as("community"))
-      if (stopOnFixpoint) {
-        val (staged, row) = graft.Staging.stageObserved(next,
-          checksumMetric(Seq("node", "community")))
-        labels = staged
-        val s = row("ck").asInstanceOf[java.math.BigDecimal]
-        converged = s.compareTo(prevSum) == 0
-        prevSum = s
-      } else labels = next.stage()
-      round += 1
-    }
-    if (stopOnFixpoint) {
-      if (converged)
-        log.info(s"labelPropagationConverged: stable after $round " +
-          s"rounds (cap $rounds)")
-      else
-        log.info(s"labelPropagationConverged: cap $rounds reached " +
-          "WITHOUT a stable assignment (synchronous LP can 2-cycle)")
-    }
-    e.unpersist()
-    (labels, round)
+        if (converged)
+          log.info(s"labelPropagationConverged: stable after $round " +
+            s"rounds (cap $rounds)")
+        else
+          log.info(s"labelPropagationConverged: cap $rounds reached " +
+            "WITHOUT a stable assignment (synchronous LP can 2-cycle)")
+      }
+      (labels, round)
+    } finally e.unpersist()
   }
 
   private case class Staged(deg: DataFrame, oriented: DataFrame)
@@ -632,64 +633,64 @@ object Graph {
     // once per round
     val eBySrc = e0.repartition(col("src")).persist()
     val eByDst = e0.repartition(col("dst")).persist()
-    val nodes = eBySrc.select(col("src").as("node"))
-      .union(eBySrc.select(col("dst").as("node")))
-      .distinct()
-      .stage()
-    val n = nodes.count()
-    if (n == 0L) {
-      eBySrc.unpersist(); eByDst.unpersist()
-      return nodes.select(col("node"), lit(0L).as("hub_micro"),
-        lit(0L).as("auth_micro"))
-    }
-    var hubs = nodes.select(col("node"), lit(Scale / n).as("score"))
-    var auths: DataFrame = null
-    var iter = 0
-    while (iter < iterations) {
-      // authorities: sum of in-neighbor hub scores, then L1-normalize.
-      // Sums run in decimal(38,0): a raw in-sum can exceed 2⁶³ on a
-      // hub-heavy graph (indeg·Scale), exactly why DuckDB's SUM(BIGINT)
-      // returns HUGEINT — the decimal keeps the two engines bit-equal
-      // shuffle_hash both directions: build the node-sized score side,
-      // stream the persisted E-row list unsorted (powerIterate rationale)
-      val aRaw = eBySrc.join(hubs.hint("shuffle_hash"),
-          eBySrc("src") === hubs("node"))
-        .groupBy(eBySrc("dst").as("node"))
-        .agg(sum(col("score").cast("decimal(38,0)")).as("raw"))
-      val (aStaged, aRow) = graft.Staging.stageObserved(aRaw,
-        coalesce(sum(col("raw").cast("decimal(38,0)")),
-          lit(1).cast("decimal(38,0)")).as("total"))
-      val aTotal = aRow("total").asInstanceOf[java.math.BigDecimal]
-        .toBigInteger.toString
-      auths = aStaged.select(col("node"),
-        expr(s"cast((cast(raw as decimal(38,0)) * ${Scale}L)" +
-          s" div ${aTotal} as long)").as("score"))
-      // hubs: sum of out-neighbor authority scores, then L1-normalize
-      val hRaw = eByDst.join(auths.hint("shuffle_hash"),
-          eByDst("dst") === auths("node"))
-        .groupBy(eByDst("src").as("node"))
-        .agg(sum(col("score").cast("decimal(38,0)")).as("raw"))
-      val (hStaged, hRow) = graft.Staging.stageObserved(hRaw,
-        coalesce(sum(col("raw").cast("decimal(38,0)")),
-          lit(1).cast("decimal(38,0)")).as("total"))
-      val hTotal = hRow("total").asInstanceOf[java.math.BigDecimal]
-        .toBigInteger.toString
-      hubs = hStaged.select(col("node"),
-        expr(s"cast((cast(raw as decimal(38,0)) * ${Scale}L)" +
-          s" div ${hTotal} as long)").as("score"))
-      iter += 1
-    }
-    val out = nodes
-      .join(hubs.select(col("node"), col("score").as("hub_micro")),
-        Seq("node"), "left")
-      .join(auths.select(col("node"), col("score").as("auth_micro")),
-        Seq("node"), "left")
-      .select(col("node"),
-        coalesce(col("hub_micro"), lit(0L)).as("hub_micro"),
-        coalesce(col("auth_micro"), lit(0L)).as("auth_micro"))
-      .stage()
-    eBySrc.unpersist(); eByDst.unpersist()
-    out
+    try {
+      val nodes = eBySrc.select(col("src").as("node"))
+        .union(eBySrc.select(col("dst").as("node")))
+        .distinct()
+        .stage()
+      val n = nodes.count()
+      if (n == 0L) {
+        return nodes.select(col("node"), lit(0L).as("hub_micro"),
+          lit(0L).as("auth_micro"))
+      }
+      var hubs = nodes.select(col("node"), lit(Scale / n).as("score"))
+      var auths: DataFrame = null
+      var iter = 0
+      while (iter < iterations) {
+        // authorities: sum of in-neighbor hub scores, then L1-normalize.
+        // Sums run in decimal(38,0): a raw in-sum can exceed 2⁶³ on a
+        // hub-heavy graph (indeg·Scale), exactly why DuckDB's SUM(BIGINT)
+        // returns HUGEINT — the decimal keeps the two engines bit-equal
+        // shuffle_hash both directions: build the node-sized score side,
+        // stream the persisted E-row list unsorted (powerIterate rationale)
+        val aRaw = eBySrc.join(hubs.hint("shuffle_hash"),
+            eBySrc("src") === hubs("node"))
+          .groupBy(eBySrc("dst").as("node"))
+          .agg(sum(col("score").cast("decimal(38,0)")).as("raw"))
+        val (aStaged, aRow) = graft.Staging.stageObserved(aRaw,
+          coalesce(sum(col("raw").cast("decimal(38,0)")),
+            lit(1).cast("decimal(38,0)")).as("total"))
+        val aTotal = aRow("total").asInstanceOf[java.math.BigDecimal]
+          .toBigInteger.toString
+        auths = aStaged.select(col("node"),
+          expr(s"cast((cast(raw as decimal(38,0)) * ${Scale}L)" +
+            s" div ${aTotal} as long)").as("score"))
+        // hubs: sum of out-neighbor authority scores, then L1-normalize
+        val hRaw = eByDst.join(auths.hint("shuffle_hash"),
+            eByDst("dst") === auths("node"))
+          .groupBy(eByDst("src").as("node"))
+          .agg(sum(col("score").cast("decimal(38,0)")).as("raw"))
+        val (hStaged, hRow) = graft.Staging.stageObserved(hRaw,
+          coalesce(sum(col("raw").cast("decimal(38,0)")),
+            lit(1).cast("decimal(38,0)")).as("total"))
+        val hTotal = hRow("total").asInstanceOf[java.math.BigDecimal]
+          .toBigInteger.toString
+        hubs = hStaged.select(col("node"),
+          expr(s"cast((cast(raw as decimal(38,0)) * ${Scale}L)" +
+            s" div ${hTotal} as long)").as("score"))
+        iter += 1
+      }
+      val out = nodes
+        .join(hubs.select(col("node"), col("score").as("hub_micro")),
+          Seq("node"), "left")
+        .join(auths.select(col("node"), col("score").as("auth_micro")),
+          Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("hub_micro"), lit(0L)).as("hub_micro"),
+          coalesce(col("auth_micro"), lit(0L)).as("auth_micro"))
+        .stage()
+      out
+    } finally { eBySrc.unpersist(); eByDst.unpersist() }
   }
 
   /** Personalized PageRank (random walk with restart): teleport mass

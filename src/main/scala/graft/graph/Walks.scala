@@ -53,38 +53,39 @@ object Walks {
       .select(col("src").as("a_src"), col("rk").cast("long").as("a_rk"),
         col("dst").as("a_dst"))
       .persist()
-    val deg = adj.groupBy(col("a_src").as("d_src"))
-      .agg(count(lit(1)).as("deg")).stage()
-    val walkIds = broadcast(
-      e.sparkSession.range(walksPerNode).toDF("walk"))
-    var frontier = e.select(col("src").as("start"))
-      .union(e.select(col("dst").as("start"))).distinct()
-      .crossJoin(walkIds)
-      .select(col("start"), col("walk"), col("start").as("node"))
-      .stage()
-    var out = frontier.withColumn("step", lit(0))
-    for (t <- 1 to steps) {
-      // md5("start|walk|t") mod degree — one adjacency row per walk.
-      // shuffle_hash with the WALK side as build (guide §3.1): the
-      // default SortMergeJoin re-sorts the persisted E-row adjacency
-      // every step (persist pins rows, not order); hashing the bounded
-      // frontier instead streams the adjacency unsorted, so each step
-      // pays one walk-sized exchange and zero E-row sorts.
-      frontier = frontier
-        .join(deg.hint("shuffle_hash"), col("node") === col("d_src"))
-        .withColumn("pick",
-          conv(substring(md5(concat_ws("|", col("start"), col("walk"),
-            lit(t))), 1, 8), 16, 10).cast("long") % col("deg"))
-        .hint("shuffle_hash")
-        .join(adj, col("node") === col("a_src") &&
-          col("pick") === col("a_rk"))
-        .select(col("start"), col("walk"), col("a_dst").as("node"))
+    try {
+      val deg = adj.groupBy(col("a_src").as("d_src"))
+        .agg(count(lit(1)).as("deg")).stage()
+      val walkIds = broadcast(
+        e.sparkSession.range(walksPerNode).toDF("walk"))
+      var frontier = e.select(col("src").as("start"))
+        .union(e.select(col("dst").as("start"))).distinct()
+        .crossJoin(walkIds)
+        .select(col("start"), col("walk"), col("start").as("node"))
         .stage()
-      out = out.unionByName(frontier.withColumn("step", lit(t)))
-    }
-    adj.unpersist() // out reads only the staged per-step frontiers
-    out.select(col("start"), col("walk").cast("long").as("walk"),
-      col("step").cast("long").as("step"), col("node"))
+      var out = frontier.withColumn("step", lit(0))
+      for (t <- 1 to steps) {
+        // md5("start|walk|t") mod degree — one adjacency row per walk.
+        // shuffle_hash with the WALK side as build (guide §3.1): the
+        // default SortMergeJoin re-sorts the persisted E-row adjacency
+        // every step (persist pins rows, not order); hashing the bounded
+        // frontier instead streams the adjacency unsorted, so each step
+        // pays one walk-sized exchange and zero E-row sorts.
+        frontier = frontier
+          .join(deg.hint("shuffle_hash"), col("node") === col("d_src"))
+          .withColumn("pick",
+            conv(substring(md5(concat_ws("|", col("start"), col("walk"),
+              lit(t))), 1, 8), 16, 10).cast("long") % col("deg"))
+          .hint("shuffle_hash")
+          .join(adj, col("node") === col("a_src") &&
+            col("pick") === col("a_rk"))
+          .select(col("start"), col("walk"), col("a_dst").as("node"))
+          .stage()
+        out = out.unionByName(frontier.withColumn("step", lit(t)))
+      }
+      out.select(col("start"), col("walk").cast("long").as("walk"),
+        col("step").cast("long").as("step"), col("node"))
+    } finally adj.unpersist() // out reads only the staged per-step frontiers
   }
 
   /** node2vec walks (Grover & Leskovec 2016): second-order biased walks
@@ -141,87 +142,88 @@ object Walks {
       .select(col("src").as("a_src"), col("rk").cast("long").as("a_rk"),
         col("dst").as("a_dst"))
       .persist()
-    val deg = adj.groupBy(col("a_src").as("d_src"))
-      .agg(count(lit(1)).as("deg")).stage()
-    val walkIds = broadcast(
-      e.sparkSession.range(walksPerNode).toDF("walk"))
-    val starts = e.select(col("src").as("start"))
-      .union(e.select(col("dst").as("start"))).distinct()
-      .crossJoin(walkIds)
-      .stage()
-    var out = starts
-      .select(col("start"), col("walk"), lit(0).as("step"),
-        col("start").as("node"))
-    // step 1: uniform (no prev yet) — same keyed pick as randomWalks
-    // deliberately NO shuffle_hash hints in node2vec (unlike
-    // randomWalks): its graph is the small support-filtered cut, where
-    // the planner's broadcasts beat forced shuffles at every step
-    // (measured 0.63x with the hints forced)
-    var frontier = starts
-      .select(col("start"), col("walk"), col("start").as("node"))
-      .join(deg, col("node") === col("d_src"))
-      .withColumn("pick",
-        conv(substring(md5(concat_ws("|", col("start"), col("walk"),
-          lit(1))), 1, 8), 16, 10).cast("long") % col("deg"))
-      .join(adj, col("node") === col("a_src") &&
-        col("pick") === col("a_rk"))
-      .select(col("start"), col("walk"), col("node").as("prev"),
-        col("a_dst").as("node"))
-      .stage()
-    out = out.unionByName(frontier
-      .select(col("start"), col("walk"), lit(1).as("step"), col("node")))
-    for (t <- 2 to steps) {
-      val proposals = frontier
+    try {
+      val deg = adj.groupBy(col("a_src").as("d_src"))
+        .agg(count(lit(1)).as("deg")).stage()
+      val walkIds = broadcast(
+        e.sparkSession.range(walksPerNode).toDF("walk"))
+      val starts = e.select(col("src").as("start"))
+        .union(e.select(col("dst").as("start"))).distinct()
+        .crossJoin(walkIds)
+        .stage()
+      var out = starts
+        .select(col("start"), col("walk"), lit(0).as("step"),
+          col("start").as("node"))
+      // step 1: uniform (no prev yet) — same keyed pick as randomWalks
+      // deliberately NO shuffle_hash hints in node2vec (unlike
+      // randomWalks): its graph is the small support-filtered cut, where
+      // the planner's broadcasts beat forced shuffles at every step
+      // (measured 0.63x with the hints forced)
+      var frontier = starts
+        .select(col("start"), col("walk"), col("start").as("node"))
         .join(deg, col("node") === col("d_src"))
-        .withColumn("att",
-          explode(sequence(lit(1), lit(maxAttempts))))
         .withColumn("pick",
-          conv(substring(md5(concat_ws("|", lit("n2vp"), col("start"),
-            col("walk"), lit(t), col("att"))), 1, 8), 16, 10)
-            .cast("long") % col("deg"))
+          conv(substring(md5(concat_ws("|", col("start"), col("walk"),
+            lit(1))), 1, 8), 16, 10).cast("long") % col("deg"))
         .join(adj, col("node") === col("a_src") &&
           col("pick") === col("a_rk"))
-        .select(col("start"), col("walk"), col("prev"), col("node"),
-          col("att"), col("a_dst").as("cand"))
-      val marked = proposals
-        // ONE edge-existence probe classifies the proposal: is cand a
-        // neighbor of prev? (the common-neighbor class) — never a
-        // common-neighbor LIST materialization. Deliberately NOT
-        // shuffle_hash: a LEFT OUTER join can only hash-build its
-        // RIGHT side, and that is the E-row adjacency — sort-merge
-        // spills gracefully where an E-sized per-partition hash map
-        // is the §5 OOM shape.
-        .join(adj.select(col("a_src").as("m_src"),
-          col("a_dst").as("m_dst"), lit(1).as("m")),
-          col("prev") === col("m_src") && col("cand") === col("m_dst"),
-          "left")
-        .withColumn("w",
-          when(col("cand") === col("prev"), lit(wReturnMilli))
-            .when(col("m").isNotNull, lit(wCommonMilli))
-            .otherwise(lit(wFarMilli)))
-        .withColumn("acc",
-          conv(substring(md5(concat_ws("|", lit("n2va"), col("start"),
-            col("walk"), lit(t), col("att"))), 1, 8), 16, 10)
-            .cast("long") % wMax < col("w"))
-        // accepted attempts keep their index, rejected shift past the
-        // budget: per-walk keys are unique, so min_by is deterministic
-        // and the all-rejected fallback is attempt 1's proposal
-        .withColumn("key",
-          when(col("acc"), col("att"))
-            .otherwise(col("att") + maxAttempts))
-      frontier = marked.groupBy("start", "walk")
-        .agg(min_by(struct(col("node"), col("cand")), col("key"))
-          .as("sel"))
-        .select(col("start"), col("walk"), col("sel.node").as("prev"),
-          col("sel.cand").as("node"))
+        .select(col("start"), col("walk"), col("node").as("prev"),
+          col("a_dst").as("node"))
         .stage()
       out = out.unionByName(frontier
-        .select(col("start"), col("walk"), lit(t).as("step"),
-          col("node")))
-    }
-    adj.unpersist() // out reads only the staged per-step frontiers
-    out.select(col("start"), col("walk").cast("long").as("walk"),
-      col("step").cast("long").as("step"), col("node"))
+        .select(col("start"), col("walk"), lit(1).as("step"), col("node")))
+      for (t <- 2 to steps) {
+        val proposals = frontier
+          .join(deg, col("node") === col("d_src"))
+          .withColumn("att",
+            explode(sequence(lit(1), lit(maxAttempts))))
+          .withColumn("pick",
+            conv(substring(md5(concat_ws("|", lit("n2vp"), col("start"),
+              col("walk"), lit(t), col("att"))), 1, 8), 16, 10)
+              .cast("long") % col("deg"))
+          .join(adj, col("node") === col("a_src") &&
+            col("pick") === col("a_rk"))
+          .select(col("start"), col("walk"), col("prev"), col("node"),
+            col("att"), col("a_dst").as("cand"))
+        val marked = proposals
+          // ONE edge-existence probe classifies the proposal: is cand a
+          // neighbor of prev? (the common-neighbor class) — never a
+          // common-neighbor LIST materialization. Deliberately NOT
+          // shuffle_hash: a LEFT OUTER join can only hash-build its
+          // RIGHT side, and that is the E-row adjacency — sort-merge
+          // spills gracefully where an E-sized per-partition hash map
+          // is the §5 OOM shape.
+          .join(adj.select(col("a_src").as("m_src"),
+            col("a_dst").as("m_dst"), lit(1).as("m")),
+            col("prev") === col("m_src") && col("cand") === col("m_dst"),
+            "left")
+          .withColumn("w",
+            when(col("cand") === col("prev"), lit(wReturnMilli))
+              .when(col("m").isNotNull, lit(wCommonMilli))
+              .otherwise(lit(wFarMilli)))
+          .withColumn("acc",
+            conv(substring(md5(concat_ws("|", lit("n2va"), col("start"),
+              col("walk"), lit(t), col("att"))), 1, 8), 16, 10)
+              .cast("long") % wMax < col("w"))
+          // accepted attempts keep their index, rejected shift past the
+          // budget: per-walk keys are unique, so min_by is deterministic
+          // and the all-rejected fallback is attempt 1's proposal
+          .withColumn("key",
+            when(col("acc"), col("att"))
+              .otherwise(col("att") + maxAttempts))
+        frontier = marked.groupBy("start", "walk")
+          .agg(min_by(struct(col("node"), col("cand")), col("key"))
+            .as("sel"))
+          .select(col("start"), col("walk"), col("sel.node").as("prev"),
+            col("sel.cand").as("node"))
+          .stage()
+        out = out.unionByName(frontier
+          .select(col("start"), col("walk"), lit(t).as("step"),
+            col("node")))
+      }
+      out.select(col("start"), col("walk").cast("long").as("walk"),
+        col("step").cast("long").as("step"), col("node"))
+    } finally adj.unpersist() // out reads only the staged per-step frontiers
   }
 
   /** Skip-gram positive pairs from the walk corpus: co-occurrences

@@ -785,4 +785,52 @@ class GraphSpec extends SparkSpec {
     Graph.pageRankWeighted(edges, "s", "d", "w", iterations = 2).count()
     assert(cache.isEmpty, "pageRankWeighted leaked its edge frame")
   }
+
+  /** A small edge list whose first materialization raises "boom". A
+    * range source, not local rows: the optimizer folds projections over
+    * local rows while planning, before an operator persists anything. */
+  private def raisingEdges = spark.range(12).select(
+    when(col("id") === 5L, raise_error(lit("boom")))
+      .otherwise(col("id") % 6).as("s"),
+    ((col("id") * 5 + 1) % 6).as("d"))
+
+  /** Runs `op` over [[raisingEdges]] from an empty cache: the error
+    * surfaces and nothing the operator persisted stays cached. */
+  private def assertReleasedOnError(name: String)(op: => Any): Unit = {
+    spark.catalog.clearCache()
+    val ex = intercept[Exception](op)
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+    assert(msgs.exists(_.contains("boom")), s"$name: $ex")
+    assert(spark.sharedState.cacheManager.isEmpty,
+      s"$name leaked a persisted frame when its run threw")
+  }
+
+  test("labelPropagation releases its persisted edge list when a run " +
+    "throws") {
+    assertReleasedOnError("labelPropagation") {
+      Graph.labelPropagation(raisingEdges, "s", "d", rounds = 2)
+    }
+  }
+
+  test("hits releases both persisted edge copies when a run throws") {
+    assertReleasedOnError("hits") {
+      Graph.hits(raisingEdges, "s", "d", iterations = 2)
+    }
+  }
+
+  test("randomWalks releases its persisted adjacency when a run throws") {
+    assertReleasedOnError("randomWalks") {
+      Walks.randomWalks(raisingEdges, "s", "d", walksPerNode = 2, steps = 2)
+    }
+  }
+
+  test("node2vecWalks releases its persisted adjacency when a run " +
+    "throws") {
+    assertReleasedOnError("node2vecWalks") {
+      Walks.node2vecWalks(raisingEdges, "s", "d", walksPerNode = 2,
+        steps = 3, wReturnMilli = 500, wCommonMilli = 1000,
+        wFarMilli = 2000)
+    }
+  }
 }
