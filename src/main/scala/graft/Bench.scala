@@ -1,6 +1,7 @@
 package graft
 
 import graft.ArtifactStore.scratch
+import graft.sources.Parquet
 
 /** Driver-run benchmark: times every SparkEntry query at
   * SPARK_GRAFT_SF_DIR, prints ONE JSON line.
@@ -28,7 +29,7 @@ object Bench {
     // the bench before the JSON line is emitted
     try {
       import org.apache.spark.sql.functions._
-      spark.read.parquet(s"$sfDir/nation.parquet").count()
+      Parquet.read(spark, s"$sfDir/nation.parquet").count()
       SparkEntry.queries.get("q_agg_q1")
         .foreach(fn => fn(spark, sfDir).write.format("noop")
           .mode("overwrite").save())

@@ -10,7 +10,7 @@ import graft.graph.{Graph, Walks}
 import graft.multimodal.Multimodal
 import graft.ops.{analytics, asof, baskets, expectations, exprs, qsketch, rangejoin, sketches, sweepline, timeseries, windows}
 import graft.similarity.{LabelEval, Similarity}
-import graft.sources.{HtmlTables, Layout, StagedSources}
+import graft.sources.{HtmlTables, Layout, Parquet, StagedSources}
 import graft.streaming.Streams
 import graft.text.{Bpe, Importance, Packing, SuffixArray, Text}
 
@@ -83,7 +83,7 @@ object ExtensionQueries {
       .write.mode("overwrite").parquet(s"$p/codes")
   }
   private[graft] def sharedPqCodes(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(pqCodes(s, d) + "/codes")
+    Parquet.read(s, pqCodes(s, d) + "/codes")
 
   // The customer↔supplier trade graph at rest: like sharedPqCodes, the
   // edge list of a production graph is a MATERIALIZED artifact (built
@@ -101,7 +101,7 @@ object ExtensionQueries {
       .write.mode("overwrite").parquet(s"$p/edges")
   }
   private[graft] def sharedTradeEdges(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(tradeEdges(s, d) + "/edges")
+    Parquet.read(s, tradeEdges(s, d) + "/edges")
 
   /** Part co-occurrence edges (a < b) from lineitem baskets, one row per
     * (order, pair) occurrence — the input of the triangle/Adamic-Adar
@@ -147,7 +147,7 @@ object ExtensionQueries {
       .write.mode("overwrite").parquet(s"$p/sa")
   }
   private[graft] def sharedSuffixArray(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(saIndex(s, d) + "/sa")
+    Parquet.read(s, saIndex(s, d) + "/sa")
 
   // A sketch STORE: two per-shard CMS summaries serialized to binary-
   // payload parquet files — the at-rest artifact a 100 TB deployment
@@ -213,7 +213,7 @@ object ExtensionQueries {
       .parquet(s"$p/pairs")
   }
   private[graft] def coOccurrencePairs(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(coPairs(s, d) + "/pairs")
+    Parquet.read(s, coPairs(s, d) + "/pairs")
 
   // The graph SNAPSHOT at rest — the canonical derived views every
   // graph analytic consumes, persisted once per corpus snapshot the
@@ -259,23 +259,23 @@ object ExtensionQueries {
       .write.mode("overwrite").parquet(s"$p/co_counts")
     // the support cut derives from the WRITTEN rollup (one cheap
     // re-read beats re-aggregating the pair stream)
-    s.read.parquet(s"$p/co_counts").filter(col("sup") >= 2)
+    Parquet.read(s, s"$p/co_counts").filter(col("sup") >= 2)
       .write.mode("overwrite").parquet(s"$p/co_support")
   }
   private[graft] def symAdjacency(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(graphSnapshotDir(s, d) + "/sym")
+    Parquet.read(s, graphSnapshotDir(s, d) + "/sym")
   private[graft] def weightedSymAdjacency(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(graphSnapshotDir(s, d) + "/sym_w")
+    Parquet.read(s, graphSnapshotDir(s, d) + "/sym_w")
   private[graft] def graphDegrees(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(graphSnapshotDir(s, d) + "/degrees")
+    Parquet.read(s, graphSnapshotDir(s, d) + "/degrees")
   // node inventory = the degree view with the count pruned away at
   // the parquet scan — no separate file, no distinct per query
   private[graft] def graphNodes(s: SparkSession, d: String): DataFrame =
     graphDegrees(s, d).select("node")
   private[graft] def coSupportGraph(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(graphSnapshotDir(s, d) + "/co_support")
+    Parquet.read(s, graphSnapshotDir(s, d) + "/co_support")
   private[graft] def coCountsGraph(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(graphSnapshotDir(s, d) + "/co_counts")
+    Parquet.read(s, graphSnapshotDir(s, d) + "/co_counts")
 
   // The DeepWalk corpus at rest: walk generation is a training-data
   // BUILD step (the corpus is consumed by skip-gram sampling, probing,
@@ -289,7 +289,7 @@ object ExtensionQueries {
       .write.mode("overwrite").parquet(s"$p/walks")
   }
   private[graft] def sharedWalkCorpus(s: SparkSession, d: String): DataFrame =
-    s.read.parquet(walkCorpus(s, d) + "/walks")
+    Parquet.read(s, walkCorpus(s, d) + "/walks")
 
   // The SA PROBE INDEX at rest — the incremental-maintenance artifact
   // set a production exact-substring dedup persists NEXT TO the SA so
@@ -377,14 +377,14 @@ object ExtensionQueries {
       .select(concat_ws("#", col("doc_id"), col("seg_id"))
         .as("seg_key"), col("seg_text"))
       .write.mode("overwrite").parquet(s"$p/segs")
-    SuffixArray.suffixArray(s.read.parquet(s"$p/segs"),
+    SuffixArray.suffixArray(Parquet.read(s, s"$p/segs"),
         "seg_key", "seg_text")
       .write.mode("overwrite").parquet(s"$p/sa")
   }
   private[graft] def sharedScrubbedSa(s: SparkSession, d: String)
   : (DataFrame, DataFrame) = {
     val p = scrubSa(s, d)
-    (s.read.parquet(s"$p/segs"), s.read.parquet(s"$p/sa"))
+    (Parquet.read(s, s"$p/segs"), Parquet.read(s, s"$p/sa"))
   }
 
   /** Force every shared AT-REST artifact for (session, sf dir) — every

@@ -2,6 +2,7 @@ package graft
 
 import graft.ArtifactStore.scratch
 import graft.Staging._
+import graft.sources.Parquet
 import org.apache.spark.sql.functions._
 
 import graft.ops.{exprs, windows}
@@ -1506,7 +1507,7 @@ object ScaleSmoke {
         vecs.select(col("vec_id"), col("embedding")), store,
         maxMeanD2 = 0.0)
       require(rebuilt, "forced gate must trip")
-      spark.read.parquet(s"$store/assignment").count()
+      Parquet.read(spark, s"$store/assignment").count()
     }
 
     spark.stop()

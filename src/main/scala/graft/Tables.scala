@@ -1,5 +1,6 @@
 package graft
 
+import graft.sources.Parquet
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -9,13 +10,17 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * The reference engine's data model is "a flat table per entity, parquet at
   * rest in a lake layout" (SURVEY.md §1; reference
   * `data_ingestion/dags/scrape_data_to_gcs.py:34-39,196-320`). Here every
-  * entity is a parquet file under one scale-factor directory; schemas are
-  * carried by parquet (declared, not inferred) so Catalyst gets exact types
-  * and the vectorized reader + column pruning work out of the box.
+  * entity is a parquet file under one scale-factor directory; each table's
+  * schema is the one its parquet footer carries, so Catalyst gets exact
+  * types and the vectorized reader + column pruning work out of the box.
   *
-  * Scale note: `spark.read.parquet` on a directory of files produces one task
-  * per row-group/128MB split — at 100 TB this is the same call, just more
-  * splits; nothing here is driver-bound.
+  * Reads go through [[graft.sources.Parquet]], which reads that footer on
+  * the driver: building a table's frame lists its path and reads one
+  * footer, and starts no Spark job (`spark.read.parquet` starts a
+  * one-task schema-inference job per read). The scan itself is Spark's:
+  * one task per row-group/128MB split, at 100 TB the same call with more
+  * splits. The driver-side cost per read is the listing and one footer,
+  * whatever the table size.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -24,7 +29,7 @@ object Tables {
 
   /** Read one entity table from a scale-factor dir. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    Parquet.read(spark, s"$dir/$name.parquet")
 
   /** `events` with a usable TimestampType `ts`, whatever the file stored.
     *

@@ -9,7 +9,7 @@ import graft.graph.{Graph, Walks}
 import graft.multimodal.Multimodal
 import graft.ops.{analytics, asof, baskets, expectations, exprs, qsketch, rangejoin, sketches, sweepline, timeseries, windows}
 import graft.similarity.{LabelEval, Similarity}
-import graft.sources.{HtmlTables, Layout, StagedSources}
+import graft.sources.{HtmlTables, Layout, Parquet, StagedSources}
 import graft.streaming.Streams
 import graft.text.{Bpe, Importance, Packing, SuffixArray, Text}
 
@@ -228,9 +228,9 @@ private[graft] object AnalyticsQueries {
     "q_sketch_merge_at_rest" -> ((s, d) => {
       val store = sharedSketchStore(s, d)
       val merged = sketches.cmsMergeCells(
-        sketches.cmsDeserialize(s.read.parquet(s"$store/shard_0"),
+        sketches.cmsDeserialize(Parquet.read(s, s"$store/shard_0"),
           depth = 4, width = 256),
-        sketches.cmsDeserialize(s.read.parquet(s"$store/shard_1"),
+        sketches.cmsDeserialize(Parquet.read(s, s"$store/shard_1"),
           depth = 4, width = 256))
       merged.select(col("seed").cast("bigint").as("seed"),
           col("bucket").cast("bigint").as("bucket"), col("c"))
@@ -243,8 +243,8 @@ private[graft] object AnalyticsQueries {
     // identical ≤2^-5 bound a direct whole-table build gives
     "q_quantile_merge_at_rest" -> ((s, d) => {
       val store = sharedSketchStore(s, d)
-      val merged = s.read.parquet(s"$store/qsk_shard_0")
-        .unionByName(s.read.parquet(s"$store/qsk_shard_1"))
+      val merged = Parquet.read(s, s"$store/qsk_shard_0")
+        .unionByName(Parquet.read(s, s"$store/qsk_shard_1"))
         .groupBy("bkt_lo").agg(sum(col("cnt")).as("cnt"))
         .withColumn("bkt_hi", col("bkt_lo") +
           call_function("shiftleft", lit(1L),
@@ -262,8 +262,8 @@ private[graft] object AnalyticsQueries {
     // bounded in-row)
     "q_hll_at_rest" -> ((s, d) => {
       val store = sharedSketchStore(s, d)
-      val est = s.read.parquet(s"$store/hll_shard_0")
-        .unionByName(s.read.parquet(s"$store/hll_shard_1"))
+      val est = Parquet.read(s, s"$store/hll_shard_0")
+        .unionByName(Parquet.read(s, s"$store/hll_shard_1"))
         .agg(expr("hll_sketch_estimate(hll_union_agg(sk))")
           .as("est_users"))
       val exact = Tables.events(s, d)
@@ -283,7 +283,7 @@ private[graft] object AnalyticsQueries {
       val docs = t(s, d, "documents")
       val train = docs.filter(col("doc_id") % 97 =!= 0)
       val flagged = Dedup.bloomProbe(
-        s.read.parquet(s"$store/bloom_bench"), train, "doc_id", "text",
+        Parquet.read(s, s"$store/bloom_bench"), train, "doc_id", "text",
         k = 5)
       val exact = Dedup.contamination(train,
         docs.filter(col("doc_id") % 97 === 0), "doc_id", "text", k = 5)

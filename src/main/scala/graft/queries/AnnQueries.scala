@@ -10,7 +10,7 @@ import graft.graph.{Graph, Walks}
 import graft.multimodal.Multimodal
 import graft.ops.{analytics, asof, baskets, expectations, exprs, qsketch, rangejoin, sketches, sweepline, timeseries, windows}
 import graft.similarity.{LabelEval, Similarity}
-import graft.sources.{HtmlTables, Layout, StagedSources}
+import graft.sources.{HtmlTables, Layout, Parquet, StagedSources}
 import graft.streaming.Streams
 import graft.text.{Bpe, Importance, Packing, SuffixArray, Text}
 
@@ -220,7 +220,7 @@ private[graft] object AnnQueries {
         emb.select(col("vec_id"), col("embedding")), store,
         maxMeanD2 = -1.0)
       require(rebuilt, "forced health gate must trip")
-      s.read.parquet(s"$store/assignment")
+      Parquet.read(s, s"$store/assignment")
         .select(col("vec_id"), col("cell").as("cell_after"))
         .join(emb.select(col("vec_id"),
           col("label").as("cell_before")), Seq("vec_id"))

@@ -9,7 +9,7 @@ import graft.graph.{Graph, Walks}
 import graft.multimodal.Multimodal
 import graft.ops.{analytics, asof, baskets, expectations, exprs, qsketch, rangejoin, sketches, sweepline, timeseries, windows}
 import graft.similarity.{LabelEval, Similarity}
-import graft.sources.{HtmlTables, Layout, StagedSources}
+import graft.sources.{HtmlTables, Layout, Parquet, StagedSources}
 import graft.streaming.Streams
 import graft.text.{Bpe, Importance, Packing, SuffixArray, Text}
 
@@ -200,8 +200,8 @@ private[graft] object DedupQueries {
         "doc_a", "doc_b")
       val store = sharedLshIndex(s, d)
       val crossPairs = Dedup.incrementalNearDupsIndexed(newDocs,
-          s.read.parquet(s"$store/sets"),
-          s.read.parquet(s"$store/buckets"),
+          Parquet.read(s, s"$store/sets"),
+          Parquet.read(s, s"$store/buckets"),
           "doc_id", "text", numPerms = 8, numBands = 4, threshold = 0.8)
         .select(col("new_id").as("a"), col("corpus_id").as("b"))
       val newNew = Dedup.minhashLshPairs(newDocs, "doc_id", "text",
@@ -218,8 +218,8 @@ private[graft] object DedupQueries {
       val store = sharedLshIndex(s, d)
       Dedup.incrementalNearDupsIndexed(
         t(s, d, "documents").filter(col("doc_id") % 17 === 0),
-        s.read.parquet(s"$store/sets"),
-        s.read.parquet(s"$store/buckets"),
+        Parquet.read(s, s"$store/sets"),
+        Parquet.read(s, s"$store/buckets"),
         "doc_id", "text", numPerms = 8, numBands = 4, threshold = 0.8)
     }),
 

@@ -9,7 +9,7 @@ import graft.graph.{Graph, Walks}
 import graft.multimodal.Multimodal
 import graft.ops.{analytics, asof, baskets, expectations, exprs, qsketch, rangejoin, sketches, sweepline, timeseries, windows}
 import graft.similarity.{LabelEval, Similarity}
-import graft.sources.{HtmlTables, Layout, StagedSources}
+import graft.sources.{HtmlTables, Layout, Parquet, StagedSources}
 import graft.streaming.Streams
 import graft.text.{Bpe, Importance, Packing, SuffixArray, Text}
 
@@ -161,9 +161,9 @@ private[graft] object SaIndexQueries {
         .unionAll(docs.filter(col("doc_id") % 39 === 0)
           .select((col("doc_id") + 20000000L).as("doc_id"), col("text")))
       SuffixArray.deltaDupPositions(
-          s.read.parquet(s"$p/gram_positions"),
-          s.read.parquet(s"$p/gram_stats"),
-          s.read.parquet(s"$p/dup_report"),
+          Parquet.read(s, s"$p/gram_positions"),
+          Parquet.read(s, s"$p/gram_stats"),
+          Parquet.read(s, s"$p/dup_report"),
           delta, "doc_id", "text", minLen = 5)
         .orderBy("doc_id")
     }),

@@ -10,7 +10,7 @@ import graft.graph.{Graph, Walks}
 import graft.multimodal.Multimodal
 import graft.ops.{analytics, asof, baskets, expectations, exprs, qsketch, rangejoin, sketches, sweepline, timeseries, windows}
 import graft.similarity.{LabelEval, Similarity}
-import graft.sources.{HtmlTables, Layout, StagedSources}
+import graft.sources.{HtmlTables, Layout, Parquet, StagedSources}
 import graft.streaming.Streams
 import graft.text.{Bpe, Importance, Packing, SuffixArray, Text}
 
@@ -105,7 +105,7 @@ private[graft] object SourcesQueries {
         .write.mode("overwrite").parquet(s"$tmp/frag")
       Layout.compact(s, s"$tmp/frag", s"$tmp/compacted",
         targetBytes = 4L * 1024 * 1024)
-      s.read.parquet(s"$tmp/compacted")
+      Parquet.read(s, s"$tmp/compacted")
         .groupBy("o_orderpriority")
         .agg(count(lit(1)).as("cnt"),
           sum(col("o_totalprice").cast("decimal(18,2)")).cast("double")

@@ -1,6 +1,7 @@
 package graft.similarity
 
 import graft.Staging._
+import graft.sources.Parquet
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -792,14 +793,14 @@ object Similarity {
       .getFileSystem(conf)
     def p(s: String) = new org.apache.hadoop.fs.Path(s"$storePath/$s")
     val hasDelta = fs.exists(p("assignment_delta"))
-    val base = spark.read.parquet(s"$storePath/assignment")
+    val base = Parquet.read(spark, s"$storePath/assignment")
       .select(col("vec_id"), col("cell"))
     // merged view: base ∪ delta log, one row per vec_id (crash-replay
     // duplicates in the log are identical rows — frozen centroids —
     // so min() absorbs them exactly)
     val merged = (if (!hasDelta) base
       else base.unionByName(
-        spark.read.parquet(s"$storePath/assignment_delta")
+        Parquet.read(spark, s"$storePath/assignment_delta")
           .select(col("vec_id"), col("cell"))))
       .groupBy("vec_id").agg(min(col("cell")).as("cell"))
     val uncovered = merged
@@ -809,7 +810,7 @@ object Similarity {
         "row in `vectors` — a rebuild would silently drop them from " +
         "the index")
     // health against the STORED centroids — what probes actually pay
-    val storedCents = spark.read.parquet(s"$storePath/centroids")
+    val storedCents = Parquet.read(spark, s"$storePath/centroids")
     val cf = col("centroid").cast("array<float>")
     val perCell = vectors.select(col("vec_id"), col("embedding"))
       .join(merged, "vec_id")
@@ -830,7 +831,7 @@ object Similarity {
     centroidsOf(vectors.select(col("vec_id"), col("embedding")), merged)
       .write.mode("overwrite").parquet(s"$tmp/centroids")
     assignToStoredCells(vectors.select(col("vec_id"), col("embedding")),
-        spark.read.parquet(s"$tmp/centroids"))
+        Parquet.read(spark, s"$tmp/centroids"))
       .write.mode("overwrite").parquet(s"$tmp/assignment")
     // SWAP: old snapshot → prev/ (rollback copy), staged → live
     fs.delete(p("prev"), true)

@@ -72,7 +72,7 @@ object Layout {
     val totalBytes = parts.map(_.getLen).sum
     val nOut = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes)
       .toInt
-    spark.read.parquet(inPath)
+    Parquet.read(spark, inPath)
       .repartition(nOut)
       .write.mode("overwrite").parquet(outPath)
     val after = parquetFiles(new org.apache.hadoop.fs.Path(outPath)).size
@@ -92,7 +92,7 @@ object Layout {
       .map(_.getPath.toString)
       .filter(_.endsWith(".parquet"))
     files.count { f =>
-      val mm = spark.read.parquet(f)
+      val mm = Parquet.read(spark, f)
         .agg(min(col(column)).cast("long"), max(col(column)).cast("long"))
         .head()
       !mm.isNullAt(0) && mm.getLong(0) <= hi && mm.getLong(1) >= lo

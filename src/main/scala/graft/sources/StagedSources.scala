@@ -31,7 +31,7 @@ object StagedSources {
                            partCol: String): DataFrame = {
     val tmp = scratch(spark, "graft_lake")
     df.write.mode("overwrite").partitionBy(partCol).parquet(tmp)
-    spark.read.parquet(tmp)
+    Parquet.read(spark, tmp)
   }
 
   /** ORC sink → ORC scan round trip: the second columnar at-rest format

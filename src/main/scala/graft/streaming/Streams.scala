@@ -2,6 +2,7 @@ package graft.streaming
 
 import graft.ArtifactStore.scratch
 import graft.Staging._
+import graft.sources.Parquet
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -106,16 +107,21 @@ object Streams {
     ns
   }
 
+  /** The `glob` files of `dir` as a batch table (the streams read one
+    * table out of a dir that holds several). */
+  private def globRead(sess: SparkSession, dir: String, glob: String)
+  : DataFrame =
+    Parquet.reader(sess).option("pathGlobFilter", glob).load(dir)
+
   /** The `glob` files of `dir` as a file stream, one file per
     * micro-batch (the file-stream source wants a directory; the glob
     * selects the table out of it). */
   private[graft] def fileStream(sess: SparkSession, dir: String,
                                 glob: String): DataFrame =
-    fileStream(sess, dir, glob,
-      sess.read.option("pathGlobFilter", glob).parquet(dir).schema)
+    fileStream(sess, dir, glob, globRead(sess, dir, glob).schema)
 
   /** [[fileStream]] with the schema of a batch read the caller already
-    * holds, so the files' schema is not inferred a second time. */
+    * holds, so the dir is not listed and a footer read a second time. */
   private def fileStream(sess: SparkSession, dir: String, glob: String,
                          schema: StructType): DataFrame =
     sess.readStream
@@ -140,6 +146,12 @@ object Streams {
     q
   }
 
+  /** The memory sink (and temp view) name of the catch-up at
+    * `checkpoint`. The hash is rendered unsigned: `math.abs` leaves
+    * `Int.MinValue` negative, and a `-` is not valid in a view name. */
+  private[streaming] def memorySinkName(checkpoint: String): String =
+    "graft_sink_" + Integer.toUnsignedString(checkpoint.hashCode)
+
   /** Catch `stream` up into a memory sink and return its rows, read back
     * from the session the stream ran in (the one [[streamSession]]
     * made). The sink's temp view is dropped once the result frame
@@ -147,7 +159,7 @@ object Streams {
     * them on the driver after the caller lets go of it. */
   private def catchUpToMemory(stream: DataFrame, checkpoint: String,
                               mode: String): DataFrame = {
-    val sink = "graft_sink_" + math.abs(checkpoint.hashCode)
+    val sink = memorySinkName(checkpoint)
     catchUp(stream.writeStream.format("memory").queryName(sink)
       .outputMode(mode), checkpoint)
     val sess = stream.sparkSession
@@ -223,7 +235,7 @@ object Streams {
       else {
         val base = snapshotVersions(spark, path).filter(_ < batchId)
           .sorted.lastOption
-          .map(v => spark.read.parquet(s"$path/v_$v"))
+          .map(v => Parquet.read(spark, s"$path/v_$v"))
           .getOrElse(seed)
         val (snapshot, result) = build(base)
         snapshot.write.mode("overwrite").parquet(s"$path/v_$batchId")
@@ -241,7 +253,7 @@ object Streams {
   private def latestSnapshot(spark: SparkSession, path: String,
                              schema: StructType): DataFrame =
     snapshotVersions(spark, path).sorted.lastOption
-      .map(v => spark.read.parquet(s"$path/v_$v"))
+      .map(v => Parquet.read(spark, s"$path/v_$v"))
       .getOrElse(emptyFrame(spark, schema))
 
   /** The snapshot-chain MERGE sink: upsert one micro-batch into the
@@ -535,8 +547,8 @@ object Streams {
                    glob: String = "events.parquet",
                    dimDir: String = null): DataFrame = {
     val sess = streamSession(spark)
-    val dim = sess.read
-      .parquet(s"${if (dimDir == null) dir else dimDir}/nation.parquet")
+    val dim = Parquet.read(sess,
+      s"${if (dimDir == null) dir else dimDir}/nation.parquet")
       .select(col("n_nationkey"), col("n_name"))
     val joined = fileStream(sess, dir, glob)
       .select(col("event_id"), col("event_type"),
@@ -651,7 +663,7 @@ object Streams {
     // matches whichever generation the testdata ships (long nanos vs
     // timestamp[us]) — mixed types in one directory would break the
     // shared read schema
-    val raw = spark.read.parquet(evDst.toString)
+    val raw = Parquet.read(spark, evDst.toString)
     val tsIsLong =
       raw.schema("ts").dataType == org.apache.spark.sql.types.LongType
     def farTs(days: Long) =
@@ -706,8 +718,7 @@ object Streams {
                           keys: Seq[String], versionCol: String,
                           glob: String = "events.parquet"): DataFrame = {
     val sess = streamSession(spark)
-    val schema = sess.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema
+    val schema = globRead(sess, dir, glob).schema
     catchUpEachBatch(fileStream(sess, dir, glob, schema), checkpoint) {
       (batch, batchId) =>
         snapshotChainMerge(sess, tablePath, schema, keys, versionCol,
@@ -737,8 +748,7 @@ object Streams {
                      pred: org.apache.spark.sql.Column,
                      glob: String = "events.parquet"): DataFrame = {
     val sess = streamSession(spark)
-    val schema = sess.read.option("pathGlobFilter", glob).parquet(dir)
-      .schema
+    val schema = globRead(sess, dir, glob).schema
     catchUpEachBatch(fileStream(sess, dir, glob, schema), checkpoint) {
       (batch, _) =>
         val ok = coalesce(pred, lit(false))
@@ -816,7 +826,7 @@ object Streams {
         st.isFile && st.getPath.getName.endsWith(".parquet"))
     val before = parts()
     if (before.length > maxFiles) {
-      spark.read.parquet(before.map(_.getPath.toString): _*)
+      Parquet.read(spark, before.map(_.getPath.toString): _*)
         .coalesce(math.max(1, maxFiles / 8))
         .write.mode("append").parquet(dir)
       before.foreach(st => fs.delete(st.getPath, false))
@@ -855,7 +865,7 @@ object Streams {
                      glob: String = "documents.parquet"): DataFrame = {
     import graft.dedup.Dedup
     val sess = streamSession(spark)
-    val docs = sess.read.option("pathGlobFilter", glob).parquet(dir)
+    val docs = globRead(sess, dir, glob)
     // the persisted dedup index, built once — every batch probes it
     val corpusSets = Dedup.shingleSets(
       docs.filter(col("doc_id") % 17 =!= 0), "doc_id", "text", 3)
@@ -878,7 +888,7 @@ object Streams {
           .write.mode("append").parquet(outPath)
       } finally arrivals.unpersist(blocking = false)
     }
-    sess.read.parquet(outPath)
+    Parquet.read(sess, outPath)
   }
 
   // ---- the at-rest index kernels -------------------------------------------
@@ -915,7 +925,7 @@ object Streams {
       Dedup.seedClusterStore(corpus, "doc_id", "text", numPerms, numBands,
         threshold, store)
     }
-    private val seedLabels = spark.read.parquet(s"$store/labels_seed")
+    private val seedLabels = Parquet.read(spark, s"$store/labels_seed")
     private val labelsPath = s"$store/labels"
 
     /** Probe the pre-growth index, grow it, commit the batch's labels,
@@ -939,8 +949,8 @@ object Streams {
         // snapshotted the file listing at analysis time (an implicit
         // InMemoryFileIndex timing assumption, not a contract)
         val cross = Dedup.incrementalNearDupsFromSets(arrSets, arrBanded,
-            spark.read.parquet(s"$store/sets"),
-            spark.read.parquet(s"$store/buckets"), threshold)
+            Parquet.read(spark, s"$store/sets"),
+            Parquet.read(spark, s"$store/buckets"), threshold)
           .select(col("new_id").as("a"), col("corpus_id").as("b"))
           .stage()
         val within = Dedup.nearDupPairsFromIndex(arrSets, arrBanded,
@@ -974,7 +984,7 @@ object Streams {
         "seed_report"), seedFrom) {
       SuffixArray.seedProbeStore(corpus, "doc_id", "text", minLen, store)
     }
-    private val seedReport = spark.read.parquet(s"$store/seed_report")
+    private val seedReport = Parquet.read(spark, s"$store/seed_report")
     private val reportPath = s"$store/report"
 
     /** Probe, grow, compact, commit — the order of
@@ -985,9 +995,9 @@ object Streams {
         // contribution (replay-safe — see saMaintainStream step 1); the
         // anti-join build side is the batch-bounded id set
         val arrIds = arrivals.select("doc_id").distinct()
-        val posView = spark.read.parquet(s"$store/gram_positions")
+        val posView = Parquet.read(spark, s"$store/gram_positions")
           .join(broadcast(arrIds), Seq("doc_id"), "left_anti")
-        val statsView = spark.read.parquet(s"$store/gram_stats")
+        val statsView = Parquet.read(spark, s"$store/gram_stats")
           .filter(col("shard_id") =!= lit(batchId))
         val merged = SuffixArray.deltaDupPositions(posView, statsView,
             base, arrivals, "doc_id", "text", minLen)
@@ -1020,7 +1030,7 @@ object Streams {
     seedStore(spark, store, Seq("assignment", "centroids"), seedFrom) {
       Similarity.seedIvfStore(corpus, "label", store)
     }
-    private val centroids = spark.read.parquet(s"$store/centroids")
+    private val centroids = Parquet.read(spark, s"$store/centroids")
     private val deltaPath = s"$store/assignment_delta"
 
     /** Append each arriving (vec_id, embedding)'s stored-index cell,
@@ -1034,12 +1044,12 @@ object Streams {
 
     /** (vec_id, cell): the stored corpus assignment ∪ the arrivals. */
     def view: DataFrame = {
-      val stored = spark.read.parquet(s"$store/assignment")
+      val stored = Parquet.read(spark, s"$store/assignment")
         .select(col("vec_id"), col("cell"))
       val delta = new Path(deltaPath)
       if (!delta.getFileSystem(spark.sparkContext.hadoopConfiguration)
           .exists(delta)) stored // no arrivals streamed
-      else stored.unionByName(spark.read.parquet(deltaPath)
+      else stored.unionByName(Parquet.read(spark, deltaPath)
         // at-least-once append absorption: frozen centroids make
         // every replay of a vec_id produce the identical cell
         .dropDuplicates("vec_id")
@@ -1102,7 +1112,7 @@ object Streams {
                        maxStoreFiles: Int = 32,
                        seedFrom: Option[String] = None): DataFrame = {
     val sess = streamSession(spark)
-    val docs = sess.read.option("pathGlobFilter", glob).parquet(dir)
+    val docs = globRead(sess, dir, glob)
     val cc = new CcIndex(sess, storePath,
       docs.filter(col("doc_id") % 17 =!= 0), seedFrom, numPerms, numBands,
       threshold, maxStoreFiles)
@@ -1199,7 +1209,7 @@ object Streams {
                        maxStoreFiles: Int = 32,
                        seedFrom: Option[String] = None): DataFrame = {
     val sess = streamSession(spark)
-    val docs = sess.read.option("pathGlobFilter", glob).parquet(dir)
+    val docs = globRead(sess, dir, glob)
     val sa = new SaIndex(sess, storePath,
       docs.filter(col("doc_id") % 17 =!= 0), seedFrom, minLen,
       maxStoreFiles)
@@ -1261,7 +1271,7 @@ object Streams {
                         maxStoreFiles: Int = 32,
                         seedFrom: Option[String] = None): DataFrame = {
     val sess = streamSession(spark)
-    val emb = sess.read.option("pathGlobFilter", glob).parquet(dir)
+    val emb = globRead(sess, dir, glob)
     val ann = new AnnIndex(sess, storePath,
       emb.filter(col("vec_id") % 9 =!= 0), seedFrom, maxStoreFiles)
     val stream = fileStream(sess, dir, glob, emb.schema)
@@ -1324,9 +1334,9 @@ object Streams {
                        saSeedFrom: Option[String] = None,
                        annSeedFrom: Option[String] = None): DataFrame = {
     val sess = streamSession(spark)
-    val docs = sess.read.option("pathGlobFilter", glob).parquet(dir)
+    val docs = globRead(sess, dir, glob)
     val corpus = docs.filter(col("doc_id") % 17 =!= 0)
-    val emb = sess.read.parquet(
+    val emb = Parquet.read(sess,
       embPath.getOrElse(s"$dir/embeddings.parquet"))
     val cc = new CcIndex(sess, s"$storePath/cc", corpus, ccSeedFrom,
       numPerms, numBands, threshold, maxStoreFiles)
@@ -1421,7 +1431,7 @@ object Streams {
   private def sessionEventStream(sess: SparkSession, dir: String)
   : Dataset[SessionEvent] = {
     import sess.implicits._
-    val schema = sess.read.parquet(s"$dir/events.parquet").schema
+    val schema = Parquet.read(sess, s"$dir/events.parquet").schema
     normalizeTs(sess.readStream
       .schema(schema)
       .option("pathGlobFilter", "events.parquet")

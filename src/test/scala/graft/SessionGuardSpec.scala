@@ -5,9 +5,9 @@ import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Session configuration, per-run stream sessions, temp-dir lifetime,
-  * state partitioning and the streaming run, read and commit protocols
-  * are each decided in one place; this keeps copies from drifting back
-  * into `src/main`. */
+  * state partitioning, the streaming run, read and commit protocols and
+  * the parquet schema read are each decided in one place; this keeps
+  * copies from drifting back into `src/main`. */
 class SessionGuardSpec extends AnyFunSuite {
   private val root = new File("src/main/scala")
 
@@ -46,7 +46,7 @@ class SessionGuardSpec extends AnyFunSuite {
       Set("graft/Session.scala", "graft/streaming/Streams.scala"))
     val knob = hits("statePartitions", Set.empty)
     val found = set ++ knob ++
-      streamsDefHits(Seq("\\.newSession\\(\\)" -> Set("streamSession")))
+      defHits(Seq("\\.newSession\\(\\)" -> Set("streamSession")))
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 
@@ -63,11 +63,11 @@ class SessionGuardSpec extends AnyFunSuite {
           else m.matched))
 
   /** `rel:line: match in def` for every match, in the comment-stripped
-    * sources, of a pattern outside the Streams defs `owners` allows it
-    * in. */
-  private def streamsDefHits(owners: Seq[(String, Set[String])])
+    * sources, of a pattern outside the defs of `file` that `owners`
+    * allows it in. */
+  private def defHits(owners: Seq[(String, Set[String])],
+                      file: String = "graft/streaming/Streams.scala")
   : Seq[String] = {
-    val streams = "graft/streaming/Streams.scala"
     for {
       f <- sources(root)
       rel = root.toPath.relativize(f.toPath).toString
@@ -77,7 +77,7 @@ class SessionGuardSpec extends AnyFunSuite {
       m <- pattern.r.findAllMatchIn(text).toSeq
       enclosing = "\\bdef\\s+(\\w+)".r.findAllMatchIn(text.take(m.start))
         .toSeq.lastOption.map(_.group(1))
-      if rel != streams || !enclosing.exists(allowed)
+      if rel != file || !enclosing.exists(allowed)
     } yield s"$rel:${text.take(m.start).count(_ == '\n') + 1}: " +
       s"${m.matched} in ${enclosing.getOrElse("<no def>")}"
   }
@@ -87,10 +87,22 @@ class SessionGuardSpec extends AnyFunSuite {
     // pattern -> the Streams defs allowed to hold it; sessionEventStream
     // keeps its own uncapped read (each user's whole history must
     // arrive in one batch)
-    val found = streamsDefHits(Seq(
+    val found = defHits(Seq(
       "Trigger\\.AvailableNow" -> Set("catchUp"),
       "_SUCCESS" -> Set("committed"),
       "\\.readStream" -> Set("fileStream", "sessionEventStream")))
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("parquet is read without a declared schema only through " +
+    "graft.sources.Parquet, evolvedRead's merging read aside") {
+    // a `.read` chain that reaches `.parquet(` or `.format("parquet")`
+    // with no `.schema(` in it makes Spark infer the schema with a job;
+    // statefulSession's split-count probe declares an empty schema
+    val found = defHits(Seq(
+      "\\.read(?:\\s*\\.(?!schema\\b)\\w+\\((?:[^()]|\\([^()]*\\))*\\))*" +
+        "\\s*\\.(?:parquet\\(|format\\(\\s*\"parquet\"\\s*\\))" ->
+        Set("evolvedRead")), "graft/sources/StagedSources.scala")
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

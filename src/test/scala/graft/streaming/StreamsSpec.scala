@@ -13,6 +13,13 @@ import graft.ArtifactStore.scratch
 class StreamsSpec extends SparkSpec {
   import spark.implicits._
 
+  test("the memory sink name is a valid view name for every checkpoint " +
+    "hash, Int.MinValue included") {
+    assert("polygenelubricants".hashCode === Int.MinValue)
+    assert(Streams.memorySinkName("polygenelubricants") ===
+      "graft_sink_2147483648")
+  }
+
   test("streamed daily agg equals batch daily agg") {
     val dir = "/root/testdata/sf0.001"
     val ckpt = scratch(spark, "graft_ckpt_spec")
