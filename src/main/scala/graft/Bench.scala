@@ -125,16 +125,9 @@ object Bench {
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
           }
           val sec = (System.nanoTime() - t0) / 1e9
-          // release per-query state: localCheckpoint blocks (dedup sets,
-          // CC labels) and cached frames otherwise pin JVM memory across
-          // all ~100 queries, and the accumulated heap pressure GC-stalls
-          // whatever runs late in the alphabet (q_unpivot hit 18 s under
-          // it). Nothing re-reads a finished query's plan, so dropping
-          // the blocks is safe. Clearing BETWEEN repeats keeps every run
-          // cold-cache (only the JIT/codegen warmth differs).
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.valuesIterator
-            .foreach(_.unpersist(blocking = false))
+          // clearing BETWEEN repeats keeps every run cold-cache (only
+          // the JIT/codegen warmth differs)
+          Staging.releaseAll(spark)
           // GC outside the timed section: without it a full collection of
           // the PREVIOUS query's garbage lands inside whichever query runs
           // next (q_agg_q1 measured 8.9 s after the percentile sort's

@@ -1,8 +1,12 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Materialize-and-pin for shared subtrees and iterative lineage cuts.
+/** Every frame the engine materializes, caches or spreads goes through
+  * here: [[Staging.StageOps.stage]] cuts lineage, [[Staging.pinned]]
+  * caches a frame for one loop or micro-batch, [[Staging.spread]]
+  * redistributes an under-partitioned frame, and [[Staging.releaseAll]]
+  * drops what a finished query left cached or staged.
   *
   * Every iterative operator in the engine (PageRank rounds, connected
   * components, BPE merges, k-means) and every shared staged subtree needs
@@ -13,7 +17,7 @@ import org.apache.spark.sql.DataFrame
   * dependent job unrecoverable ("its lineage has been truncated and cannot
   * be recomputed") — a 40-iteration PageRank on 1000 executors would
   * almost surely die. The right primitive depends on deployment, so
-  * [[Staging.stage]] picks at runtime:
+  * `stage` picks at runtime:
   *
   *  - a checkpoint directory IS configured
   *    (`SparkContext.setCheckpointDir`, i.e. a real cluster with durable
@@ -27,18 +31,6 @@ import org.apache.spark.sql.DataFrame
   * Both forms are EAGER (materialize now) and cut lineage identically, so
   * results are bit-identical either way — `StagingSpec` proves it by
   * running PageRank and connected components under both modes.
-  *
-  * Stage or persist, and what a `repartition` before either buys (checked
-  * on Spark 4.1 with AQE on, in the formatted plans of mid-loop rounds at
-  * sf0.1): a staged frame reads back as `Scan ExistingRDD` with
-  * `UnknownPartitioning(0)` — the checkpoint drops the partitioning, so a
-  * `repartition(k)` before `stage()` spares no later exchange on `k`. A
-  * `repartition(k).persist()` frame keeps it: the PageRank and landmark
-  * rounds join the cached edge frame on `k` with no Exchange above its
-  * `InMemoryTableScan`, shuffling only the node-sized side. So an E-row
-  * frame joined on the same key every round is persisted (and unpersisted
-  * on every exit). The relaxation edge list is staged instead, and the
-  * planner broadcasts it whole each round at sf0.1.
   */
 object Staging {
   implicit class StageOps(private val df: DataFrame) extends AnyVal {
@@ -55,7 +47,7 @@ object Staging {
       * frame first. Measured on the 50M trade-graph smoke: bare
       * checkpoint 16.3 s vs persist-first 19.7 s. A caller staging an
       * expensive SCAN-rooted subtree (no shuffle to reuse) should
-      * persist explicitly before staging. Deployments should also set
+      * stage it inside [[Staging.pinned]]. Deployments should also set
       * `spark.cleaner.referenceTracking.cleanCheckpoints=true` so
       * superseded per-iteration checkpoints are deleted when their
       * frames are garbage-collected; without it, reliable checkpoint
@@ -81,5 +73,50 @@ object Staging {
     val obs = org.apache.spark.sql.Observation()
     val staged = df.observe(obs, metrics.head, metrics.tail: _*).stage()
     (staged, obs.get)
+  }
+
+  /** Persist `df`, run `body` on it, and unpersist it on every exit, a
+    * thrown error included: the one place the engine caches a frame.
+    *
+    * Pin or stage: an E-row frame joined on the same key every round is
+    * pinned, and everything else is staged. A staged frame reads back as
+    * `Scan ExistingRDD` with `UnknownPartitioning(0)` — the checkpoint
+    * drops the partitioning, so a `repartition(k)` before `stage()`
+    * spares no later exchange on `k`. A pinned `repartition(k)` frame
+    * keeps it: the rounds join it on `k` with no Exchange above its
+    * `InMemoryTableScan`, shuffling only the node-sized side (Spark 4.1,
+    * AQE on, mid-loop plans at sf0.1). The caller repartitions, since a
+    * frame may arrive partitioned already. A micro-batch that two writes
+    * read is pinned too, so its source files are read once.
+    *
+    * `body` must not `return` from the enclosing method: Scala 2.13
+    * throws that return through the loan as a `NonLocalReturnControl`. */
+  def pinned[A](df: DataFrame)(body: DataFrame => A): A = {
+    val p = df.persist()
+    try body(p)
+    finally p.unpersist()
+  }
+
+  /** Spread an under-partitioned frame across the cluster's cores —
+    * the guard every compute-heavy scan-local pass needs in front of a
+    * small/staged source that arrives as ONE scan partition (single
+    * parquet row group): without it the whole pass serializes on one
+    * core. A no-op at lake scale, where partitions ≥ cores. */
+  private[graft] def spread(df: DataFrame): DataFrame = {
+    val par = df.sparkSession.sparkContext.defaultParallelism
+    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
+  }
+
+  /** Drop every cached frame and staged block in the session: the reset
+    * between two queries of a sequential run (Bench, Verify). Left in
+    * place, localCheckpoint blocks (dedup sets, CC labels) and cached
+    * frames pin JVM memory across the whole run, and the accumulated
+    * heap pressure GC-stalls whatever runs late (q_unpivot hit 18 s
+    * under it). Nothing re-reads a finished query's plan, so dropping
+    * the blocks is safe. */
+  private[graft] def releaseAll(spark: SparkSession): Unit = {
+    spark.catalog.clearCache()
+    spark.sparkContext.getPersistentRDDs.valuesIterator
+      .foreach(_.unpersist(blocking = false))
   }
 }

@@ -620,7 +620,7 @@ object Dedup {
     // same gram sets. Spread the checkpoint across the cluster first —
     // the source may be a handful of row groups (testdata: ONE), and
     // downstream stages inherit the checkpoint's partitioning.
-    val spreadDocs = graft.similarity.Similarity.spread(docs)
+    val spreadDocs = spread(docs)
     // graft_shingles emits each doc's DISTINCT k-grams (set semantics)
     val sets = spreadDocs.select(col("doc_id"),
       Text.shingles(Text.tokens(col("text")), k).as("grams"))

@@ -46,7 +46,7 @@ object Graph {
     * Shape per iteration: ranks ⋈ out-degreed edges on `src` (one
     * shuffle on src), contributions re-keyed and summed per `dst` (one
     * shuffle on dst), left-join back onto the node set so in-degree-0
-    * nodes keep their teleport share. Edges + degrees are persisted
+    * nodes keep their teleport share. Edges + degrees are pinned
     * ONCE, hash-partitioned on `src`, and reused by every iteration,
     * whose joins exchange only the node-sized side; each iteration is
     * checkpointed so lineage stays flat — the driver never sees a row.
@@ -140,13 +140,10 @@ object Graph {
     if (n == 0L)
       return (nodes.select(col("node"), lit(0L).as("rank_micro")), 0)
 
-    // `out` joined onto the edge list once, hash-partitioned on the join
-    // key and persisted, so the E-row edge list is exchanged once however
-    // many rounds run (see [[graft.Staging]] on persist vs stage); every
-    // exit below, a thrown `require` included, releases it
+    // `out` joined onto the edge list once and pinned on the join key,
+    // so the E-row edge list is exchanged once however many rounds run
     val outDeg = e.groupBy("src").agg(out.as("out"))
-    val eDeg = e.join(outDeg, "src").repartition(col("src")).persist()
-    try {
+    pinned(e.join(outDeg, "src").repartition(col("src"))) { eDeg =>
       // dangling-node (and seed) flags staged onto the node set ONCE:
       // nodes absent from outDeg are sinks whose mass must be
       // redistributed. nSinks is one bounded driver scalar; when it is 0
@@ -197,7 +194,7 @@ object Graph {
         // symmetrized graphs have sinkSum = 0 throughout
         val sinkShare: Long = if (nSinks == 0L) 0L else sinkSum / n
         // shuffle_hash on the node-sized sides (guide §3.1): the default
-        // SortMergeJoin re-SORTS the persisted E-row eDeg side every
+        // SortMergeJoin re-SORTS the pinned E-row eDeg side every
         // round (persist pins rows, not order). Hashing builds the
         // bounded ranks/contrib side instead and streams eDeg unsorted —
         // per round: one exchange of the node-sized frame, zero E-row
@@ -244,7 +241,7 @@ object Graph {
             "unit of stationary")
       }
       (ranks.select(col("node"), col("rank_micro")), iter)
-    } finally eDeg.unpersist()
+    }
   }
 
   /** Global triangle count over an UNDIRECTED edge list (one row per
@@ -475,15 +472,13 @@ object Graph {
     val e0 = edges.select(col(aCol).cast("long").as("a"),
       col(bCol).cast("long").as("b"))
       .filter(col("a") =!= col("b"))
-    // persisted on src (see [[graft.Staging]] on persist vs stage), so
-    // each round's edges⋈labels join exchanges only the node-sized
-    // labels side — the E-row edge list is shuffled once, not per round
-    val e = e0.select(col("a").as("src"), col("b").as("dst"))
+    // pinned on src, so each round's edges⋈labels join exchanges only
+    // the node-sized labels side — the E-row edge list is shuffled once,
+    // not per round
+    pinned(e0.select(col("a").as("src"), col("b").as("dst"))
       .union(e0.select(col("b").as("src"), col("a").as("dst")))
       .distinct()
-      .repartition(col("src"))
-      .persist()
-    try {
+      .repartition(col("src"))) { e =>
       val seed = e.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("community"))
       // the seed checksum rides the seed's own staging job too
@@ -506,7 +501,7 @@ object Graph {
         // of agg + sort-window; GraphSpec's sync-replica test pins the
         // tie-break either way)
         // shuffle_hash: build the node-sized labels side, stream the
-        // persisted E-row edge list unsorted (see powerIterate's rationale)
+        // pinned E-row edge list unsorted
         val next = e.join(labels.hint("shuffle_hash"),
             e("src") === labels("node"))
           .select(e("dst").as("node"), col("community"))
@@ -535,7 +530,7 @@ object Graph {
             "WITHOUT a stable assignment (synchronous LP can 2-cycle)")
       }
       (labels, round)
-    } finally e.unpersist()
+    }
   }
 
   private case class Staged(deg: DataFrame, oriented: DataFrame)
@@ -611,7 +606,7 @@ object Graph {
     *
     * Shape per iteration: hubs join edges on src → sum per dst (one
     * shuffle pair) for authorities; authorities join edges on dst → sum
-    * per src for hubs. The edge list is persisted with a visible
+    * per src for hubs. The edge list is pinned with a visible
     * partitioning per direction so iterations exchange only the
     * node-sized score frames; each round's normalizing total rides the
     * round's OWN staging action as an `observe` metric — zero extra
@@ -628,69 +623,69 @@ object Graph {
     val e0 = edges.select(col(srcCol).cast("long").as("src"),
       col(dstCol).cast("long").as("dst"))
       .distinct()
-    // two persisted copies, each pre-partitioned on ITS iteration join
-    // key — the E-row list is shuffled once per direction total, not
-    // once per round
-    val eBySrc = e0.repartition(col("src")).persist()
-    val eByDst = e0.repartition(col("dst")).persist()
-    try {
-      val nodes = eBySrc.select(col("src").as("node"))
-        .union(eBySrc.select(col("dst").as("node")))
-        .distinct()
-        .stage()
-      val n = nodes.count()
-      if (n == 0L) {
-        return nodes.select(col("node"), lit(0L).as("hub_micro"),
-          lit(0L).as("auth_micro"))
+    // two pinned copies, each partitioned on ITS iteration join key —
+    // the E-row list is shuffled once per direction total, not once per
+    // round
+    pinned(e0.repartition(col("src"))) { eBySrc =>
+      pinned(e0.repartition(col("dst"))) { eByDst =>
+        val nodes = eBySrc.select(col("src").as("node"))
+          .union(eBySrc.select(col("dst").as("node")))
+          .distinct()
+          .stage()
+        val n = nodes.count()
+        if (n == 0L)
+          nodes.select(col("node"), lit(0L).as("hub_micro"),
+            lit(0L).as("auth_micro"))
+        else {
+          var hubs = nodes.select(col("node"), lit(Scale / n).as("score"))
+          var auths: DataFrame = null
+          var iter = 0
+          while (iter < iterations) {
+            // authorities: sum of in-neighbor hub scores, then L1-normalize.
+            // Sums run in decimal(38,0): a raw in-sum can exceed 2⁶³ on a
+            // hub-heavy graph (indeg·Scale), exactly why DuckDB's SUM(BIGINT)
+            // returns HUGEINT — the decimal keeps the two engines bit-equal
+            // shuffle_hash both directions: build the node-sized score side,
+            // stream the pinned E-row list unsorted
+            val aRaw = eBySrc.join(hubs.hint("shuffle_hash"),
+                eBySrc("src") === hubs("node"))
+              .groupBy(eBySrc("dst").as("node"))
+              .agg(sum(col("score").cast("decimal(38,0)")).as("raw"))
+            val (aStaged, aRow) = graft.Staging.stageObserved(aRaw,
+              coalesce(sum(col("raw").cast("decimal(38,0)")),
+                lit(1).cast("decimal(38,0)")).as("total"))
+            val aTotal = aRow("total").asInstanceOf[java.math.BigDecimal]
+              .toBigInteger.toString
+            auths = aStaged.select(col("node"),
+              expr(s"cast((cast(raw as decimal(38,0)) * ${Scale}L)" +
+                s" div ${aTotal} as long)").as("score"))
+            // hubs: sum of out-neighbor authority scores, then L1-normalize
+            val hRaw = eByDst.join(auths.hint("shuffle_hash"),
+                eByDst("dst") === auths("node"))
+              .groupBy(eByDst("src").as("node"))
+              .agg(sum(col("score").cast("decimal(38,0)")).as("raw"))
+            val (hStaged, hRow) = graft.Staging.stageObserved(hRaw,
+              coalesce(sum(col("raw").cast("decimal(38,0)")),
+                lit(1).cast("decimal(38,0)")).as("total"))
+            val hTotal = hRow("total").asInstanceOf[java.math.BigDecimal]
+              .toBigInteger.toString
+            hubs = hStaged.select(col("node"),
+              expr(s"cast((cast(raw as decimal(38,0)) * ${Scale}L)" +
+                s" div ${hTotal} as long)").as("score"))
+            iter += 1
+          }
+          nodes
+            .join(hubs.select(col("node"), col("score").as("hub_micro")),
+              Seq("node"), "left")
+            .join(auths.select(col("node"), col("score").as("auth_micro")),
+              Seq("node"), "left")
+            .select(col("node"),
+              coalesce(col("hub_micro"), lit(0L)).as("hub_micro"),
+              coalesce(col("auth_micro"), lit(0L)).as("auth_micro"))
+            .stage()
+        }
       }
-      var hubs = nodes.select(col("node"), lit(Scale / n).as("score"))
-      var auths: DataFrame = null
-      var iter = 0
-      while (iter < iterations) {
-        // authorities: sum of in-neighbor hub scores, then L1-normalize.
-        // Sums run in decimal(38,0): a raw in-sum can exceed 2⁶³ on a
-        // hub-heavy graph (indeg·Scale), exactly why DuckDB's SUM(BIGINT)
-        // returns HUGEINT — the decimal keeps the two engines bit-equal
-        // shuffle_hash both directions: build the node-sized score side,
-        // stream the persisted E-row list unsorted (powerIterate rationale)
-        val aRaw = eBySrc.join(hubs.hint("shuffle_hash"),
-            eBySrc("src") === hubs("node"))
-          .groupBy(eBySrc("dst").as("node"))
-          .agg(sum(col("score").cast("decimal(38,0)")).as("raw"))
-        val (aStaged, aRow) = graft.Staging.stageObserved(aRaw,
-          coalesce(sum(col("raw").cast("decimal(38,0)")),
-            lit(1).cast("decimal(38,0)")).as("total"))
-        val aTotal = aRow("total").asInstanceOf[java.math.BigDecimal]
-          .toBigInteger.toString
-        auths = aStaged.select(col("node"),
-          expr(s"cast((cast(raw as decimal(38,0)) * ${Scale}L)" +
-            s" div ${aTotal} as long)").as("score"))
-        // hubs: sum of out-neighbor authority scores, then L1-normalize
-        val hRaw = eByDst.join(auths.hint("shuffle_hash"),
-            eByDst("dst") === auths("node"))
-          .groupBy(eByDst("src").as("node"))
-          .agg(sum(col("score").cast("decimal(38,0)")).as("raw"))
-        val (hStaged, hRow) = graft.Staging.stageObserved(hRaw,
-          coalesce(sum(col("raw").cast("decimal(38,0)")),
-            lit(1).cast("decimal(38,0)")).as("total"))
-        val hTotal = hRow("total").asInstanceOf[java.math.BigDecimal]
-          .toBigInteger.toString
-        hubs = hStaged.select(col("node"),
-          expr(s"cast((cast(raw as decimal(38,0)) * ${Scale}L)" +
-            s" div ${hTotal} as long)").as("score"))
-        iter += 1
-      }
-      val out = nodes
-        .join(hubs.select(col("node"), col("score").as("hub_micro")),
-          Seq("node"), "left")
-        .join(auths.select(col("node"), col("score").as("auth_micro")),
-          Seq("node"), "left")
-        .select(col("node"),
-          coalesce(col("hub_micro"), lit(0L)).as("hub_micro"),
-          coalesce(col("auth_micro"), lit(0L)).as("auth_micro"))
-        .stage()
-      out
-    } finally { eBySrc.unpersist(); eByDst.unpersist() }
+    }
   }
 
   /** Personalized PageRank (random walk with restart): teleport mass
@@ -843,7 +838,7 @@ object Graph {
       survivors = kept
       if (!converged) {
         // shuffle_hash: semi-join builds the node-sized survivor set,
-        // streaming the E-row edge list unsorted (powerIterate rationale)
+        // streaming the E-row edge list unsorted
         e = e.join(kept.select(col("node").as("lo"))
               .hint("shuffle_hash"), Seq("lo"), "left_semi")
           .join(kept.select(col("node").as("hi"))
@@ -945,8 +940,7 @@ object Graph {
   private def relaxMin(op: String, edges: DataFrame, seeds: DataFrame,
                        value: String, start: Long, gate: Option[Column],
                        candidate: Column, maxRounds: Int): DataFrame = {
-    // staged, so the planner may broadcast it whole (see [[graft.Staging]]
-    // on persist vs stage)
+    // staged, not pinned, so the planner may broadcast it whole
     val e = edges.repartition(col("src")).stage()
     var state = seeds.select(col("node").cast("long").as("node"))
       .distinct()
@@ -1044,23 +1038,21 @@ object Graph {
                         dstCol: String, seeds: DataFrame,
                         keys: Seq[String], maxHops: Int): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0: $maxHops")
-    // persisted on src (see [[graft.Staging]] on persist vs stage), so
-    // each round exchanges only the frontier; every exit returns a
-    // staged frame that no longer reads `e`, so it is released on all
-    val e = edges.select(col(srcCol).cast("long").as("src"),
+    // pinned on src, so each round exchanges only the frontier; every
+    // exit returns a staged frame that no longer reads `e`
+    pinned(edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .repartition(col("src")).persist()
-    try {
+      .repartition(col("src"))) { e =>
       val keyed = keys.map(col)
       var settled = seeds.select(col("node").cast("long").as("node"))
         .distinct()
         .select(keys.map(col("node").as(_)) ++
           Seq(col("node"), lit(0).as("hops")): _*)
         .stage()
-      if (settled.isEmpty) return settled
       var frontier = settled
       var hop = 0
-      while (hop < maxHops) {
+      var done = settled.isEmpty
+      while (!done && hop < maxHops) {
         val reached = e.join(frontier
             .select(keyed :+ col("node").as("src"): _*)
             .hint("shuffle_hash"), Seq("src"))
@@ -1071,15 +1063,16 @@ object Graph {
         val (stagedFrontier, row) = graft.Staging.stageObserved(reached,
           count(lit(1)).as("n_new"))
         frontier = stagedFrontier
-        if (row("n_new").asInstanceOf[Long] == 0L) {
+        done = row("n_new").asInstanceOf[Long] == 0L
+        if (done)
           log.info(s"$op: frontier empty after ${hop + 1} rounds " +
             s"(cap $maxHops)")
-          return settled
+        else {
+          settled = settled.unionAll(frontier).stage()
+          hop += 1
         }
-        settled = settled.unionAll(frontier).stage()
-        hop += 1
       }
       settled
-    } finally e.unpersist()
+    }
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Staging.StageOps
+import graft.Staging._
 
 /** Deterministic random walks for graph-embedding training data
   * (DeepWalk / node2vec positive-pair generation, Perozzi et al. 2014 —
@@ -40,20 +40,18 @@ object Walks {
     require(steps >= 1, s"steps must be >= 1, got $steps")
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
-    // rank-indexed adjacency + degrees, built once, probed every step
-    // persisted, deliberately NOT staged (see [[graft.Staging]] on
-    // persist vs stage): the window's own hash exchange on src is
-    // the one exchange the adjacency ever pays, and each step then
-    // shuffles only the walk-sized frontier side. At web-graph scale
-    // the adjacency cannot broadcast, so the pinned partitioning is
-    // what caps per-step cost.
-    val adj = e.withColumn("rk",
+    // rank-indexed adjacency + degrees, built once, probed every step.
+    // Pinned with no repartition of its own, deliberately NOT staged:
+    // the window's own hash exchange on src is the one exchange the
+    // adjacency ever pays, and each step then shuffles only the
+    // walk-sized frontier side. At web-graph scale the adjacency cannot
+    // broadcast, so the pinned partitioning is what caps per-step cost.
+    // `out` reads only the staged per-step frontiers.
+    pinned(e.withColumn("rk",
         row_number().over(
           Window.partitionBy(col("src")).orderBy(col("dst"))) - 1)
       .select(col("src").as("a_src"), col("rk").cast("long").as("a_rk"),
-        col("dst").as("a_dst"))
-      .persist()
-    try {
+        col("dst").as("a_dst"))) { adj =>
       val deg = adj.groupBy(col("a_src").as("d_src"))
         .agg(count(lit(1)).as("deg")).stage()
       val walkIds = broadcast(
@@ -67,7 +65,7 @@ object Walks {
       for (t <- 1 to steps) {
         // md5("start|walk|t") mod degree — one adjacency row per walk.
         // shuffle_hash with the WALK side as build (guide §3.1): the
-        // default SortMergeJoin re-sorts the persisted E-row adjacency
+        // default SortMergeJoin re-sorts the pinned E-row adjacency
         // every step (persist pins rows, not order); hashing the bounded
         // frontier instead streams the adjacency unsorted, so each step
         // pays one walk-sized exchange and zero E-row sorts.
@@ -85,7 +83,7 @@ object Walks {
       }
       out.select(col("start"), col("walk").cast("long").as("walk"),
         col("step").cast("long").as("step"), col("node"))
-    } finally adj.unpersist() // out reads only the staged per-step frontiers
+    }
   }
 
   /** node2vec walks (Grover & Leskovec 2016): second-order biased walks
@@ -132,17 +130,15 @@ object Walks {
     val wMax = Seq(wReturnMilli, wCommonMilli, wFarMilli).max
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .distinct()
-    // persisted with a VISIBLE src partitioning (see randomWalks):
+    // pinned with a VISIBLE src partitioning (see randomWalks):
     // both per-step probes — the proposal join on (a_src, a_rk) and
     // the edge-existence probe on (m_src, m_dst) — are keyed by the
     // src-subset, so neither ever re-exchanges the adjacency
-    val adj = e.withColumn("rk",
+    pinned(e.withColumn("rk",
         row_number().over(
           Window.partitionBy(col("src")).orderBy(col("dst"))) - 1)
       .select(col("src").as("a_src"), col("rk").cast("long").as("a_rk"),
-        col("dst").as("a_dst"))
-      .persist()
-    try {
+        col("dst").as("a_dst"))) { adj =>
       val deg = adj.groupBy(col("a_src").as("d_src"))
         .agg(count(lit(1)).as("deg")).stage()
       val walkIds = broadcast(
@@ -223,7 +219,7 @@ object Walks {
       }
       out.select(col("start"), col("walk").cast("long").as("walk"),
         col("step").cast("long").as("step"), col("node"))
-    } finally adj.unpersist() // out reads only the staged per-step frontiers
+    }
   }
 
   /** Skip-gram positive pairs from the walk corpus: co-occurrences

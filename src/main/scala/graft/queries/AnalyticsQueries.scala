@@ -670,10 +670,8 @@ private[graft] object AnalyticsQueries {
       // file, so without a redistribution that stage is one task. On a
       // real lake the file count parallelizes the scan and this exchange
       // coalesces away under AQE (10 MB here — noise next to a 4× Expand)
-      val in = t(s, d, "lineitem").select(cols.map(col): _*)
-      val par = if (in.rdd.getNumPartitions < s.sparkContext.defaultParallelism)
-        in.repartition(s.sparkContext.defaultParallelism) else in
-      par.agg(exprs.head, exprs.tail: _*)
+      spread(t(s, d, "lineitem").select(cols.map(col): _*))
+        .agg(exprs.head, exprs.tail: _*)
         .select(expr("stack(3, " + cols.map(c =>
           s"'$c', n_rows, nn_$c, nd_$c, min_$c, max_$c, avg_$c")
           .mkString(", ") +
@@ -688,12 +686,10 @@ private[graft] object AnalyticsQueries {
     // the approx half alone.
     "q_profile_approx" -> ((s, d) => {
       val cols = Seq("l_quantity", "l_extendedprice", "l_discount")
-      val in = t(s, d, "lineitem").select(cols.map(col): _*)
       // checkpoint the spread input ONCE: the profile agg and the exact
       // audit agg both read it, and without the pin each branch would
       // re-run the scan + repartition
-      val par = (if (in.rdd.getNumPartitions < s.sparkContext.defaultParallelism)
-        in.repartition(s.sparkContext.defaultParallelism) else in)
+      val par = spread(t(s, d, "lineitem").select(cols.map(col): _*))
         .stage()
       // UNPIVOT first, sketch per GROUP: k approx_count_distinct buffers
       // side by side in ONE aggregate lay k·numWords longs in the agg

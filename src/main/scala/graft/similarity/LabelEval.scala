@@ -101,7 +101,7 @@ object LabelEval {
     // spread the query side: per-query work is |eval set| dots + a
     // sort, and a single-row-group source would serialize it all on
     // one core
-    val a = Similarity.spread(
+    val a = spread(
       vectors.select(col(idCol).as("qid"),
         col(labelCol).as("qlabel"),
         col(embCol).cast("array<float>").as("qe"))

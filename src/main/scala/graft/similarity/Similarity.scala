@@ -34,16 +34,6 @@ object Similarity {
   def dot(a: Column, b: Column): Column =
     call_function("graft_dot", a, b)
 
-  /** Spread an under-partitioned frame across the cluster's cores —
-    * the guard every compute-heavy scan-local pass needs in front of a
-    * small/staged source that arrives as ONE scan partition (single
-    * parquet row group): without it the whole pass serializes on one
-    * core. A no-op at lake scale, where partitions ≥ cores. */
-  private[graft] def spread(df: DataFrame): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions < par) df.repartition(par) else df
-  }
-
   /** Higher-order-function formulation of [[dot]]: works on a vanilla
     * session with no extensions, at interpreted-lambda speed. */
   def dotHof(a: Column, b: Column): Column =

@@ -754,11 +754,10 @@ object Streams {
         val ok = coalesce(pred, lit(false))
         // pinned: the published and quarantine writes would otherwise
         // each re-read the batch's source files — 2× input I/O per batch
-        val pinned = batch.persist()
-        try {
-          pinned.filter(ok).write.mode("append").parquet(goodPath)
-          pinned.filter(!ok).write.mode("append").parquet(badPath)
-        } finally pinned.unpersist(blocking = false)
+        pinned(batch) { rows =>
+          rows.filter(ok).write.mode("append").parquet(goodPath)
+          rows.filter(!ok).write.mode("append").parquet(badPath)
+        }
     }
     def side(path: String, tag: String): DataFrame = {
       val fs = new Path(path).getFileSystem(
@@ -874,8 +873,7 @@ object Streams {
     val stream = fileStream(sess, dir, glob, docs.schema)
       .filter(col("doc_id") % 17 === 0)
     catchUpEachBatch(stream, checkpoint) { (batch, _) =>
-      val arrivals = batch.persist()
-      try {
+      pinned(batch) { arrivals =>
         val dups = Dedup.incrementalNearDupsIndexed(arrivals,
           corpusSets, corpusIndex, "doc_id", "text",
           numPerms, numBands, threshold)
@@ -886,7 +884,7 @@ object Streams {
           .select(col("doc_id"), col("n_dups").isNull.as("keep"),
             coalesce(col("n_dups"), lit(0L)).as("n_dups"))
           .write.mode("append").parquet(outPath)
-      } finally arrivals.unpersist(blocking = false)
+      }
     }
     Parquet.read(sess, outPath)
   }
@@ -896,7 +894,7 @@ object Streams {
   // ingestTrioStream: constructing a kernel seeds its store
   // ([[seedStore]]: restored from a prebuilt snapshot or built from the
   // corpus slice — the same deterministic computation over the same
-  // slice either way), `step` folds one persisted micro-batch in, and
+  // slice either way), `step` folds one pinned micro-batch in, and
   // `view` reads the final state.
 
   private val labelsSchema = StructType(Seq(
@@ -1140,8 +1138,7 @@ object Streams {
     val stream = fileStream(sess, dir, glob, docs.schema)
       .filter(col("doc_id") % 17 === 0)
     catchUpEachBatch(stream, checkpoint) { (batch, batchId) =>
-      val arrivals = batch.persist()
-      try cc.step(arrivals, batchId).foreach { g =>
+      pinned(batch)(arrivals => cc.step(arrivals, batchId).foreach { g =>
         // buffer the batch's store-health row; the flush rides the
         // compaction cadence so the metrics table never costs a write
         // job per batch
@@ -1151,7 +1148,7 @@ object Streams {
           metricBuf.size >= maxStoreFiles
         }
         if (flushDue) flushMetrics()
-      } finally arrivals.unpersist(blocking = false)
+      })
     }
     flushMetrics() // final flush: persist whatever the cadence buffered
     cc.view.select(col("doc_id"), col("comp"),
@@ -1216,9 +1213,7 @@ object Streams {
     val stream = fileStream(sess, dir, glob, docs.schema)
       .filter(col("doc_id") % 17 === 0)
     catchUpEachBatch(stream, checkpoint) { (batch, batchId) =>
-      val arrivals = batch.persist()
-      try sa.step(arrivals, batchId)
-      finally arrivals.unpersist(blocking = false)
+      pinned(batch)(sa.step(_, batchId))
     }
     sa.view
   }
@@ -1348,13 +1343,12 @@ object Streams {
     val stream = fileStream(sess, dir, glob, docs.schema)
       .filter(col("doc_id") % 17 === 0)
     catchUpEachBatch(stream, checkpoint) { (batch, batchId) =>
-      val arrivals = batch.persist()
-      try {
+      pinned(batch) { arrivals =>
         ann.step(arrivals.select(col("doc_id").as("vec_id"))
           .join(vectors, "vec_id"), batchId)
         cc.step(arrivals, batchId)
         sa.step(arrivals, batchId)
-      } finally arrivals.unpersist(blocking = false)
+      }
     }
     // ---- the consistent cross-index view ----
     val labels = cc.view

@@ -86,10 +86,10 @@ object SuffixArray {
         posexplode(col("__t")).as(Seq("p0", "tok")))
       .select(col("doc_id"), (col("p0") + 1).cast("long").as("pos"),
         slice(col("__t"), col("p0") + 1, lit(initSpan)).as("g"))
-    // NO repartition(doc_id) before the stage: the next round's per-doc
-    // window re-exchanges regardless (see [[graft.Staging]] on persist
-    // vs stage) — the repartition was one dead corpus-sized exchange per
-    // round (caught in the r13 plan dumps)
+    // NO repartition(doc_id) before the stage: staging drops the
+    // partitioning and the next round's per-doc window re-exchanges
+    // regardless — the repartition was one dead corpus-sized exchange
+    // per round (caught in the r13 plan dumps)
     val (first, m0) = stageObserved(
       windows.distributedDenseRank(grams, Seq(col("g")), rankName = "r")
         .select(col("doc_id"), col("pos"), col("r")),

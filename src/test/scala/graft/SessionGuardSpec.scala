@@ -5,9 +5,10 @@ import java.io.File
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Session configuration, per-run stream sessions, temp-dir lifetime,
-  * state partitioning, the streaming run, read and commit protocols and
-  * the parquet schema read are each decided in one place; this keeps
-  * copies from drifting back into `src/main`. */
+  * state partitioning, the streaming run, read and commit protocols, the
+  * parquet schema read and the lifetime of cached frames are each
+  * decided in one place; this keeps copies from drifting back into
+  * `src/main`. */
 class SessionGuardSpec extends AnyFunSuite {
   private val root = new File("src/main/scala")
 
@@ -103,6 +104,17 @@ class SessionGuardSpec extends AnyFunSuite {
       "\\.read(?:\\s*\\.(?!schema\\b)\\w+\\((?:[^()]|\\([^()]*\\))*\\))*" +
         "\\s*\\.(?:parquet\\(|format\\(\\s*\"parquet\"\\s*\\))" ->
         Set("evolvedRead")), "graft/sources/StagedSources.scala")
+    assert(found.isEmpty, found.mkString("\n", "\n", ""))
+  }
+
+  test("frames are cached only through Staging.pinned and released in " +
+    "bulk only by Staging.releaseAll") {
+    val found = defHits(Seq(
+      "\\.persist\\(" -> Set("pinned"),
+      "\\.cache\\(\\)" -> Set.empty[String],
+      "\\.unpersist\\(" -> Set("pinned", "releaseAll"),
+      "clearCache" -> Set("releaseAll"),
+      "getPersistentRDDs" -> Set("releaseAll")), "graft/Staging.scala")
     assert(found.isEmpty, found.mkString("\n", "\n", ""))
   }
 }

@@ -82,4 +82,43 @@ class StagingSpec extends SparkSpec {
     assert(nL === 1000L && nR === 1000L)
     assert(ckL === ckR, "checksum metric must be mode-independent")
   }
+
+  test("pinned returns the body's value and caches the frame only " +
+    "inside the body") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val df = spark.range(100).toDF("x")
+    val got = Staging.pinned(df) { p =>
+      assert(!cache.isEmpty, "the frame is cached inside the body")
+      p.count()
+    }
+    assert(got === 100L)
+    assert(cache.isEmpty, "pinned left its frame cached")
+  }
+
+  test("pinned releases its frame when the body throws, and the error " +
+    "propagates") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val ex = intercept[IllegalStateException] {
+      Staging.pinned(spark.range(10).toDF("x")) { p =>
+        p.count()
+        throw new IllegalStateException("boom")
+      }
+    }
+    assert(ex.getMessage === "boom")
+    assert(cache.isEmpty, "pinned leaked its frame when the body threw")
+  }
+
+  test("nested pins release both frames") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val n = Staging.pinned(spark.range(10).toDF("a")) { a =>
+      Staging.pinned(spark.range(20).toDF("b")) { b =>
+        a.crossJoin(b).count()
+      }
+    }
+    assert(n === 200L)
+    assert(cache.isEmpty, "a nested pin leaked a frame")
+  }
 }

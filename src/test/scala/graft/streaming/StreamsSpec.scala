@@ -985,6 +985,24 @@ class StreamsSpec extends SparkSpec {
     assert(enriched.collect().toSet === enrichBatch.collect().toSet)
   }
 
+  test("routeValidated fails loudly and releases its pinned batch when " +
+    "the predicate raises") {
+    val cache = spark.sharedState.cacheManager
+    spark.catalog.clearCache()
+    val ex = intercept[Exception] {
+      Streams.routeValidated(spark, sf0001,
+        scratch(spark, "graft_ckpt_rv_raise"),
+        scratch(spark, "graft_rv_raise_good"),
+        scratch(spark, "graft_rv_raise_bad"),
+        when(col("event_id") === 500L, raise_error(lit("boom")))
+          .otherwise(lit(true)))
+    }
+    val msgs = Iterator.iterate[Throwable](ex)(_.getCause)
+      .takeWhile(_ != null).map(e => String.valueOf(e.getMessage))
+    assert(msgs.exists(_.contains("boom")), ex)
+    assert(cache.isEmpty, "routeValidated leaked its pinned micro-batch")
+  }
+
   test("a repeat stream run reuses the first run's generated code") {
     // Spark caches generated classes per (context class loader, source);
     // a caller session with artifact isolation on runs its tasks under
